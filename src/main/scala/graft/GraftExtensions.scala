@@ -13,12 +13,13 @@ import graft.functions.expressions.{ArrayDot, ArrayJaccardFs, ArrayL2Sq, BloomMi
   WindowFunnelAgg}
 import graft.operators.Sketches
 
-/** Session extensions: registers graft's native Catalyst expressions
-  * as SQL functions. Activate with
+/** Session extensions: the SQL function registry for graft's native
+  * Catalyst expressions. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` — then
   * `SELECT graft_simhash64(split(text, ' ')) FROM docs` works in
-  * plain SQL, and operators pick the codegen'd implementation over
-  * the Column-expression fallback automatically.
+  * plain SQL. Operators and the `functions` objects do not need it:
+  * they build the same expressions directly through `ColumnBridge`,
+  * so their plans are identical with or without the registry.
   *
   * The sketch-tier AGGREGATES register here too (the analyzer wraps a
   * builder-returned `AggregateFunction` into an `AggregateExpression`

@@ -148,7 +148,7 @@ object ScaleRehearsal {
       timed("minhash_lsh")(Dedup.minhashLsh(docs).count()),
       timed("ngram_lsh_pairs")(Dedup.ngramLshPairs(docs).count()),
       timed("apply_lsh")(Dedup.applyPairs(docs, Dedup.ngramLshPairs(docs)).count()),
-      timed("cc_converged")(Dedup.convergedCcLabels(docs, Dedup.ngramLshPairs(docs))
+      timed("cc_converged")(Dedup.ccLabels(docs, Dedup.ngramLshPairs(docs), iters = 50)
         .filter(col("doc_id") =!= col("rep_id")).count()),
       timed("cc_star")(Dedup.starCcLabels(docs, Dedup.ngramLshPairs(docs))
         .filter(col("doc_id") =!= col("rep_id")).count()),
@@ -156,7 +156,7 @@ object ScaleRehearsal {
       // BEFORE pair generation, so the CC graph is cluster-only —
       // volume must still equal expected_cc_merged exactly
       timed("cc_exact_first")(Dedup.ccLabelsExactFirst(docs, Dedup.ngramLshPairs(_),
-          (d, p) => Dedup.convergedCcLabels(d, p))
+          (d, p) => Dedup.ccLabels(d, p, iters = 50))
         .filter(col("doc_id") =!= col("rep_id")).count()),
       timed("pipeline_curate")(Pipeline.curate(docs).count())
     )

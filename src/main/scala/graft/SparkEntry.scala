@@ -536,7 +536,7 @@ object SparkEntry {
     }),
     "dedup_apply_cc_lsh" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      Dedup.convergedCcLabels(docs, Dedup.ngramLshPairs(docs))
+      Dedup.ccLabels(docs, Dedup.ngramLshPairs(docs), iters = 50)
     }),
     // the O(log d) star-contraction CC over the same LSH pair graph —
     // label parity with dedup_apply_cc_lsh is spec-pinned (DedupSpec),

@@ -1,13 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+
+import graft.functions.expressions.{Md5MinHashSig, MinHashSig, SimHash64}
 
 /** Hash-sketch primitives for dedup at scale: MinHash signatures,
   * SimHash fingerprints, rolling polynomial fingerprints.
   *
-  * All pure `Column` expressions built on Spark's codegen'd
-  * `xxhash64`. Arithmetic is kept inside a Mersenne-ish prime modulus
+  * The signature and fingerprint kernels are native Catalyst
+  * expressions ([[graft.functions.expressions]]); the rest are
+  * `Column` expressions over Spark's codegen'd `xxhash64`.
+  * Arithmetic is kept inside a Mersenne-ish prime modulus
   * so it never overflows Long (safe under ANSI mode) and needs no
   * bigint tricks in the oracle.
   */
@@ -66,80 +72,30 @@ object HashFunctions {
 
   /** MinHash signature: `perms` min-hashes over the shingle array via
     * universal hashing — each shingle is xxhash64'd ONCE into a base
-    * value, and the permutations are cheap affine maps of that base.
+    * value, and the permutations are cheap affine maps of that base
+    * ([[minhashParams]]), folded in one native pass over the tokens.
     * (The naive formulation — xxhash64(concat(seed_i, shingle)) per
     * permutation — allocates a concatenated string and re-hashes every
     * shingle `perms` times: 32× the hash work and 32 allocations per
-    * token, inside a HOF where Catalyst does no subexpression reuse.)
-    * The singleton-array transform let-binds the base-hash array so
-    * the hashing pass runs once, not once per permutation.
+    * token.) NULL array → SQL NULL; an empty array → all-null
+    * signature.
     *
     * Narrow map at any scale — the only shuffle in MinHash-LSH dedup
     * is the band-key groupBy.
     */
   def minhashSignature(shingles: Column, perms: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists("graft_minhash_sig"))
-      .map(_ => call_function("graft_minhash_sig", shingles, lit(perms)))
-      .getOrElse(minhashSignatureColumns(shingles, perms))
-
-  /** The pure-Column twin of the native graft_minhash_sig expression
-    * (bit-identical — parity spec in ExpressionsSpec); the fallback
-    * when the session lacks GraftExtensions.
-    */
-  private[graft] def minhashSignatureColumns(shingles: Column, perms: Int): Column = {
-    val params = minhashParams(perms)
-    val bases = transform(shingles, s => pmod(xxhash64(s), lit(Prime)))
-    // NULL-input parity with the native expression (graft_minhash_sig
-    // is null-intolerant: null array → SQL NULL; the bare HOF form
-    // would yield an array of `perms` nulls) WITHOUT a conditional
-    // branch: HOFs are null-intolerant too, so `bases` is NULL for a
-    // NULL input — filtering the singleton array drops it and `get`
-    // of the then-empty array is SQL NULL. `shingles` is referenced
-    // exactly once (inside `bases`), so an expensive shingle
-    // expression is never evaluated twice — when/otherwise branches
-    // are excluded from subexpression elimination, which is why the
-    // previous isNull-gated form double-computed it.
-    get(transform(filter(array(bases), bs => bs.isNotNull), bs =>
-      array(params.map { case (a, b) =>
-        array_min(transform(bs, h => pmod(lit(a) * h + lit(b), lit(Prime))))
-      }: _*)), lit(0))
-  }
+    ColumnBridge.column(MinHashSig(ColumnBridge.expression(shingles), Literal(perms)))
 
   /** The cross-engine md5-minhash signature (the Carter-Wegman family
     * over one md5 digest per token, [[md5CwParams]]) as ONE array
-    * column: native one-pass kernel when the session has
-    * GraftExtensions, the interpreted HOF twin otherwise. Both
-    * compute sig[p] = min over tokens of (a_p·h1 + b_p·h2) mod Prime
-    * bit-identically (parity spec in ExpressionsSpec) — this is the
+    * column, computed by the native one-pass kernel:
+    * sig[p] = min over tokens of (a_p·h1 + b_p·h2) mod Prime — the
     * signature [[graft.operators.Dedup.minhashMd5Pairs]] and its
-    * DuckDB oracle twin band on.
+    * DuckDB oracle twin band on. NULL array → SQL NULL; a null
+    * ELEMENT drops out of every minimum.
     */
   def md5MinhashSig(shingles: Column, perms: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists("graft_md5_minhash_sig"))
-      .map(_ => call_function("graft_md5_minhash_sig", shingles, lit(perms)))
-      .getOrElse(md5MinhashSigColumns(shingles, perms))
-
-  /** The pure-Column twin of graft_md5_minhash_sig: one interpreted
-    * pass materializing the 56-bit digests (md5 → hex → substring →
-    * conv per element, let-bound once via the singleton-array trick,
-    * same as [[minhashSignatureColumns]]), then `perms` array_min
-    * passes of the affine maps. NULL-array input → SQL NULL on both
-    * paths (HOFs are null-intolerant); a null ELEMENT digests to null
-    * and drops out of every array_min, exactly like the native
-    * kernel skips it.
-    */
-  private[graft] def md5MinhashSigColumns(shingles: Column, perms: Int): Column = {
-    val params = md5CwParams(perms)
-    val half = 1L << 28
-    val th = transform(shingles, t => conv(substring(md5(t), 1, 14), 16, 10).cast("long"))
-    get(transform(filter(array(th), a => a.isNotNull), a =>
-      array(params.map { case (pa, pb) =>
-        array_min(transform(a, h =>
-          (lit(pa) * shiftright(h, 28) + lit(pb) * (h % lit(half))) % lit(Prime)))
-      }: _*)), lit(0))
-  }
+    ColumnBridge.column(Md5MinHashSig(ColumnBridge.expression(shingles), Literal(perms)))
 
   /** LSH band keys: hash each band (contiguous slice of the
     * signature) to one bucket key. Join key = (band_index, band_hash)
@@ -163,28 +119,11 @@ object HashFunctions {
     1.0 - math.pow(1.0 - math.pow(j, rowsPerBand), bands)
 
   /** 64-bit SimHash of a token array: per bit, sum +1/-1 votes of
-    * each token's hash bit, sign of the sum becomes the bit.
-    * Single aggregate fold over tokens carrying a 64-counter array.
+    * each token's xxhash64 bit, sign of the sum becomes the bit
+    * (ties clear it). One native pass over the tokens.
     */
-  def simhash64(toks: Column): Column = {
-    val bitVotes: Column => Column = t => {
-      val h = xxhash64(t)
-      array((0 until 64).map(i =>
-        when(shiftright(h, i).bitwiseAND(lit(1L)) === lit(1L), lit(1)).otherwise(lit(-1))): _*)
-    }
-    val votes = aggregate(
-      toks,
-      array_repeat(lit(0), 64),
-      (acc, t) => zip_with(acc, bitVotes(t), (a, b) => a + b)
-    )
-    // fold bits into one BIGINT: bit i set iff votes(i) > 0
-    val powers = array((0 until 64).map(i => lit(1L << i)): _*)
-    aggregate(
-      zip_with(votes, powers, (v, p) => when(v > 0, p).otherwise(lit(0L))),
-      lit(0L),
-      (acc, b) => acc.bitwiseOR(b)
-    )
-  }
+  def simhash64(toks: Column): Column =
+    ColumnBridge.column(SimHash64(ColumnBridge.expression(toks)))
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -1,10 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions.{filter => array_filter, _}
+import org.apache.spark.sql.graftshim.ColumnBridge
 
-/** Text analysis as pure `Column` expressions (no UDFs): tokenize,
-  * n-grams, quality ratios, stopword-heuristic language ID.
+import graft.functions.expressions.{DistinctNgrams, NgramStats, ScriptCounts}
+
+/** Text analysis as `Column` expressions (no UDFs): tokenize,
+  * n-grams, quality ratios, stopword-heuristic language ID. The
+  * per-row n-gram and script kernels are native Catalyst expressions.
   *
   * All arithmetic is int-derived (counts and ratios of counts), so
   * results are bit-deterministic across engines — the DuckDB oracle
@@ -241,38 +246,23 @@ object TextFunctions {
       .otherwise(array().cast("array<string>"))
 
   /** The DISTINCT gram stream (`array_distinct(wordNgrams(toks, n))`)
-    * as one expression: the native one-pass kernel when the session
-    * has GraftExtensions (each gram materialized once into an
+    * as one native pass: each gram materialized once into an
     * insertion-ordered set — first-occurrence order and binary
-    * equality, exactly array_distinct's), the four-layer HOF chain
-    * otherwise. Identical gram arrays on non-null input (parity spec
-    * in ExpressionsSpec); on a NULL token array the kernel is SQL
-    * NULL where the HOF chain yields an empty array — every consumer
-    * either filters `size(grams) > 0` or explodes, both of which
-    * drop the row on BOTH paths.
+    * equality, exactly array_distinct's (parity spec in
+    * ExpressionsSpec). On a NULL token array the result is SQL NULL
+    * (the builtin chain would yield an empty array) — every consumer
+    * either filters `size(grams) > 0` or explodes, both of which drop
+    * the row either way.
     */
   def distinctWordNgrams(toks: Column, n: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists("graft_distinct_ngrams"))
-      .map(_ => call_function("graft_distinct_ngrams", toks, lit(n)))
-      .getOrElse(array_distinct(wordNgrams(toks, n)))
+    ColumnBridge.column(DistinctNgrams(ColumnBridge.expression(toks), Literal(n)))
 
-  /** Total and distinct word-n-gram counts as struct(n_grams, n_uniq):
-    * the native one-pass kernel when the session has GraftExtensions
-    * (one token-array walk, grams materialized once into a hash set),
-    * the wordNgrams Column pair otherwise. NULL input → SQL NULL in
-    * both forms (parity spec in ExpressionsSpec).
+  /** Total and distinct word-n-gram counts as struct(n_grams, n_uniq)
+    * in one native token-array walk (grams materialized once into a
+    * hash set). NULL input → SQL NULL.
     */
   def ngramStats(toks: Column, n: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists("graft_ngram_stats"))
-      .map(_ => call_function("graft_ngram_stats", toks, lit(n)))
-      .getOrElse {
-        val g = wordNgrams(toks, n)
-        when(toks.isNull, lit(null).cast("struct<n_grams:bigint,n_uniq:bigint>"))
-          .otherwise(struct(size(g).cast("long").as("n_grams"),
-            size(array_distinct(g)).cast("long").as("n_uniq")))
-      }
+    ColumnBridge.column(NgramStats(ColumnBridge.expression(toks), Literal(n)))
 
   /** Count of regex-token matches (BPE-ish alnum runs). */
   def regexTokenCount(text: Column): Column = regexp_count(text, lit("[a-z0-9]+"))
@@ -312,19 +302,18 @@ object TextFunctions {
     "greek" -> "el", "han" -> "zh", "hangul" -> "ko",
     "hebrew" -> "he", "tamil" -> "ta", "thai" -> "th")
 
-  private def javaScriptClass(script: String) =
-    s"\\p{Is${script.capitalize}}"
-
   /** Per-script character counts — the multilingual ROUTING signal
     * ([[canonicalText]] strips everything outside [a-z0-9], so a
     * pipeline must know how much non-Latin signal a document carries
     * BEFORE opting into canonical keying; [[canonicalKey]]'s raw
     * fallback is the safety net, this is the steering wheel).
-    * Unicode-script properties, not code-point ranges: Java regex
-    * spells them `\p{IsHan}` where RE2 (DuckDB) spells `\p{Han}` —
-    * different SYNTAX, same script classification, so the oracle
-    * matches result-for-result (CJK punctuation is script Common and
-    * counts in neither; digits are Common too, counted separately).
+    * Unicode-script properties, not code-point ranges: one native
+    * walk over the code points classifies each via
+    * `Character.UnicodeScript` (the tables Java regex's `\p{IsHan}`
+    * consults) where RE2 (DuckDB) spells `\p{Han}` — same script
+    * classification, so the oracle matches result-for-result (CJK
+    * punctuation is script Common and counts in neither; digits are
+    * Common too, counted separately).
     *
     * Fields: `n_latin`, one `n_<script>` per [[NamedScripts]] entry
     * (r19 added greek/hebrew/hiragana/katakana/thai, r20 adds
@@ -336,28 +325,7 @@ object TextFunctions {
     * class-subtraction syntax to express it directly), and `n_digit`.
     */
   def scriptCounts(text: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists("graft_script_counts"))
-      .map(_ => call_function("graft_script_counts", text))
-      .getOrElse(scriptCountsColumns(text))
-
-  /** The pure-Column (17 regexp_count passes) twin of the native
-    * graft_script_counts expression — bit-identical counter values
-    * (parity spec in ExpressionsSpec, incl. a supplementary-plane Han
-    * plant); the fallback when the session lacks GraftExtensions. The
-    * native kernel walks the string's code points ONCE instead of 17
-    * regex passes (r21 — the r20 verdict's top bench cost item).
-    */
-  private[graft] def scriptCountsColumns(text: Column): Column = {
-    val named = NamedScripts.map(s =>
-      s -> regexp_count(text, lit(javaScriptClass(s))).cast("long"))
-    val nonLatinTotal = regexp_count(text, lit(NonLatinClassJava)).cast("long")
-    struct(
-      (regexp_count(text, lit("\\p{IsLatin}")).cast("long").as("n_latin") +:
-        named.map { case (s, c) => c.as(s"n_$s") }) ++ Seq(
-        (nonLatinTotal - named.map(_._2).reduce(_ + _)).as("n_other"),
-        regexp_count(text, lit("[0-9]")).cast("long").as("n_digit")): _*)
-  }
+    ColumnBridge.column(ScriptCounts(ColumnBridge.expression(text)))
 
   /** Count of punctuation/non-alnum characters (excluding spaces). */
   def punctCount(text: Column): Column = regexp_count(text, lit("[^a-z0-9 ]"))

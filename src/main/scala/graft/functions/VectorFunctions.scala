@@ -2,11 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+
+import graft.functions.expressions.{ArrayDot, ArrayL2Sq}
 
 /** Vector math as Catalyst `Column` expressions over `array<double>`.
   *
-  * Everything here compiles to higher-order-function expressions
-  * (`zip_with` / `aggregate` / `transform`) that stay inside
+  * `dot` and `l2sq` are native codegen'd kernels (one tight loop per
+  * row, [[graft.functions.expressions.ArrayDot]]/`ArrayL2Sq`); the rest
+  * compose them with builtins. Everything stays inside
   * WholeStageCodegen — no UDFs, no serialization boundary — so a
   * 100 TB scan of embeddings evaluates these at full codegen speed.
   *
@@ -25,27 +29,13 @@ object VectorFunctions {
     */
   def toDoubleArray(v: Column): Column = transform(v, _.cast("double"))
 
-  /** Pick the native codegen'd kernel when the active session has
-    * GraftExtensions; the HOF twin otherwise. Same sequential fold,
-    * bit-identical results (oracle-gated) — but the native kernel is
-    * one tight loop where the HOF is an interpreted lambda per
-    * element, and these sit in every embedding operator's hot path.
-    */
-  private def nativeOr(name: String, a: Column, b: Column)(fallback: => Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists(name))
-      .map(_ => call_function(name, a, b))
-      .getOrElse(fallback)
-
   /** Sequential-fold dot product: sum_i a(i)*b(i). */
-  def dot(a: Column, b: Column): Column = nativeOr("graft_dot", a, b) {
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-  }
+  def dot(a: Column, b: Column): Column =
+    ColumnBridge.column(ArrayDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Squared Euclidean distance: sum_i (a(i)-b(i))^2. */
-  def l2sq(a: Column, b: Column): Column = nativeOr("graft_l2sq", a, b) {
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-  }
+  def l2sq(a: Column, b: Column): Column =
+    ColumnBridge.column(ArrayL2Sq(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** L2 norm. */
   def l2norm(a: Column): Column = sqrt(dot(a, a))

@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * listed in ascending-cid order, so the lowest cid still wins ties
   * (parity spec in ExpressionsSpec).
   *
-  * Constructed via the ColumnBridge (centroids are driver-side
-  * training state, not Columns), so they work without
-  * GraftExtensions. NULL array → SQL NULL, same as the
+  * Constructed via the ColumnBridge like every graft kernel; the
+  * centroids are driver-side training state, not Columns, so these
+  * have no SQL registry entry. NULL array → SQL NULL, same as the
   * null-intolerant HOFs; null elements / length mismatches → SQL
   * NULL (the twins degrade to null folds there; no operator feeds
   * either).

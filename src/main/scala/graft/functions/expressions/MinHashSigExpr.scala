@@ -16,7 +16,7 @@ import graft.functions.HashFunctions
   * ([[HashFunctions.minhashParams]]) while tracking minima in a
   * primitive long array.
   *
-  * The Column twin ([[HashFunctions.minhashSignatureColumns]]) builds
+  * The Column twin (the parity reference in the test suite) builds
   * the same signature from interpreted HOFs (transform + perms ×
   * array_min passes). Same hash family, same fold — bit-identical
   * output (parity spec in ExpressionsSpec). Measured runtime is on

@@ -25,8 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * compared as their joined strings (tokens from split(text,' ') can't
   * contain the separator, so string equality ⟺ window equality);
   * fewer than n tokens → (0, 0), matching wordNgrams' empty array;
-  * null input → SQL NULL (null-intolerant, and the Column twin wraps
-  * itself to match).
+  * null input → SQL NULL (null-intolerant).
   */
 case class NgramStats(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -32,9 +32,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * null-laced distance arrays there; no operator feeds either —
   * vectors come out of Pq.normalized null-free and dim-checked).
   *
-  * Constructed via the ColumnBridge (not the SQL registry): the
+  * Constructed via the ColumnBridge like every graft kernel; the
   * codebook is a trained driver-side artifact, not a Column, so these
-  * work with or without GraftExtensions.
+  * have no SQL registry entry.
   */
 abstract class PqBookExpr extends UnaryExpression {
   def dsub: Int

@@ -13,7 +13,8 @@ import graft.functions.TextFunctions
   * [[graft.functions.TextFunctions.scriptCounts]] counter struct from
   * ONE walk over the string's code points.
   *
-  * The Column twin runs 17 `regexp_count` passes per row (n_latin +
+  * The regex formulation (the parity reference in the test suite)
+  * runs 17 `regexp_count` passes per row (n_latin +
   * 14 named scripts + the inverted routing class + n_digit), each of
   * which re-walks the entire string through the regex engine — at
   * 100 TB that is ~17× the string-scan work one code-point loop does

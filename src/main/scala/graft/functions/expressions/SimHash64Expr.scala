@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, NullType, Stri
 
 /** Native Catalyst expression: 64-bit SimHash of a token array.
   *
-  * The pure-`Column` formulation (HashFunctions.simhash64) expands to
+  * The pure-`Column` formulation (the parity reference in the test
+  * suite) expands to
   * a ~4000-node expression tree (64 bit-tests × per-token fold) that
   * evaluates interpreted lambda closures per element. This expression
   * computes the same value in one tight loop, participates in

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * every embedding operator (cosine verify in LSH dedup, brute/LSH/IVF
   * top-k ranking, k-means assignment).
   *
-  * The Column twins ([[graft.functions.VectorFunctions]]) are
-  * zip_with/aggregate higher-order functions, which Catalyst
+  * The Column twins (the parity reference ExpressionsSpec spells
+  * inline) are zip_with/aggregate higher-order functions, which Catalyst
   * evaluates INTERPRETED (HOFs don't join whole-stage codegen) with a
   * lambda-variable box per element. These expressions run the same
   * sequential fold as one tight primitive loop per pair — and the

@@ -2,10 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 import graft.functions.HashFunctions._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
+import graft.functions.expressions.{ArrayJaccardFs, ArrayLDot, LatticeArgmin}
 
 /** Document deduplication for LLM-training-data pipelines: exact,
   * MinHash+LSH, SimHash, blocked n-gram Jaccard, blocked embedding
@@ -20,15 +22,11 @@ import graft.functions.VectorFunctions._
   */
 object Dedup {
 
-  /** Fixed-point Jaccard column: native one-pass expression when the
-    * session has GraftExtensions, Column-pair fallback otherwise.
-    * Both compute floor(10000.0 * (|A∩B| / |A∪B|)) bit-identically.
+  /** Fixed-point Jaccard column, floor(10000.0 * (|A∩B| / |A∪B|)), in
+    * one native pass (sorted inputs take the merge path).
     */
-  private def jaccardFs(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_jaccard_fs"))
-      call_function("graft_jaccard_fs", a, b)
-    else
-      floor(lit(10000.0) * (size(array_intersect(a, b)).cast("double") / size(array_union(a, b))))
+  private def jaccardFs(a: Column, b: Column): Column =
+    ColumnBridge.column(ArrayJaccardFs(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Candidate pairs from a slim banded frame (doc_id, band, bucket):
     * the self-equi-join on the bucket key — the ONLY pair generator
@@ -289,7 +287,7 @@ object Dedup {
     // pair-verify map stage executes twice
     val verified = candidates.join(ta, "id_a").join(tb, "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardFs(docs0.sparkSession, col("toks_a"), col("toks_b")).as("jac_fs"))
+        jaccardFs(col("toks_a"), col("toks_b")).as("jac_fs"))
       .filter(col("jac_fs") >= minJaccardFs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // structural release: both operator-owned persists drop after the
@@ -351,7 +349,7 @@ object Dedup {
     * sample-then-sort pass. Like [[ngramLshPairs]], the verified frame
     * is NOT persisted here: a consumer that reads the pairs more than
     * once (the CC edges union) must materialize them once itself —
-    * [[ccLabels]]/[[convergedCcLabels]] do (and an operator-side
+    * [[ccLabels]] does (and an operator-side
     * eager pin is NOT an option: the scoped-release listener bus is
     * asynchronous, so a pin action completed just before registration
     * is delivered to the fresh listener and self-releases the caches
@@ -409,7 +407,7 @@ object Dedup {
     val tb = shingled.select(col("doc_id").as("id_b"), col("toks").as("toks_b"))
     val verified = candidates.join(ta, "id_a").join(tb, "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardFs(docs0.sparkSession, col("toks_a"), col("toks_b")).as("jac_fs"))
+        jaccardFs(col("toks_a"), col("toks_b")).as("jac_fs"))
       .filter(col("jac_fs") >= minJaccardFs)
     (verified, shingled)
   }
@@ -417,20 +415,12 @@ object Dedup {
   /** SimHash fingerprints: one 64-bit sketch per doc. [[simhashPairs]]
     * splits them into chunk keys for the hamming-bucketed candidate
     * join (pigeonhole: hamming < chunks ⇒ some chunk matches exactly).
-    *
-    * Uses the native codegen'd Catalyst expression when the session
-    * has GraftExtensions (bit-identical, ~100× smaller expression
-    * tree); falls back to the pure-Column formulation otherwise.
     */
   def simhashFingerprints(docs0: DataFrame, canonical: Boolean = false,
                           routed: Boolean = false,
                           minLossFs: Long = 0L): DataFrame = {
     val docs = Par.spread(canonDocs(docs0, canonical, routed, minLossFs))
-    val sh =
-      if (docs.sparkSession.catalog.functionExists("graft_simhash64"))
-        call_function("graft_simhash64", tokens(col("text")))
-      else simhash64(tokens(col("text")))
-    docs.select(col("doc_id"), sh.as("simhash"))
+    docs.select(col("doc_id"), simhash64(tokens(col("text"))).as("simhash"))
   }
 
   /** SimHash near-dup pairs within hamming ≤ maxHamming.
@@ -507,10 +497,8 @@ object Dedup {
     * rows-only by necessity — has a hash-checked gate key, the same
     * bridge [[minhashMd5Pairs]] built for the minhash family in r10.
     *
-    * Plan shape: tokens explode to slim (doc_id, digest-prefix) rows,
-    * ONE partial-agged groupBy reduces them to 64 per-doc bit sums
-    * (shuffle volume = 64 longs per doc regardless of doc length),
-    * chunks project map-side, and candidates route through the salted
+    * Plan shape: one native per-doc kernel computes the four chunks
+    * map-side (no exchange), and candidates route through the salted
     * [[candidatePairs]] generator like every other LSH path here.
     */
   private val SimhashMd5Chunks = 4
@@ -521,43 +509,17 @@ object Dedup {
     * [[simhashMd5Pairs]] recalls EXACTLY the ≤ maxHamming pairs.
     */
   private[graft] def simhashMd5Fingerprints(docs: DataFrame): DataFrame =
-    if (docs.sparkSession.catalog.functionExists("graft_simhash_md5_chunks")) {
-      // native per-doc kernel (r21): the token array is already
-      // per-doc in the scan projection, so the whole fingerprint is
-      // computable map-side — the explode + 64-column groupBy
-      // Exchange of the Column twin collapses into one scan-speed
-      // projection with bit-identical chunk values (parity
-      // spec-pinned). The isNotNull filter reproduces the twin's
-      // row set exactly: explode of a null doc emits no row.
-      docs.filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          call_function("graft_simhash_md5_chunks",
-            array_distinct(tokens(col("text")))).as("ch"))
-        .select(col("doc_id") +:
-          (0 until SimhashMd5Chunks).map(c => col(s"ch.c$c").as(s"c$c")): _*)
-    } else simhashMd5FingerprintsColumns(docs)
-
-  /** The explode + 64-bit-sum groupBy twin of the native fingerprint
-    * path — the fallback when the session lacks GraftExtensions, and
-    * the parity reference ExpressionsSpec pins the kernel against.
-    */
-  private[graft] def simhashMd5FingerprintsColumns(docs: DataFrame): DataFrame = {
-      val tok = docs
-        .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
-        .select(col("doc_id"), substring(md5(col("tok")), 1, 16).as("h"))
-      val bitSums = (0 until 64).map { j =>
-        val nib = conv(substring(col("h"), 1 + j / 4, 1), 16, 10).cast("int")
-        val bit = shiftright(nib, 3 - j % 4).bitwiseAND(lit(1))
-        sum(bit * lit(2) - lit(1)).as(s"s$j")
-      }
-      val chunkCols = (0 until SimhashMd5Chunks).map { c =>
-        (0 until 16).map { i =>
-          when(col(s"s${c * 16 + i}") > 0, lit(1L << i)).otherwise(lit(0L))
-        }.reduce(_ + _).as(s"c$c")
-      }
-      tok.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-        .select(col("doc_id") +: chunkCols: _*)
-    }
+    // native per-doc kernel (r21): the token array is already per-doc
+    // in the scan projection, so the whole fingerprint is computable
+    // map-side — one scan-speed projection instead of an explode plus
+    // a 64-column groupBy Exchange. A null doc has no tokens to vote
+    // and gets no row.
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        ColumnBridge.column(graft.functions.expressions.SimhashMd5Chunks(
+          ColumnBridge.expression(array_distinct(tokens(col("text")))))).as("ch"))
+      .select(col("doc_id") +:
+        (0 until SimhashMd5Chunks).map(c => col(s"ch.c$c").as(s"c$c")): _*)
 
   def simhashMd5Pairs(docs0: DataFrame, maxHamming: Int = 3,
                       canonical: Boolean = false,
@@ -642,7 +604,7 @@ object Dedup {
     a.join(b, col("a.lang") === col("b.lang") && col("a.lb") === col("b.lb") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        jaccardFs(docs.sparkSession, col("a.toks"), col("b.toks")).as("jac_fs"))
+        jaccardFs(col("a.toks"), col("b.toks")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
   }
 
@@ -735,7 +697,7 @@ object Dedup {
     val gb = shingled.select(col("doc_id").as("id_b"), col("grams").as("grams_b"))
     val pairs = candidatePairs(banded, szBoundFs = thresholdFs).join(ga, "id_a").join(gb, "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardFs(docs0.sparkSession, col("grams_a"), col("grams_b")).as("jac_fs"))
+        jaccardFs(col("grams_a"), col("grams_b")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
     (pairs, shingled)
   }
@@ -1043,38 +1005,17 @@ object Dedup {
   }
 
   /** The lattice gate's cluster argmin as ONE plan node — distances
-    * in ascending-cid order, first strict minimum wins (identical to
-    * the HOF twin's array_position-of-array_min rule, spec-pinned).
+    * in ascending-cid order, first strict minimum wins (the
+    * array_position-of-array_min rule, spec-pinned against the HOF
+    * twin).
     */
   private[graft] def latticeClusterCol(q: Column, cs: Seq[(Long, Array[Long])]): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(
-      graft.functions.expressions.LatticeArgmin(
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(q),
-        cs.map(_._1).toArray, cs.map(_._2).toArray))
+    ColumnBridge.column(
+      LatticeArgmin(ColumnBridge.expression(q), cs.map(_._1).toArray, cs.map(_._2).toArray))
 
-  /** The interpreted-HOF twin of [[latticeClusterCol]] — the parity
-    * reference ExpressionsSpec pins the kernel against.
-    */
-  private[graft] def latticeClusterColColumns(q: Column, cs: Seq[(Long, Array[Long])]): Column = {
-    val ds = cs.map { case (_, c) =>
-      aggregate(zip_with(q, typedlit(c.toSeq), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x) }
-    val dArr = array(ds: _*)
-    val cidArr = typedlit(cs.map(_._1))
-    element_at(cidArr, array_position(dArr, array_min(dArr)).cast("int"))
-  }
-
-  /** Exact integer dot over array<long> — native kernel with the HOF
-    * twin alongside for the parity spec.
-    */
+  /** Exact integer dot over array<long>, one native loop. */
   private[graft] def latticeDot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(
-      graft.functions.expressions.ArrayLDot(
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(a),
-        org.apache.spark.sql.graftshim.ColumnBridge.expression(b)))
-
-  private[graft] def latticeDotColumns(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+    ColumnBridge.column(ArrayLDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Cross-corpus candidate pairs from two banded frames: the
     * incoming×reference equi-join on (band, bucket) — the two-corpus
@@ -1182,7 +1123,7 @@ object Dedup {
     val verified = crossCandidatePairs(banded(si), banded(sr), szBoundFs = thresholdFs)
       .join(gi, "id_in").join(gr, "id_ref")
       .select(col("id_in"), col("id_ref"),
-        jaccardFs(incoming.sparkSession, col("grams_in"), col("grams_ref")).as("jac_fs"))
+        jaccardFs(col("grams_in"), col("grams_ref")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // eager: materialize the verified pair set (slim rows, volume ∝
@@ -1461,7 +1402,7 @@ object Dedup {
     val verified = indexCandidatePairs(bi, name)
       .join(gi, "id_in").join(gr, "id_ref")
       .select(col("id_in"), col("id_ref"),
-        jaccardFs(spark, col("grams_in"), col("grams_ref")).as("jac_fs"))
+        jaccardFs(col("grams_in"), col("grams_ref")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // eager: drop the incoming-batch cache here (same shape as
@@ -1486,32 +1427,6 @@ object Dedup {
     docs.join(drop, Seq(idCol), "left_anti")
   }
 
-  /** Connected-component canonicalization of near-dup pairs: `iters`
-    * fixed rounds of min-id label propagation over the (undirected)
-    * pair graph. Where greedy [[applyPairs]] only drops direct
-    * higher-id pair members, this collapses CHAINS: A–B and B–C put
-    * all three docs under representative min(A,B,C) even though A–C
-    * was never emitted as a pair.
-    *
-    * Each round: label(x) ← min(label(x), min over neighbors'
-    * labels) — one edge join + one groupBy per round, every shuffle
-    * keyed on doc ids (no skew beyond the dup-cluster fan-in, which
-    * the groupBy partial-aggregates away). A fixed iteration count
-    * keeps both engines in lockstep for the oracle (chains longer
-    * than `iters` hops are rare in near-dup graphs; [[starCcLabels]]
-    * is the O(log d) star-contraction accelerant if they are not).
-    *
-    * Output: (doc_id, rep_id) for EVERY corpus doc — unpaired docs
-    * represent themselves. Keep rows where doc_id = rep_id for the
-    * canonical corpus.
-    *
-    * Scale shape (r6): the iteration runs over the pair graph's
-    * VERTEX SET only — an unpaired doc's label can never change, so
-    * it skips the rounds entirely and joins back (rep = self) in one
-    * final doc-keyed left join. Per-round cost is ∝ |paired docs|,
-    * not |corpus|: at a production dup rate (a few %) the iterated
-    * frame is 50× smaller than the corpus.
-    */
   /** Partition count for a CC edge checkpoint, derived from the
     * measured edge count (available for free — every CC variant counts
     * its edges to pin the cache): ~2M (u, v) long-pair rows ≈ 32–100 MB
@@ -1524,6 +1439,40 @@ object Dedup {
     math.max(1L, (edgeCount + 1999999L) / 2000000L)
       .min(Int.MaxValue.toLong).toInt
 
+  /** Connected-component canonicalization of near-dup pairs: min-id
+    * label propagation over the (undirected) pair graph, at most
+    * `iters` rounds, stopping at the fixed point — the first round
+    * that changes no label. Where greedy [[applyPairs]] only drops
+    * direct higher-id pair members, this collapses CHAINS: A–B and
+    * B–C put all three docs under representative min(A,B,C) even
+    * though A–C was never emitted as a pair.
+    *
+    * Each round: label(x) ← min(label(x), min over neighbors'
+    * labels) — one edge join + one groupBy per round, every shuffle
+    * keyed on doc ids (no skew beyond the dup-cluster fan-in, which
+    * the groupBy partial-aggregates away). A path graph converges in
+    * its diameter; near-dup graphs are dense clusters with tiny
+    * diameters, so typical convergence is 2–4 rounds + 1 round that
+    * sees no change. Rounds past a fixed point change no label, so
+    * stopping there yields exactly the labels of `iters` fixed rounds
+    * — the oracle's lockstep count (default 4) still holds. A graph
+    * still changing at `iters` rounds keeps valid labels (every
+    * rep_id is a component member) but leaves chains deeper than
+    * `iters` hops split, which is reported once on stderr;
+    * [[starCcLabels]] is the O(log d) star-contraction path for deep
+    * chains.
+    *
+    * Output: (doc_id, rep_id) for EVERY corpus doc — unpaired docs
+    * represent themselves. Keep rows where doc_id = rep_id for the
+    * canonical corpus.
+    *
+    * Scale shape (r6): the iteration runs over the pair graph's
+    * VERTEX SET only — an unpaired doc's label can never change, so
+    * it skips the rounds entirely and joins back (rep = self) in one
+    * final doc-keyed left join. Per-round cost is ∝ |paired docs|,
+    * not |corpus|: at a production dup rate (a few %) the iterated
+    * frame is 50× smaller than the corpus.
+    */
   def ccLabels(docs: DataFrame, pairs: DataFrame, iters: Int = 4,
                idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1564,85 +1513,17 @@ object Dedup {
     // both edge directions are present, so `u` alone covers every vertex
     var labels = edges.select(col("u").as("doc_id")).distinct()
       .withColumn("lbl", col("doc_id"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      // label(x) ← min(label(x), min over neighbor labels) as ONE
-      // aggregate over the neighbor-label stream UNIONED with the
-      // self rows (r21): every vertex contributes its own label, so
-      // the min over the union IS least(lbl, min-neighbor-lbl) — the
-      // previous form's separate left join back to `labels` (a second
-      // exchange of the frontier plus a join operator per round) is
-      // folded into the same groupBy. Identical labels by
-      // construction; per-round plan is join + aggregate instead of
-      // join + aggregate + join.
-      val next = edges
-        .join(labels.select(col("doc_id").as("v"), col("lbl").as("nlbl")), "v")
-        .select(col("u").as("doc_id"), col("nlbl"))
-        .unionByName(labels.select(col("doc_id"), col("lbl").as("nlbl")))
-        .groupBy(col("doc_id")).agg(min(col("nlbl")).as("lbl"))
-        .persist(MEMORY_AND_DISK)
-      // materialize EAGERLY: `labels` appears twice in each next-round
-      // plan (the outer join AND nbrMin), so an unbroken lazy lineage
-      // replays the base 2^iters times; a count() per round pins each
-      // frontier once — the standard label-propagation iteration shape
-      next.count()
-      if (prev != null) prev.unpersist(false)
-      prev = labels
-      labels = next
-    }
-    edges.unpersist(false)
-    // the second-to-last frontier is safe to drop: `labels` was
-    // eagerly materialized above, so nothing re-reads `prev`. The
-    // FINAL frontier stays cached until the caller's first action —
-    // the returned ORDER BY samples its input, so dropping it earlier
-    // would re-run the last round's joins twice.
-    if (prev != null) prev.unpersist(false)
-    ScopedCache.releaseAfterAction(
-      docs.select(col(idCol).cast("long").as("doc_id"))
-        .join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep_id"))
-        .orderBy(col("doc_id")),
-      Seq(labels))
-  }
-
-  /** [[ccLabels]] iterated to a FIXED POINT: min-id label propagation
-    * until a round changes zero labels (checked with a driver-side
-    * count on the same pass that materializes the frontier — no extra
-    * job). The library-facing variant for graphs whose chain depth is
-    * unknown; [[ccLabels]] keeps the fixed count for oracle lockstep.
-    *
-    * `maxIters` bounds the worst case (a path graph converges in its
-    * diameter; near-dup graphs are dense clusters with tiny diameters,
-    * so typical convergence is 2–4 rounds + 1 verification round).
-    * Per-round cost is identical to [[ccLabels]]: one edge join + one
-    * partial-agg groupBy over the pair graph's vertex set (unpaired
-    * docs join back rep = self at the end, see ccLabels).
-    */
-  def convergedCcLabels(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50,
-                        idCol: String = "doc_id"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // one eager pipeline run + lineage truncation — see ccLabels for
-    // the measured plan-explosion rationale
-    // one slim persist + count consumes the pair generator exactly
-    // once before the two-leg union — see ccLabels (r22)
-    val p0 = pairs.select(col("id_a"), col("id_b")).persist(MEMORY_AND_DISK)
-    val nPairs = p0.count()
-    val edges0 = p0.select(col("id_a").as("u"), col("id_b").as("v"))
-      .unionByName(p0.select(col("id_b").as("u"), col("id_a").as("v")))
-    // measured-size checkpoint partitioning — see ccLabels (r22)
-    val edges = edges0.coalesce(ccEdgeParts(2L * nPairs)).localCheckpoint(true)
-    p0.unpersist(false)
-    var labels = edges.select(col("u").as("doc_id")).distinct()
-      .withColumn("lbl", col("doc_id"))
     var prevCached: DataFrame = null
     var changed = 1L
     var it = 0
-    while (changed > 0 && it < maxIters) {
-      // same one-aggregate round as [[ccLabels]] (r21): min over the
-      // neighbor-label stream ∪ self rows. The convergence check
-      // needs the PREVIOUS label alongside: only the self row carries
-      // it (non-null), so max(old) recovers it in the SAME aggregate
-      // — no join back to the frontier.
+    while (changed > 0 && it < iters) {
+      // label(x) ← min(label(x), min over neighbor labels) as ONE
+      // aggregate over the neighbor-label stream UNIONED with the
+      // self rows (r21): every vertex contributes its own label, so
+      // the min over the union IS least(lbl, min-neighbor-lbl) — no
+      // separate join back to `labels`. Only the self row carries the
+      // previous label (non-null), so max(old) recovers it in the
+      // SAME aggregate for the fixed-point check.
       val next = edges
         .join(labels.select(col("doc_id").as("v"), col("lbl").as("nlbl")), "v")
         .select(col("u").as("doc_id"), col("nlbl"), lit(null).cast("long").as("old"))
@@ -1650,10 +1531,11 @@ object Dedup {
         .groupBy(col("doc_id"))
         .agg(min(col("nlbl")).as("lbl"), max(col("old")).as("old_lbl"))
         .persist(MEMORY_AND_DISK)
-      // one action does double duty: eager frontier materialization
-      // (the 2^iters lineage guard, see ccLabels) AND the convergence
-      // check — the changed-label count is a partial agg over the
-      // frame we must materialize anyway
+      // one action does double duty: EAGER frontier materialization
+      // (`labels` appears twice in each next-round plan, so an
+      // unbroken lazy lineage replays the base 2^iters times) AND the
+      // fixed-point check — the changed-label count is a partial agg
+      // over the frame we must materialize anyway
       changed = next.filter(col("lbl") < col("old_lbl")).count()
       // the new frontier is materialized, so the previous round's
       // cache (which it was computed from) can go
@@ -1664,19 +1546,17 @@ object Dedup {
     }
     edges.unpersist(false)
     if (changed > 0)
-      // labels are still VALID (every rep_id is a component member)
-      // but components deeper than maxIters stay split — surface it
-      // instead of silently under-merging
-      System.err.println(s"[graft] convergedCcLabels: not converged after $maxIters rounds " +
-        s"($changed labels still changing) — chains deeper than $maxIters hops remain split")
-    // the last frontier stays cached until the caller's first action
-    // (the ORDER BY samples its input — same contract as ccLabels)
+      System.err.println(s"[graft] ccLabels: not converged after $iters rounds " +
+        s"($changed labels still changing) — chains deeper than $iters hops remain split")
+    // the FINAL frontier stays cached until the caller's first action
+    // — the returned ORDER BY samples its input, so dropping it
+    // earlier would re-run the last round's joins twice
     ScopedCache.releaseAfterAction(
       docs.select(col(idCol).cast("long").as("doc_id"))
         .join(labels, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep_id"))
         .orderBy(col("doc_id")),
-      if (prevCached != null) Seq(prevCached) else Seq.empty)
+      Seq(prevCached).filter(_ != null))
   }
 
   /** Connected components by ALTERNATING STAR CONTRACTION — the known
@@ -1705,7 +1585,7 @@ object Dedup {
     * CC variants here share); `exceptAll` against the previous round
     * on the slim id pairs detects the fixed point exactly.
     *
-    * Output contract is IDENTICAL to [[ccLabels]]/[[convergedCcLabels]]
+    * Output contract is IDENTICAL to [[ccLabels]]
     * (spec-pinned parity): (doc_id, rep_id) for every corpus doc,
     * rep = component min, unpaired docs rep = self — so callers can
     * swap propagation for contraction without touching anything else.
@@ -1805,7 +1685,7 @@ object Dedup {
     * `pairsOf` generates near-dup pairs over the deduplicated corpus
     * (e.g. [[ngramLshPairs]]); `cc` is any of the CC variants with
     * the shared (docs, pairs) → (doc_id, rep_id) contract
-    * ([[ccLabels]], [[convergedCcLabels]], [[starCcLabels]]).
+    * ([[ccLabels]], [[starCcLabels]]).
     */
   def ccLabelsExactFirst(docs: DataFrame,
                          pairsOf: DataFrame => DataFrame,

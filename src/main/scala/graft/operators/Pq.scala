@@ -221,16 +221,6 @@ object Pq {
         org.apache.spark.sql.graftshim.ColumnBridge.expression(v),
         cb.dsub, cb.ks, flatBooks(cb)))
 
-  /** The literal-centroid Column twin of [[codesExpr]] — the parity
-    * reference ExpressionsSpec pins the native kernel against.
-    */
-  private[graft] def codesExprColumns(v: Column, cb: Codebooks): Column =
-    array((0 until cb.m).map { s =>
-      val cents: KMeans.Centroids =
-        cb.books(s).zipWithIndex.map { case (c, i) => (i.toLong, c) }
-      KMeans.assignExpr(subvec(v, s, cb.dsub), cents)._1.cast("int")
-    }: _*)
-
   /** The per-query ADC lookup table: all m·ks subspace distances of
     * `v` to every codebook centroid, flattened as `s·ks + code`.
     * Computed ONCE per (query[, probed cluster]) row; candidates then
@@ -242,16 +232,6 @@ object Pq {
       graft.functions.expressions.PqAdcTable(
         org.apache.spark.sql.graftshim.ColumnBridge.expression(v),
         cb.dsub, cb.ks, flatBooks(cb)))
-
-  /** The literal-centroid Column twin of [[adcTableExpr]] — the
-    * parity reference ExpressionsSpec pins the native kernel against.
-    */
-  private[graft] def adcTableExprColumns(v: Column, cb: Codebooks): Column =
-    array((0 until cb.m).flatMap { s =>
-      (0 until cb.ks).map { c =>
-        l2sq(subvec(v, s, cb.dsub), typedlit(cb.books(s)(c)))
-      }
-    }: _*)
 
   /** ADC candidate score = Σ_s qtab[s·ks + codes[s]] — m element_at
     * lookups against the precomputed table, the whole point of PQ.

@@ -211,8 +211,8 @@ object Similarity {
     * The flip set is prefix-monotone in `probes` (probes = k+1 flips
     * the k smallest margins), so candidate sets are supersets as
     * probes grows — the monotonicity the specs pin. All bucket/margin
-    * arithmetic is literal-plane dot products (native kernel under
-    * GraftExtensions), no lambdas beyond the dot itself; the margin
+    * arithmetic is literal-plane dot products (the native dot
+    * kernel, no lambdas); the margin
     * ranking is one array_sort of `planes` tiny structs per vector.
     *
     * `bandField` names the table-id struct field ("tbl" for the ANN

@@ -5,12 +5,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. Spark 4 hides the classic
-  * `ExpressionUtils` behind `private[sql]`; graft expressions that
-  * can't ride the SQL function registry (e.g. the broadcast-handle
-  * bloom probe — a `Broadcast` is not a `Column`) still need a Column
-  * wrapper, so this one-file subpackage of `org.apache.spark.sql`
-  * re-exports the two conversions — the standard extension-library
-  * idiom, no behavior of its own.
+  * `ExpressionUtils` behind `private[sql]`; every graft kernel builds
+  * its native expression into a Column through this bridge, with no
+  * session or SQL registry lookup (and some, like the broadcast-handle
+  * bloom probe, take arguments that are not Columns at all), so this
+  * one-file subpackage of `org.apache.spark.sql` re-exports the two
+  * conversions — the standard extension-library idiom, no behavior of
+  * its own.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

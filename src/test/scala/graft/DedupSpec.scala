@@ -953,7 +953,7 @@ class DedupSpec extends SparkSpec {
       s"chain must canonicalize to min id transitively, got $reps")
   }
 
-  test("chain depth: fixed-4-round ccLabels splits a 6-hop chain, convergedCcLabels collapses it") {
+  test("chain depth: ccLabels at iters = 4 splits a 6-hop chain, iters = 50 collapses it") {
     val corpus = (1L to 7L).map(i => (i, "x", "en", 1L)).toDF("doc_id", "text", "lang", "n_chars")
     // path graph 1–2–3–4–5–6–7: min-label propagation moves label 1
     // one hop per round, so node i reaches label 1 at round i−1
@@ -964,7 +964,7 @@ class DedupSpec extends SparkSpec {
     // hops from the min) have not yet converged to 1 after 4 rounds
     assert(fixed == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 2L, 7L -> 3L),
       s"4 fixed rounds must leave the >4-hop tail split, got $fixed")
-    val conv = Dedup.convergedCcLabels(corpus, chain).collect()
+    val conv = Dedup.ccLabels(corpus, chain, iters = 50).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
     assert(conv == (1L to 7L).map(_ -> 1L).toMap,
       s"fixed-point propagation must collapse the whole chain, got $conv")
@@ -980,7 +980,7 @@ class DedupSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     val star = Dedup.starCcLabels(corpus, pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val prop = Dedup.convergedCcLabels(corpus, pairs).collect()
+    val prop = Dedup.ccLabels(corpus, pairs, iters = 50).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(star == prop, s"star contraction must produce identical labels:\n$star\nvs\n$prop")
     val reps = star.toMap
@@ -1000,17 +1000,45 @@ class DedupSpec extends SparkSpec {
       s"star contraction must collapse a 16-hop chain within 6 rounds, got $star")
     // the SAME budget starves min-label propagation — the round-count
     // separation this operator exists for
-    val prop = Dedup.convergedCcLabels(corpus, chain, maxIters = 6).collect()
+    val prop = Dedup.ccLabels(corpus, chain, iters = 6).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
     assert(prop != star, "min-label within 6 rounds must NOT have collapsed the 16-hop chain")
   }
 
-  test("convergedCcLabels agrees with ccLabels on graphs that converge within the fixed count") {
+  test("ccLabels at iters = 4 agrees with iters = 50 on a graph that converges within 4 rounds") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val corpus = (1L to 5L).map(i => (i, "x", "en", 1L)).toDF("doc_id", "text", "lang", "n_chars")
-    val a = Dedup.ccLabels(corpus, pairs).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val b = Dedup.convergedCcLabels(corpus, pairs).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(a == b, "same labels when the graph converges before the fixed count")
+    val a = Dedup.ccLabels(corpus, pairs, iters = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val b = Dedup.ccLabels(corpus, pairs, iters = 50).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(a == b, "same labels when the graph converges before the round cap")
+  }
+
+  test("ccLabels stops at its fixed point instead of running every allowed round") {
+    // one edge: round 1 moves doc 2 onto label 1, round 2 changes
+    // nothing — every further round would be wasted. Each round runs
+    // at least one Spark job, so 50 rounds could not fit under 50 jobs.
+    val corpus = (1L to 3L).map(i => (i, "x", "en", 1L)).toDF("doc_id", "text", "lang", "n_chars")
+    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val group = s"cc-fixed-point-${System.nanoTime()}"
+    sc.setJobGroup(group, "ccLabels fixed-point spec")
+    val reps = try {
+      Dedup.ccLabels(corpus, pairs, iters = 50).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
+    } finally sc.clearJobGroup()
+    assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), s"got $reps")
+    // job events reach the status store asynchronously: read until the
+    // count stops moving
+    def jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    var (last, now) = (-1, jobs)
+    val deadline = System.nanoTime() + 10000000000L
+    while (now != last && System.nanoTime() < deadline) {
+      Thread.sleep(300)
+      last = now
+      now = jobs
+    }
+    assert(now > 0, "the job group recorded no jobs")
+    assert(now < 50, s"$now jobs: ccLabels kept iterating past the fixed point")
   }
 
   test("LSH-applied dedup catches the cross-block dup the blocked baseline misses (fixture-pinned)") {
@@ -1037,7 +1065,7 @@ class DedupSpec extends SparkSpec {
     assert(lsh == Set(1L, 3L, 4L) && blocked == Set(1L, 2L, 3L, 4L),
       "the cross-block dup must be dropped by the LSH path and kept by the blocked baseline")
     // the cc composition groups the pair under the min id
-    val reps = Dedup.convergedCcLabels(d, Dedup.ngramLshPairs(d)).collect()
+    val reps = Dedup.ccLabels(d, Dedup.ngramLshPairs(d), iters = 50).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
     assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L), s"got $reps")
   }
@@ -1062,9 +1090,9 @@ class DedupSpec extends SparkSpec {
     def pairsOf(df: org.apache.spark.sql.DataFrame) = Dedup.ngramLshPairs(df, thresholdFs = 8000L)
     def labelsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
-    val full = labelsOf(Dedup.convergedCcLabels(d, pairsOf(d)))
+    val full = labelsOf(Dedup.ccLabels(d, pairsOf(d), iters = 50))
     val pre = labelsOf(Dedup.ccLabelsExactFirst(d, pairsOf,
-      (dd, pp) => Dedup.convergedCcLabels(dd, pp)))
+      (dd, pp) => Dedup.ccLabels(dd, pp, iters = 50)))
     assert(full == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 7L),
       s"full-graph CC baseline: $full")
     assert(pre == full, s"exact-first labels $pre must equal full-graph labels $full")

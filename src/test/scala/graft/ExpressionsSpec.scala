@@ -13,7 +13,7 @@ class ExpressionsSpec extends SparkSpec {
     val both = docs.select(
       col("doc_id"),
       call_function("graft_simhash64", tokens(col("text"))).as("native"),
-      HashFunctions.simhash64(tokens(col("text"))).as("columnar"))
+      KernelTwins.simhash64Columns(tokens(col("text"))).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff docs disagree between native and Column simhash")
   }
@@ -89,8 +89,7 @@ class ExpressionsSpec extends SparkSpec {
 
   test("native dot/l2sq are bit-identical to the HOF twins on real embeddings") {
     import graft.functions.VectorFunctions.toDoubleArray
-    // HOF twins spelled out inline (VectorFunctions.dot now auto-picks
-    // the native kernel in this session, so the twin must be explicit)
+    // HOF twins spelled out inline
     def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
     def hofL2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -123,7 +122,7 @@ class ExpressionsSpec extends SparkSpec {
     val toks = array_distinct(tokens(col("text")))
     val both = docs.select(
       call_function("graft_minhash_sig", toks, lit(32)).as("native"),
-      HashFunctions.minhashSignatureColumns(toks, 32).as("columnar"))
+      KernelTwins.minhashSignatureColumns(toks, 32).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff docs disagree between native and Column minhash signature")
     // empty-array edge: all-null signature, same as array_min of empty
@@ -135,7 +134,7 @@ class ExpressionsSpec extends SparkSpec {
     val nulls = spark.range(1).select(
       call_function("graft_minhash_sig",
         lit(null).cast("array<string>"), lit(4)).as("native"),
-      HashFunctions.minhashSignatureColumns(lit(null).cast("array<string>"), 4).as("columnar"))
+      KernelTwins.minhashSignatureColumns(lit(null).cast("array<string>"), 4).as("columnar"))
       .collect()(0)
     assert(nulls.isNullAt(0) && nulls.isNullAt(1),
       s"null token array → SQL NULL signature in both forms, got $nulls")
@@ -176,7 +175,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("native script counts are bit-identical to the 17-regex Column twin, incl. edges") {
-    import graft.functions.TextFunctions
     // every named script + beyond-the-named-set (Gujarati → other), a
     // SUPPLEMENTARY-PLANE Han char (U+20000, arrives as a surrogate
     // pair — must count ONCE in n_han, the code-point-loop parity
@@ -194,14 +192,14 @@ class ExpressionsSpec extends SparkSpec {
         element_at(typedlit(plants), (col("id") + 1).cast("int")).as("text")))
     val both = docs.select(
       call_function("graft_script_counts", col("text")).as("native"),
-      TextFunctions.scriptCountsColumns(col("text")).as("columnar"))
+      KernelTwins.scriptCountsColumns(col("text")).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff rows disagree between native and regex script counts")
     // null input: native → NULL struct, twin → struct of NULL fields;
     // every consumer reads FIELDS, where both forms agree (null)
     val nulls = spark.range(1).select(
       call_function("graft_script_counts", lit(null).cast("string")).getField("n_han").as("n"),
-      TextFunctions.scriptCountsColumns(lit(null).cast("string")).getField("n_han").as("c"))
+      KernelTwins.scriptCountsColumns(lit(null).cast("string")).getField("n_han").as("c"))
       .collect()(0)
     assert(nulls.isNullAt(0) && nulls.isNullAt(1), s"null text → null fields on both paths: $nulls")
     // supplementary-plane pin: U+20000 is ONE Han code point
@@ -216,7 +214,7 @@ class ExpressionsSpec extends SparkSpec {
     val toks = array_distinct(tokens(col("text")))
     val both = docs.select(
       call_function("graft_md5_minhash_sig", toks, lit(32)).as("native"),
-      HashFunctions.md5MinhashSigColumns(toks, 32).as("columnar"))
+      KernelTwins.md5MinhashSigColumns(toks, 32).as("columnar"))
     val diff = both.filter(col("native") =!= col("columnar")).count()
     assert(diff == 0, s"$diff docs disagree between native and Column md5 minhash signature")
     // empty array → all-null signature (array_min of empty per perm)
@@ -227,7 +225,7 @@ class ExpressionsSpec extends SparkSpec {
     val withNull = spark.range(1).select(
       call_function("graft_md5_minhash_sig",
         array(lit("a"), lit(null).cast("string"), lit("b")), lit(8)).as("native"),
-      HashFunctions.md5MinhashSigColumns(
+      KernelTwins.md5MinhashSigColumns(
         array(lit("a"), lit(null).cast("string"), lit("b")), 8).as("columnar"),
       call_function("graft_md5_minhash_sig", array(lit("a"), lit("b")), lit(8)).as("clean"))
       .collect()(0)
@@ -236,7 +234,7 @@ class ExpressionsSpec extends SparkSpec {
     // NULL array → SQL NULL on both paths
     val nulls = spark.range(1).select(
       call_function("graft_md5_minhash_sig", lit(null).cast("array<string>"), lit(4)).as("n"),
-      HashFunctions.md5MinhashSigColumns(lit(null).cast("array<string>"), 4).as("c"))
+      KernelTwins.md5MinhashSigColumns(lit(null).cast("array<string>"), 4).as("c"))
       .collect()(0)
     assert(nulls.isNullAt(0) && nulls.isNullAt(1), s"null array → SQL NULL both paths: $nulls")
   }
@@ -244,7 +242,7 @@ class ExpressionsSpec extends SparkSpec {
   test("native simhash md5 fingerprints match the explode+groupBy twin doc-for-doc") {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val native = graft.operators.Dedup.simhashMd5Fingerprints(docs)
-    val twin = graft.operators.Dedup.simhashMd5FingerprintsColumns(docs)
+    val twin = KernelTwins.simhashMd5FingerprintsColumns(docs)
     assert(native.count() == twin.count(), "fingerprint row sets differ")
     val joined = native.as("n").join(twin.as("t"), "doc_id")
     val diff = joined.filter((0 until 4).map(c =>
@@ -266,9 +264,9 @@ class ExpressionsSpec extends SparkSpec {
     val pts = Pq.normalized(emb)
     val both = pts.select(
       Pq.codesExpr(col("v"), cb).as("nc"),
-      Pq.codesExprColumns(col("v"), cb).as("cc"),
+      KernelTwins.codesExprColumns(col("v"), cb).as("cc"),
       Pq.adcTableExpr(col("v"), cb).as("nt"),
-      Pq.adcTableExprColumns(col("v"), cb).as("ct"))
+      KernelTwins.adcTableExprColumns(col("v"), cb).as("ct"))
     val diff = both.filter(col("nc") =!= col("cc") || col("nt") =!= col("ct")).count()
     assert(diff == 0, s"$diff vectors disagree between native and literal-centroid PQ kernels")
     // null vector → SQL NULL from the native kernels
@@ -292,9 +290,9 @@ class ExpressionsSpec extends SparkSpec {
       .map { case (r, i) => i.toLong -> r.getAs[scala.collection.Seq[Long]]("q").toArray }.toSeq
     val both = pts.select(
       Dedup.latticeClusterCol(col("q"), cents).as("nc"),
-      Dedup.latticeClusterColColumns(col("q"), cents).as("cc"),
+      KernelTwins.latticeClusterColColumns(col("q"), cents).as("cc"),
       Dedup.latticeDot(col("q"), col("q")).as("nd"),
-      Dedup.latticeDotColumns(col("q"), col("q")).as("cd"))
+      KernelTwins.latticeDotColumns(col("q"), col("q")).as("cd"))
     val diff = both.filter(col("nc") =!= col("cc") || col("nd") =!= col("cd")).count()
     assert(diff == 0, s"$diff rows disagree between native and HOF lattice kernels")
     // exact-tie pin: a point equidistant to two centroids takes the
@@ -302,7 +300,7 @@ class ExpressionsSpec extends SparkSpec {
     val twoCents = Seq(0L -> Array(0L, 0L), 1L -> Array(2L, 0L))
     val tie = spark.range(1).select(typedlit(Seq(1L, 0L)).as("q"))
       .select(Dedup.latticeClusterCol(col("q"), twoCents).as("n"),
-        Dedup.latticeClusterColColumns(col("q"), twoCents).as("c")).collect()(0)
+        KernelTwins.latticeClusterColColumns(col("q"), twoCents).as("c")).collect()(0)
     assert(tie.getLong(0) == 0L && tie.getLong(1) == 0L, s"tie must take cid 0: $tie")
   }
 
@@ -334,6 +332,33 @@ class ExpressionsSpec extends SparkSpec {
       (size(col("n")) > 0).as("nk"), (size(col("c")) > 0).as("ck")).collect()(0)
     assert(survivors.isNullAt(0) || !survivors.getBoolean(0), "null input must not survive the size filter (native)")
     assert(!survivors.getBoolean(1), "null input must not survive the size filter (twin)")
+  }
+
+  test("public kernels build their native node with no active session") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    import graft.functions.{TextFunctions, VectorFunctions}
+    import graft.functions.expressions._
+    val toks = col("toks")
+    // thunks: each Column must be built after the session is cleared
+    val cases: Seq[(() => org.apache.spark.sql.Column, Class[_])] = Seq(
+      (() => HashFunctions.md5MinhashSig(toks, 4), classOf[Md5MinHashSig]),
+      (() => HashFunctions.minhashSignature(toks, 4), classOf[MinHashSig]),
+      (() => TextFunctions.scriptCounts(col("text")), classOf[ScriptCounts]),
+      (() => TextFunctions.ngramStats(toks, 2), classOf[NgramStats]),
+      (() => TextFunctions.distinctWordNgrams(toks, 2), classOf[DistinctNgrams]),
+      (() => VectorFunctions.dot(col("a"), col("b")), classOf[ArrayDot]),
+      (() => VectorFunctions.l2sq(col("a"), col("b")), classOf[ArrayL2Sq]),
+      (() => HashFunctions.simhash64(toks), classOf[SimHash64]))
+    SparkSession.clearActiveSession()
+    try {
+      assert(SparkSession.getActiveSession.isEmpty)
+      for ((build, native) <- cases) {
+        val tree = ColumnBridge.expression(build())
+        assert(tree.find(native.isInstance).isDefined,
+          s"no ${native.getSimpleName} node without a session: $tree")
+      }
+    } finally SparkSession.setActiveSession(spark)
   }
 
   test("native simhash stays inside whole-stage codegen") {

@@ -37,10 +37,10 @@ class ScopedCacheSpec extends SparkSpec {
       ("ngramLshAgainst", () => Dedup.ngramLshAgainst(
         docs.filter(col("doc_id") % 2 === 1), docs.filter(col("doc_id") % 2 === 0))),
       ("ccLabels", () => Dedup.ccLabels(docs, Dedup.ngramLshPairs(docs))),
-      ("convergedCcLabels", () => Dedup.convergedCcLabels(docs, Dedup.ngramLshPairs(docs))),
+      ("ccLabels to a fixed point", () => Dedup.ccLabels(docs, Dedup.ngramLshPairs(docs), iters = 50)),
       ("starCcLabels", () => Dedup.starCcLabels(docs, Dedup.ngramLshPairs(docs))),
       ("ccLabelsExactFirst", () => Dedup.ccLabelsExactFirst(docs, Dedup.ngramLshPairs(_),
-        (d, p) => Dedup.convergedCcLabels(d, p))),
+        (d, p) => Dedup.ccLabels(d, p, iters = 50))),
       ("minhashMd5Pairs via applyPairs", () =>
         Dedup.applyPairs(docs, Dedup.minhashMd5Pairs(docs))),
       ("ccLabels over minhashMd5Pairs", () =>

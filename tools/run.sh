@@ -2,6 +2,8 @@
 # Run a graft main class directly against compiled classes + /opt/spark/jars
 # (bypasses sbt startup). Usage: tools/run.sh graft.Verify <sfdir> <outdir>
 set -e
+# the checkout this script lives in, so any clone runs its own classes
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -12,4 +14,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-24g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
