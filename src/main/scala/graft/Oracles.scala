@@ -697,7 +697,7 @@ object Oracles {
   }
 
   /** The md5-minhash banded candidate CTEs (the DuckDB twin of
-    * Dedup.minhashMd5Pairs at the default 32-perm / 4-band geometry):
+    * Dedup.minhashMd5PairsUnsorted at the default 32-perm / 4-band geometry):
     * ONE md5 per token (r11 — previously one per permutation):
     * h = int(substr(md5(tok),1,14),16) (56 bits), split into halves
     * h1 = h >> 28, h2 = h mod 2²⁸, with every permutation a
@@ -749,7 +749,7 @@ object Oracles {
        |SELECT id_a, id_b, jac_fs FROM p ORDER BY id_a, id_b""".stripMargin
 
   /** dedup_minhash_md5_canon: the same banded generator + exact
-    * verify over the CANONICAL token stream (Dedup.minhashMd5Pairs
+    * verify over the CANONICAL token stream (Dedup.minhashMd5PairsUnsorted
     * with canonical = true) — the one mechanical change is the doc
     * source CTE: text folds through canonicalText's DuckDB twin, and
     * docs whose canonical form is EMPTY (fully non-ASCII) drop — no
@@ -766,7 +766,7 @@ object Oracles {
   }
 
   /** dedup_minhash_md5_routed: the banded generator + exact verify
-    * over the script-ROUTED text stream (Dedup.minhashMd5Pairs with
+    * over the script-ROUTED text stream (Dedup.minhashMd5PairsUnsorted with
     * routed = true) — the doc source CTE applies routedText's twin
     * (raw text for docs carrying non-Latin-script signal, canonicalText
     * otherwise) over the planted corpus: base docs ∪ two distinct
@@ -786,7 +786,7 @@ object Oracles {
 
   /** dedup_minhash_md5_routed_floor: the banded generator + exact
     * verify over the THRESHOLDED routed stream
-    * (Dedup.minhashMd5Pairs with routed = true, minLossFs = 100 —
+    * (Dedup.minhashMd5PairsUnsorted with routed = true, minLossFs = 100 —
     * TextFunctions.routedText's two-arg form, r20): the planted
     * corpus adds a 20-char Han suffix per 10th doc (loss far above
     * the 1% floor → grams RAW, as in the 0-floor twin) and a ONE-GLYPH
@@ -1170,7 +1170,7 @@ object Oracles {
       | CAST(floor(10000.0 * (1.0 - CAST(u AS DOUBLE) / n)) AS BIGINT) AS rep_fs
       |FROM r ORDER BY doc_id""".stripMargin
 
-  /** Twin of TextAnalysis.contamination (trigrams, benchmark = docs
+  /** Twin of TextAnalysis.contaminationAcct (trigrams, benchmark = docs
     * with doc_id % 50 = 0 — the deterministic stand-in eval set):
     * per-doc distinct-trigram overlap with the benchmark's gram set.
     */
@@ -1711,7 +1711,7 @@ object Oracles {
       |FROM documents d LEFT JOIN r ON md5(d.text) = r.h
       |ORDER BY d.doc_id""".stripMargin
 
-  /** snapshot_diff (the DuckDB twin of Snapshot.diff over the gate's
+  /** snapshot_diff (the DuckDB twin of Snapshot.churn over the gate's
     * derived snapshots): full-outer digest join, churn rows only,
     * absent-side digests coalesced to '' so both engines emit
     * non-null comparable strings.

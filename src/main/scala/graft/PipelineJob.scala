@@ -30,7 +30,7 @@ import graft.streaming.StreamingPipeline
   *   a doc_id-bucketed sorted TABLE (full columns, text included) so
   *   every later doc-keyed join (incremental-crawl dedup against this
   *   corpus as reference) skips its shuffle on the corpus side.
-  * training: [[Pipeline.prepareTraining]] — the trainer-ready layout
+  * training: [[Pipeline.prepareTrainingPieces]] — the trainer-ready layout
   *   (curate → context-window chunks → packed sequences), partitioned
   *   by (split, source) so a trainer reads one mixture component per
   *   directory with partition pruning.
@@ -365,9 +365,6 @@ object PipelineJob {
         Pipeline.curateToBucketed(docs, out, minQualityFs = minQ,
           keying = resolveKeying(docs, keyingArg))
       case "training" =>
-        // the UNSORTED pieces form: partitionBy discards row order,
-        // and the sorted form's range-sampling pass would execute the
-        // whole curate/LSH/pack chain twice
         val docs = spark.read.parquet(in)
         Sinks.writePartitioned(
           Pipeline.prepareTrainingPieces(docs, minQualityFs = minQ,

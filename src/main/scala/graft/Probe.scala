@@ -52,7 +52,7 @@ object Probe {
         val docs = Tables.documents(spark, sfDir)
         (1 to 4).foreach { r =>
           seg(s"apply_full_$r") {
-            operators.Dedup.applyPairs(docs, operators.Dedup.minhashMd5Pairs(docs))
+            operators.Dedup.applyPairs(docs, operators.Dedup.minhashMd5PairsUnsorted(docs))
               .select(col("doc_id"), col("lang"), col("n_chars"))
               .orderBy(col("doc_id"))
           }
@@ -120,14 +120,6 @@ object Probe {
             if (d.length == 0) throw new IllegalStateException("empty")
           }
         }
-      case "cc_edges_plan" =>
-        // does the generator's ORDER BY survive into the edges union's
-        // executed plan (i.e. run once per union leg)?
-        val docs = Tables.documents(spark, sfDir)
-        val pairs = operators.Dedup.minhashMd5Pairs(docs)
-        val edges0 = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-          .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-        println(edges0.queryExecution.executedPlan.toString.take(8000))
       case other =>
         SparkEntry.queries.get(other).foreach { fn =>
           seg(other) { fn(spark, sfDir) }

@@ -13,6 +13,10 @@ import graft.operators._
   * rules). Keys without an oracle (LSH/simhash/fingerprint/multimodal
   * — not SQL-expressible) are rows-only checked here and
   * property-checked in src/test/scala.
+  *
+  * Pair, label, chunk and churn operators return unordered rows; the
+  * oracle compares rows by position, so an oracle-checked key over
+  * one of them states its oracle's ORDER BY here, at the entry.
   */
 object SparkEntry {
 
@@ -321,9 +325,11 @@ object SparkEntry {
     }),
     "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLsh(Tables.documents(s, dir))),
     "dedup_simhash" -> ((s, dir) => Dedup.simhashPairs(Tables.documents(s, dir))),
-    "dedup_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(Tables.documents(s, dir))),
-    "dedup_ngram_lsh" -> ((s, dir) => Dedup.ngramLsh(Tables.documents(s, dir))),
-    "dedup_embed_cosine" -> ((s, dir) => Dedup.embedCosine(Tables.embeddings(s, dir))),
+    "dedup_ngram_jaccard" -> ((s, dir) =>
+      Dedup.ngramJaccardPairs(Tables.documents(s, dir)).orderBy(col("id_a"), col("id_b"))),
+    "dedup_ngram_lsh" -> ((s, dir) => Dedup.ngramLshPairs(Tables.documents(s, dir))),
+    "dedup_embed_cosine" -> ((s, dir) =>
+      Dedup.embedCosine(Tables.embeddings(s, dir)).orderBy(col("id_a"), col("id_b"))),
     // k = 10 pinned: the DuckDB twin unrolls Lloyd from a 10-id init.
     // The gate runs the INTEGER-LATTICE form (r19) so the twin
     // reproduces cluster geometry at ANY scale — the float
@@ -444,13 +450,15 @@ object SparkEntry {
     // subquadratic AND hash-checked (r6–r9 used the blocked quadratic
     // ngramJaccardPairs here, the gate's only weak components, because
     // the xxhash banding wasn't SQL-expressible)
-    "dedup_minhash_md5" -> ((s, dir) => Dedup.minhashMd5Pairs(Tables.documents(s, dir))),
+    "dedup_minhash_md5" -> ((s, dir) =>
+      Dedup.minhashMd5PairsUnsorted(Tables.documents(s, dir)).orderBy(col("id_a"), col("id_b"))),
     // the banded family's canonical twin (r18): the same generator +
     // verify over the canonical token stream, hash-verified like
     // dedup_exact_canon — proving the canon threading through the
     // banding/verify machinery cross-engine, not just per-expression
     "dedup_minhash_md5_canon" -> ((s, dir) =>
-      Dedup.minhashMd5Pairs(Tables.documents(s, dir), canonical = true)),
+      Dedup.minhashMd5PairsUnsorted(Tables.documents(s, dir), canonical = true)
+        .orderBy(col("id_a"), col("id_b"))),
     // the banded family's ROUTED twin (r18): Han-suffixed variants
     // planted on the %10 stripe shingle RAW (the router keeps their
     // non-Latin token) while the ASCII corpus shingles canonically —
@@ -465,7 +473,7 @@ object SparkEntry {
         .unionByName(d.filter(col("doc_id") % 10 === 0)
           .select((col("doc_id") + 200000L).as("doc_id"),
             concat(col("text"), lit(" 再見")).as("text")))
-      Dedup.minhashMd5Pairs(planted, routed = true)
+      Dedup.minhashMd5PairsUnsorted(planted, routed = true).orderBy(col("id_a"), col("id_b"))
     }),
     // the THRESHOLDED routed twin (r20): minLossFs = 100 threaded
     // through the banding/verify machinery — a one-glyph Cyrillic
@@ -484,14 +492,17 @@ object SparkEntry {
         .unionByName(d.filter(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 200000L).as("doc_id"),
             concat(col("text"), lit(" д")).as("text")))
-      Dedup.minhashMd5Pairs(planted, routed = true, minLossFs = 100L)
+      Dedup.minhashMd5PairsUnsorted(planted, routed = true, minLossFs = 100L)
+        .orderBy(col("id_a"), col("id_b"))
     }),
     // the simhash family's oracle bridge (r11): md5-derived bits make
     // the fingerprints, the banded candidates, and the hamming verify
     // SQL-expressible — production path stays dedup_simhash
-    "dedup_simhash_md5" -> ((s, dir) => Dedup.simhashMd5Pairs(Tables.documents(s, dir))),
+    "dedup_simhash_md5" -> ((s, dir) =>
+      Dedup.simhashMd5Pairs(Tables.documents(s, dir)).orderBy(col("id_a"), col("id_b"))),
     "dedup_simhash_md5_canon" -> ((s, dir) =>
-      Dedup.simhashMd5Pairs(Tables.documents(s, dir), canonical = true)),
+      Dedup.simhashMd5Pairs(Tables.documents(s, dir), canonical = true)
+        .orderBy(col("id_a"), col("id_b"))),
     // the simhash family's ROUTED twin (r18): same planted stripes as
     // dedup_minhash_md5_routed, fingerprints over the routed stream
     "dedup_simhash_md5_routed" -> ((s, dir) => {
@@ -503,23 +514,17 @@ object SparkEntry {
         .unionByName(d.filter(col("doc_id") % 10 === 0)
           .select((col("doc_id") + 200000L).as("doc_id"),
             concat(col("text"), lit(" 再見")).as("text")))
-      Dedup.simhashMd5Pairs(planted, routed = true)
+      Dedup.simhashMd5Pairs(planted, routed = true).orderBy(col("id_a"), col("id_b"))
     }),
     "dedup_apply" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      // unsorted pair form (r22): applyPairs only reads the id_b SET,
-      // and the sorted form's ORDER BY survives into the consumer leg
-      // — same drops, one sample+sort pass less
       Dedup.applyPairs(docs, Dedup.minhashMd5PairsUnsorted(docs))
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
     }),
     "dedup_apply_cc" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      // unsorted pair form (r22): the CC edges union carried the
-      // generator's ORDER BY in BOTH legs and re-ran the verify stage
-      // twice racing its lazy cache — labels identical by construction
-      Dedup.ccLabels(docs, Dedup.minhashMd5PairsUnsorted(docs))
+      Dedup.ccLabels(docs, Dedup.minhashMd5PairsUnsorted(docs)).orderBy(col("doc_id"))
     }),
     // the xxhash-LSH apply compositions: same greedy/cc application,
     // pairs from the BIGRAM ngram-LSH generator (rows-only keys — the
@@ -558,12 +563,13 @@ object SparkEntry {
     "text_repetition" -> ((s, dir) => TextAnalysis.repetition(Tables.documents(s, dir))),
     "text_contamination" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      TextAnalysis.contamination(docs, docs.filter(col("doc_id") % 50 === 0))
+      TextAnalysis.contaminationAcct(docs, docs.filter(col("doc_id") % 50 === 0))
+        .orderBy(col("doc_id"))
     }),
     "text_contamination_canon" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      TextAnalysis.contamination(docs, docs.filter(col("doc_id") % 50 === 0),
-        canonical = true)
+      TextAnalysis.contaminationAcct(docs, docs.filter(col("doc_id") % 50 === 0),
+        canonical = true).orderBy(col("doc_id"))
     }),
     "text_vocabulary" -> ((s, dir) => TextAnalysis.vocabulary(Tables.documents(s, dir))),
     // whitespace-robust vocabulary (r19): messy input planted from the
@@ -614,7 +620,8 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       TextAnalysis.lmScore(docs, docs.filter(col("doc_id") % 2 === 0))
     }),
-    "text_chunk" -> ((s, dir) => TextAnalysis.chunk(Tables.documents(s, dir))),
+    "text_chunk" -> ((s, dir) => TextAnalysis.chunkPieces(Tables.documents(s, dir))
+      .orderBy(col("doc_id"), col("chunk_idx"))),
     "text_passage_dedup" -> ((s, dir) => TextAnalysis.passageDedup(Tables.documents(s, dir))),
     "text_span_dedup" -> ((s, dir) => TextAnalysis.spanDedup(Tables.documents(s, dir))),
     "text_span_dedup_canon" -> ((s, dir) =>
@@ -709,11 +716,12 @@ object SparkEntry {
     // (→ changed) — everything else unchanged and dropped
     "snapshot_diff" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      Snapshot.diff(
+      Snapshot.churn(
         docs.filter(col("doc_id") % 10 =!= 3),
         docs.filter(col("doc_id") % 10 =!= 7)
           .withColumn("text", when(col("doc_id") % 10 === 1,
             concat(col("text"), lit(" v2"))).otherwise(col("text"))))
+        .orderBy(col("doc_id"))
     }),
     "pipeline_curate" -> ((s, dir) => Pipeline.curate(Tables.documents(s, dir))),
     // the auto-keying DECISION FRAME (r20): the gate corpus is ASCII,
@@ -740,10 +748,7 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
     // the composed end-to-end training layout: curate → chunk → pack
-    // (rows-only — the curation stage is LSH-based, not SQL-expressible;
-    // the UNSORTED writer form: a rows-only check gains nothing from
-    // prepareTraining's reporting ORDER BY, whose range-sampling pass
-    // would execute the whole curate/LSH/pack chain twice)
+    // (rows-only — the curation stage is LSH-based, not SQL-expressible)
     "pipeline_training" -> ((s, dir) => Pipeline.prepareTrainingPieces(Tables.documents(s, dir)))
   )
 

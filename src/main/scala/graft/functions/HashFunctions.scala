@@ -49,7 +49,7 @@ object HashFunctions {
   }
 
   /** Carter-Wegman coefficients for the CROSS-ENGINE md5-minhash
-    * family (Dedup.minhashMd5Pairs and its DuckDB oracle twin):
+    * family (Dedup.minhashMd5PairsUnsorted and its DuckDB oracle twin):
     * h_i(tok) = (a_i·h1 + b_i·h2) mod Prime, where h1/h2 are the two
     * 28-bit halves of ONE md5 digest per token (hex chars 1–7 and
     * 8–14). One digest replaces the previous perms-digests-per-token
@@ -90,7 +90,7 @@ object HashFunctions {
     * over one md5 digest per token, [[md5CwParams]]) as ONE array
     * column, computed by the native one-pass kernel:
     * sig[p] = min over tokens of (a_p·h1 + b_p·h2) mod Prime — the
-    * signature [[graft.operators.Dedup.minhashMd5Pairs]] and its
+    * signature [[graft.operators.Dedup.minhashMd5PairsUnsorted]] and its
     * DuckDB oracle twin band on. NULL array → SQL NULL; a null
     * ELEMENT drops out of every minimum.
     */

@@ -70,7 +70,7 @@ object TextFunctions {
     * parameter by the gram/digest families ([[graft.operators
     * .TextAnalysis.spanDedup]], [[graft.operators.SpanIndex]],
     * [[graft.operators.TextAnalysis.passageDedup]], [[graft.operators
-    * .Dedup.exact]], [[graft.operators.TextAnalysis.contamination]]) —
+    * .Dedup.exact]], [[graft.operators.TextAnalysis.contaminationAcct]]) —
     * the canonical stream is a KEY domain, not a display form.
     *
     * Cross-engine contract: the DuckDB twin is

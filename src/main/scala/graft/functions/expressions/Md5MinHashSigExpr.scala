@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, N
 import graft.functions.HashFunctions
 
 /** Native CROSS-ENGINE md5-minhash signature: the `perms` per-permutation
-  * minima of [[graft.operators.Dedup.minhashMd5Pairs]]'s Carter-Wegman
+  * minima of [[graft.operators.Dedup.minhashMd5PairsUnsorted]]'s Carter-Wegman
   * family in ONE pass over the token array —
   *
   *   h        = first 56 bits of md5(tok)   (hex chars 1–14)

@@ -282,18 +282,13 @@ object Dedup {
     // exact-Jaccard verify: one set-intersection per UNIQUE candidate
     val ta = shingled.select(col("doc_id").as("id_a"), col("toks").as("toks_a"))
     val tb = shingled.select(col("doc_id").as("id_b"), col("toks").as("toks_b"))
-    // persist before the global sort: range-partitioned ORDER BY runs
-    // a sampling pass over its input — without the persist the whole
-    // pair-verify map stage executes twice
     val verified = candidates.join(ta, "id_a").join(tb, "id_b")
       .select(col("id_a"), col("id_b"),
         jaccardFs(col("toks_a"), col("toks_b")).as("jac_fs"))
       .filter(col("jac_fs") >= minJaccardFs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // structural release: both operator-owned persists drop after the
-    // caller's first terminal action consumes them
-    ScopedCache.releaseAfterAction(
-      verified.orderBy(col("id_a"), col("id_b")), Seq(shingled, verified))
+    // structural release: the shingle persist drops after the caller's
+    // first terminal action consumes it
+    ScopedCache.releaseAfterAction(verified, Seq(shingled))
   }
 
   /** The cross-engine-REPRODUCIBLE twin of [[minhashLsh]]: identical
@@ -325,57 +320,19 @@ object Dedup {
     * ([[graft.functions.HashFunctions.lshCollisionProb]]); the
     * default verify threshold here is the apply-composition setting
     * (J ≥ 0.9, collision ≈ 89% at the 4×8 default).
-    */
-  def minhashMd5Pairs(docs0: DataFrame, perms: Int = 32, bands: Int = 4,
-                      minJaccardFs: Long = 9000L,
-                      canonical: Boolean = false,
-                      routed: Boolean = false, minLossFs: Long = 0L): DataFrame = {
-    val (pairs, shingled) =
-      minhashMd5PairsAndCache(docs0, perms, bands, minJaccardFs, canonical, routed, minLossFs)
-    // persist before the global sort: range-partitioned ORDER BY runs
-    // a sampling pass over its input — without the persist the whole
-    // pair-verify map stage executes twice
-    val verified = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ScopedCache.releaseAfterAction(
-      verified.orderBy(col("id_a"), col("id_b")), Seq(shingled, verified))
-  }
-
-  /** [[minhashMd5Pairs]] without the final global sort — the form
-    * downstream consumers ([[applyPairs]], [[ccLabels]]) should take,
-    * mirroring [[ngramLshPairs]] (r22): the sorted form's
-    * range-partitioned ORDER BY survives into every consumer leg the
-    * optimizer can't prove order-irrelevant — measured in
-    * dedup_apply_cc's edges union, where BOTH legs carried the
-    * sample-then-sort pass. Like [[ngramLshPairs]], the verified frame
-    * is NOT persisted here: a consumer that reads the pairs more than
-    * once (the CC edges union) must materialize them once itself —
-    * [[ccLabels]] does (and an operator-side
-    * eager pin is NOT an option: the scoped-release listener bus is
-    * asynchronous, so a pin action completed just before registration
-    * is delivered to the fresh listener and self-releases the caches
-    * it was meant to protect — measured as full generator recomputes
-    * on every downstream leg).
+    *
+    * Rows come back unordered, like every pair generator here. The
+    * verified frame is NOT persisted: a consumer that reads the pairs
+    * more than once (the CC edges union) materializes them once itself,
+    * as [[ccLabels]] does. An operator-side eager pin is not an option:
+    * the scoped-release listener bus is asynchronous, so a pin action
+    * completed just before registration is delivered to the fresh
+    * listener and self-releases the caches it was meant to protect.
     */
   def minhashMd5PairsUnsorted(docs0: DataFrame, perms: Int = 32, bands: Int = 4,
                               minJaccardFs: Long = 9000L,
                               canonical: Boolean = false,
                               routed: Boolean = false, minLossFs: Long = 0L): DataFrame = {
-    val (pairs, shingled) =
-      minhashMd5PairsAndCache(docs0, perms, bands, minJaccardFs, canonical, routed, minLossFs)
-    ScopedCache.releaseAfterAction(pairs, Seq(shingled))
-  }
-
-  /** Shared body of [[minhashMd5Pairs]]/[[minhashMd5PairsUnsorted]],
-    * returning the verified pairs UNPERSISTED plus the operator-owned
-    * shingle persist, so each public entry scopes exactly the caches
-    * it creates (the [[ngramLshPairsAndCache]] pattern — the sorted
-    * wrapper persists the pairs itself for its ORDER BY double pass).
-    */
-  private def minhashMd5PairsAndCache(docs0: DataFrame, perms: Int, bands: Int,
-                                      minJaccardFs: Long,
-                                      canonical: Boolean,
-                                      routed: Boolean, minLossFs: Long)
-  : (DataFrame, DataFrame) = {
     require(perms % bands == 0, s"bands must divide perms, got $perms/$bands")
     val docs = Par.spread(canonDocs(docs0, canonical, routed, minLossFs))
     val rowsPerBand = perms / bands
@@ -409,7 +366,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         jaccardFs(col("toks_a"), col("toks_b")).as("jac_fs"))
       .filter(col("jac_fs") >= minJaccardFs)
-    (verified, shingled)
+    ScopedCache.releaseAfterAction(verified, Seq(shingled))
   }
 
   /** SimHash fingerprints: one 64-bit sketch per doc. [[simhashPairs]]
@@ -467,13 +424,11 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         hamming64(col("sh_a"), col("sh_b")).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ScopedCache.releaseAfterAction(
-      verified.orderBy(col("id_a"), col("id_b")), Seq(fp, verified))
+    ScopedCache.releaseAfterAction(verified, Seq(fp))
   }
 
   /** The cross-engine-REPRODUCIBLE twin of [[simhashPairs]] — the
-    * simhash counterpart of [[minhashMd5Pairs]]: identical pigeonhole
+    * simhash counterpart of [[minhashMd5PairsUnsorted]]: identical pigeonhole
     * banding shape, candidate generator, and exact-hamming verify,
     * but every token's 64 bit contributions come off the first 16 hex
     * chars of md5(token) — a digest both Spark and DuckDB implement
@@ -495,7 +450,7 @@ object Dedup {
     * (one codegen'd xxhash-based sketch per doc beats one md5 per
     * token); this twin exists so the simhash family — previously
     * rows-only by necessity — has a hash-checked gate key, the same
-    * bridge [[minhashMd5Pairs]] built for the minhash family in r10.
+    * bridge [[minhashMd5PairsUnsorted]] built for the minhash family in r10.
     *
     * Plan shape: one native per-doc kernel computes the four chunks
     * map-side (no exchange), and candidates route through the salted
@@ -565,26 +520,13 @@ object Dedup {
         (0 until chunks).map(c => bit_count(col(s"a$c").bitwiseXOR(col(s"b$c"))))
           .reduce(_ + _).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ScopedCache.releaseAfterAction(
-      verified.orderBy(col("id_a"), col("id_b")), Seq(fp, verified))
+    ScopedCache.releaseAfterAction(verified, Seq(fp))
   }
 
   /** Blocked word-set Jaccard pairs: candidates share a metadata block
     * (lang × length-bucket) — the classic cheap blocking key; exact
     * Jaccard computed only within blocks. jac_fs = floor(1e4·J).
-    */
-  def ngramJaccard(docs: DataFrame, thresholdFs: Long = 9000L,
-                   canonical: Boolean = false,
-                   routed: Boolean = false, minLossFs: Long = 0L): DataFrame =
-    ngramJaccardPairs(docs, thresholdFs, canonical, routed, minLossFs)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** [[ngramJaccard]] without the final global sort — the form
-    * downstream consumers ([[applyPairs]], [[ccLabels]]) should take:
-    * a range-partitioned ORDER BY runs a sampling pass over its input,
-    * so feeding the sorted frame into another shuffle executes the
-    * whole blocked verify twice and then throws the order away.
+    * Rows come back unordered.
     */
   def ngramJaccardPairs(docs: DataFrame, thresholdFs: Long = 9000L,
                         canonical: Boolean = false,
@@ -609,7 +551,7 @@ object Dedup {
   }
 
   /** Scale-safe word n-gram Jaccard pairs: the LSH replacement for
-    * the blocked [[ngramJaccard]]. Candidates come from MinHash band
+    * the blocked [[ngramJaccardPairs]]. Candidates come from MinHash band
     * buckets over the n-gram shingle sets (equi-join on (band,
     * bucket), cost ∝ Σ bucket², independent of corpus size); the
     * exact n-gram-set Jaccard verify runs only on candidates.
@@ -631,51 +573,21 @@ object Dedup {
     * an empty shingle set has Jaccard 0 to everything, and binning
     * empty signatures would otherwise funnel every short doc into one
     * degenerate mega-bucket.
-    */
-  def ngramLsh(docs0: DataFrame, n: Int = 2, perms: Int = 32, bands: Int = 8,
-               thresholdFs: Long = 9000L, canonical: Boolean = false,
-               routed: Boolean = false, minLossFs: Long = 0L): DataFrame = {
-    val (pairs, shingled) =
-      ngramLshPairsAndCache(docs0, n, perms, bands, thresholdFs, canonical, routed, minLossFs)
-    // persist before the global sort (ORDER BY samples its input)
-    val verified = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ScopedCache.releaseAfterAction(
-      verified.orderBy(col("id_a"), col("id_b")), Seq(shingled, verified))
-  }
-
-  /** [[ngramLsh]] without the final global sort — the form downstream
-    * consumers ([[applyPairs]], [[ccLabels]]) should take, mirroring
-    * [[ngramJaccardPairs]]: a range-partitioned ORDER BY samples its
-    * input, so feeding the sorted frame into another shuffle executes
-    * the whole LSH verify twice and then throws the order away. This
-    * is the SCALE-SAFE pair source for corpus-level dedup application
-    * (the blocked [[ngramJaccardPairs]] is the bounded oracle
-    * baseline).
+    *
+    * This is the SCALE-SAFE pair source for corpus-level dedup
+    * application ([[applyPairs]], [[ccLabels]]); the blocked
+    * [[ngramJaccardPairs]] is the bounded oracle baseline. Rows come
+    * back unordered. `routed` (r18) shingles through
+    * [[TextAnalysis.maybeKeyed]]'s script router: non-Latin docs gram
+    * raw (their shingles KEEP the content canonical keying would
+    * strip — two mixed docs sharing a Latin half but differing in Han
+    * content no longer reach J = 1), pure-Latin docs gram canonically.
+    * Empty-canonical docs yield no grams either way (the `size > 0`
+    * filter), so no empty-drop special case is needed here.
     */
   def ngramLshPairs(docs0: DataFrame, n: Int = 2, perms: Int = 32, bands: Int = 8,
                     thresholdFs: Long = 9000L, canonical: Boolean = false,
                     routed: Boolean = false, minLossFs: Long = 0L): DataFrame = {
-    val (pairs, shingled) =
-      ngramLshPairsAndCache(docs0, n, perms, bands, thresholdFs, canonical, routed, minLossFs)
-    ScopedCache.releaseAfterAction(pairs, Seq(shingled))
-  }
-
-  /** Shared body of [[ngramLsh]]/[[ngramLshPairs]], returning the
-    * operator-owned shingle persist alongside the verified pairs so
-    * each public entry can scope exactly the caches it creates.
-    * `routed` (r18) shingles through [[TextAnalysis.maybeKeyed]]'s
-    * script router: non-Latin docs gram raw (their shingles KEEP the
-    * content canonical keying would strip — two mixed docs sharing a
-    * Latin half but differing in Han content no longer reach J = 1),
-    * pure-Latin docs gram canonically. Empty-canonical docs yield no
-    * grams either way (the `size > 0` filter), so no empty-drop
-    * special case is needed here.
-    */
-  private def ngramLshPairsAndCache(docs0: DataFrame, n: Int, perms: Int, bands: Int,
-                                    thresholdFs: Long,
-                                    canonical: Boolean = false,
-                                    routed: Boolean = false,
-                                    minLossFs: Long = 0L): (DataFrame, DataFrame) = {
     val docs = Par.spread(TextAnalysis.maybeKeyed(docs0, canonical, routed, minLossFs))
     val rowsPerBand = perms / bands
     val grams = sort_array(graft.functions.TextFunctions.distinctWordNgrams(tokens(col("text")), n)) // sorted per doc (r21): graft_jaccard_fs merge path
@@ -699,7 +611,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         jaccardFs(col("grams_a"), col("grams_b")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
-    (pairs, shingled)
+    ScopedCache.releaseAfterAction(pairs, Seq(shingled))
   }
 
   /** Scale-safe embedding-cosine near-dup pairs: the SRP-LSH
@@ -824,9 +736,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         floor(lit(10000.0) * cosineWithNorms(col("va"), col("vb"), col("na"), col("nb"))).as("cos_fs"))
       .filter(col("cos_fs") >= thresholdFs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ScopedCache.releaseAfterAction(
-      verified.orderBy(col("id_a"), col("id_b")), Seq(e, verified))
+    ScopedCache.releaseAfterAction(verified, Seq(e))
   }
 
   /** SemDeDup-style SEMANTIC dedup (the public algorithm of Abbas et
@@ -1083,7 +993,7 @@ object Dedup {
     * sets near-duplicate docs in `reference` — the incremental-crawl
     * dedup every growing training corpus runs ("is this new document
     * already in (or nearly in) what we have?"), and the near-dup
-    * escalation of [[graft.operators.TextAnalysis.contamination]].
+    * escalation of [[graft.operators.TextAnalysis.contaminationAcct]].
     *
     * Same MinHash banding + exact-verify design as [[ngramLshPairs]],
     * with the candidate join between the two corpora instead of a
@@ -1128,14 +1038,12 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // eager: materialize the verified pair set (slim rows, volume ∝
     // true dups) so BOTH corpus-scale shingle caches can be dropped
-    // here instead of leaking into the caller's session; the returned
-    // sort reads the small persisted frame, which is itself scoped to
-    // the caller's first action
+    // here instead of leaking into the caller's session; the small
+    // persisted pair frame is itself scoped to the caller's first action
     verified.count()
     si.unpersist(false)
     sr.unpersist(false)
-    ScopedCache.releaseAfterAction(
-      verified.orderBy(col("id_in"), col("id_ref")), Seq(verified))
+    ScopedCache.releaseAfterAction(verified, Seq(verified))
   }
 
   /** Persist a reference corpus's n-gram LSH index for INCREMENTAL
@@ -1409,8 +1317,7 @@ object Dedup {
     // ngramLshAgainst's corpus-cache hygiene)
     verified.count()
     si.unpersist(false)
-    ScopedCache.releaseAfterAction(
-      verified.orderBy(col("id_in"), col("id_ref")), Seq(verified))
+    ScopedCache.releaseAfterAction(verified, Seq(verified))
   }
 
   /** Apply near-dup pairs to a corpus: greedy keep-lowest-id policy —
@@ -1462,9 +1369,9 @@ object Dedup {
     * [[starCcLabels]] is the O(log d) star-contraction path for deep
     * chains.
     *
-    * Output: (doc_id, rep_id) for EVERY corpus doc — unpaired docs
-    * represent themselves. Keep rows where doc_id = rep_id for the
-    * canonical corpus.
+    * Output: (doc_id, rep_id) for EVERY corpus doc, unordered —
+    * unpaired docs represent themselves. Keep rows where
+    * doc_id = rep_id for the canonical corpus.
     *
     * Scale shape (r6): the iteration runs over the pair graph's
     * VERTEX SET only — an unpaired doc's label can never change, so
@@ -1513,7 +1420,6 @@ object Dedup {
     // both edge directions are present, so `u` alone covers every vertex
     var labels = edges.select(col("u").as("doc_id")).distinct()
       .withColumn("lbl", col("doc_id"))
-    var prevCached: DataFrame = null
     var changed = 1L
     var it = 0
     while (changed > 0 && it < iters) {
@@ -1524,39 +1430,30 @@ object Dedup {
       // separate join back to `labels`. Only the self row carries the
       // previous label (non-null), so max(old) recovers it in the
       // SAME aggregate for the fixed-point check.
+      //
+      // `labels` appears twice in this plan, so an unbroken lineage
+      // doubles the analyzed plan every round (50 rounds ran a 3 GB
+      // driver out of heap rendering the plan). The LAZY local
+      // checkpoint cuts the plan at each round's frontier, and its
+      // blocks materialize inside the changed-label count below — one
+      // action per round does both
       val next = edges
         .join(labels.select(col("doc_id").as("v"), col("lbl").as("nlbl")), "v")
         .select(col("u").as("doc_id"), col("nlbl"), lit(null).cast("long").as("old"))
         .unionByName(labels.select(col("doc_id"), col("lbl").as("nlbl"), col("lbl").as("old")))
         .groupBy(col("doc_id"))
         .agg(min(col("nlbl")).as("lbl"), max(col("old")).as("old_lbl"))
-        .persist(MEMORY_AND_DISK)
-      // one action does double duty: EAGER frontier materialization
-      // (`labels` appears twice in each next-round plan, so an
-      // unbroken lazy lineage replays the base 2^iters times) AND the
-      // fixed-point check — the changed-label count is a partial agg
-      // over the frame we must materialize anyway
+        .localCheckpoint(eager = false)
       changed = next.filter(col("lbl") < col("old_lbl")).count()
-      // the new frontier is materialized, so the previous round's
-      // cache (which it was computed from) can go
-      if (prevCached != null) prevCached.unpersist(false)
-      prevCached = next
       labels = next.select(col("doc_id"), col("lbl"))
       it += 1
     }
-    edges.unpersist(false)
     if (changed > 0)
       System.err.println(s"[graft] ccLabels: not converged after $iters rounds " +
         s"($changed labels still changing) — chains deeper than $iters hops remain split")
-    // the FINAL frontier stays cached until the caller's first action
-    // — the returned ORDER BY samples its input, so dropping it
-    // earlier would re-run the last round's joins twice
-    ScopedCache.releaseAfterAction(
-      docs.select(col(idCol).cast("long").as("doc_id"))
-        .join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep_id"))
-        .orderBy(col("doc_id")),
-      Seq(prevCached).filter(_ != null))
+    docs.select(col(idCol).cast("long").as("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep_id"))
   }
 
   /** Connected components by ALTERNATING STAR CONTRACTION — the known
@@ -1653,13 +1550,9 @@ object Dedup {
     val labels = edges.select(col("hi").as("doc_id"), col("lo").as("lbl"))
       .unionByName(edges.select(col("lo").as("doc_id"), col("lo").as("lbl")))
       .groupBy(col("doc_id")).agg(min(col("lbl")).as("lbl"))
-    // no caller-owned cache entry here (unlike ccLabels): the final
-    // edge frame is a checkpoint, so the ORDER BY's sampling pass
-    // re-reads materialized blocks, not the pair pipeline
     docs.select(col(idCol).cast("long").as("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep_id"))
-      .orderBy(col("doc_id"))
   }
 
   /** Exact-dedup PRE-PASS around pair-based CC labeling: collapse
@@ -1706,8 +1599,7 @@ object Dedup {
     ScopedCache.releaseAfterAction(
       mapping
         .join(ccSurvivors.select(col("doc_id").as("keep_id"), col("rep_id")), Seq("keep_id"))
-        .select(col("doc_id"), col("rep_id"))
-        .orderBy(col("doc_id")),
+        .select(col("doc_id"), col("rep_id")),
       Seq(mapping))
   }
 
@@ -1727,6 +1619,5 @@ object Dedup {
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
         floor(lit(10000.0) * cos).as("cos_fs"))
       .filter(col("cos_fs") >= thresholdFs)
-      .orderBy(col("id_a"), col("id_b"))
   }
 }

@@ -188,8 +188,6 @@ object Pipeline {
     val exactDeduped = docs.join(keep, Seq("doc_id"), "left_semi")
 
     // 2. near-dup dedup: LSH candidates + exact verify, greedy apply
-    // (the UNSORTED pair form: applyPairs shuffles the ids anyway, so
-    // ngramLsh's global sort would only add a sampling double-run)
     val nearPairs = Dedup.ngramLshPairs(exactDeduped, thresholdFs = lshThresholdFs,
       canonical = canonKeys, routed = routeKeys, minLossFs = effFloor)
     val deduped0 = Dedup.applyPairs(exactDeduped, nearPairs)
@@ -226,7 +224,7 @@ object Pipeline {
   }
 
   /** Benchmark DECONTAMINATION as a filter — the GPT-3/Pile posture
-    * [[TextAnalysis.contamination]] only accounts for: drop every
+    * [[TextAnalysis.contaminationAcct]] only accounts for: drop every
     * document whose word-n-gram overlap with the benchmark/eval set
     * exceeds `maxContamFs` (fixed-point; the default 2000 = 20%
     * trigram overlap flags verbatim members and close paraphrases
@@ -234,7 +232,7 @@ object Pipeline {
     * carry an n-gram have no overlap evidence and are KEPT. Survivors
     * ship with every input column untouched, so the step composes
     * anywhere in the curate chain ([[curate]] → decontaminate →
-    * [[prepareTraining]] is the standard order: dedup first so the
+    * [[prepareTrainingPieces]] is the standard order: dedup first so the
     * gram pass runs once per surviving doc).
     *
     * Scale shape: the benchmark side is BROADCAST (eval sets are
@@ -255,7 +253,7 @@ object Pipeline {
 
   /** The full training-data preprocessing chain, composed end to end:
     * [[curateFull]] (exact dedup → LSH near-dup dedup → quality +
-    * repetition gates → split tag) → [[TextAnalysis.chunk]]
+    * repetition gates → split tag) → [[TextAnalysis.chunkPieces]]
     * (stride-overlapped context windows) →
     * cumulative-offset sequence packing of the CHUNKS into
     * `binTokens` bins — the layout a trainer consumes: each row is
@@ -268,29 +266,9 @@ object Pipeline {
     * pack_group bound keeps every window partition small — same
     * parallelism rule as [[TextAnalysis.pack]]. Added cost over
     * curate: one map-side chunk fan-out + ONE window shuffle.
-    */
-  def prepareTraining(docs: DataFrame,
-                      binTokens: Int = 512,
-                      chunkTokens: Int = 32,
-                      strideTokens: Int = 24,
-                      groupDocs: Int = 1000,
-                      minQualityFs: Long = 5000L,
-                      lshThresholdFs: Long = 9000L,
-                      maxRepetitionFs: Long = 9000L,
-                      salt: String = "graft#",
-                      keying: String = "",
-                      minLossFs: Long = 0L): DataFrame =
-    prepareTrainingPieces(docs, binTokens, chunkTokens, strideTokens, groupDocs,
-      minQualityFs, lshThresholdFs, maxRepetitionFs, salt, keying, minLossFs)
-      .orderBy(col("doc_id"), col("chunk_idx"))
-
-  /** [[prepareTraining]] WITHOUT the final global sort — the form a
-    * writer must consume (same rule as [[TextAnalysis.chunkPieces]]
-    * vs chunk): the reporting ORDER BY's range partitioner runs a
-    * sampling pass that re-executes the whole curate/LSH/pack chain,
-    * and a partitioned write discards row order anyway — sorted
-    * input to `partitionBy` is pure double execution. The sorted
-    * form exists for the oracle gate and human inspection.
+    *
+    * Rows come back unordered: a writer consumes them directly (a
+    * partitioned write discards row order anyway).
     */
   def prepareTrainingPieces(docs: DataFrame,
                             binTokens: Int = 512,
@@ -305,9 +283,6 @@ object Pipeline {
                             minLossFs: Long = 0L): DataFrame = {
     val curated = curateFull(docs, minQualityFs, lshThresholdFs, maxRepetitionFs, salt,
       keying = keying, minLossFs = minLossFs)
-    // the UNSORTED chunk form: the packer's window shuffle follows
-    // immediately, and a mid-pipeline ORDER BY would re-execute the
-    // whole curate/LSH chain for its range-partitioner sampling pass
     val chunks = TextAnalysis
       .chunkPieces(curated, chunkTokens, strideTokens, carryCols = Seq("source", "split"))
       .withColumn("pack_group", floor(col("doc_id") / lit(groupDocs.toDouble)).cast("long"))

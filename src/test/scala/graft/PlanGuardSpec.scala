@@ -40,4 +40,56 @@ class PlanGuardSpec extends SparkSpec {
         assert(!hasCross, s"$name plans an unbounded cross join:\n$plan")
     }
   }
+
+  test("no pair, label, chunk or churn entry point plans a global sort") {
+    // these operators return unordered rows; only the gate
+    // (SparkEntry.queries) orders the keys whose oracle compares rows
+    // by position
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Dedup, Multimodal, Pipeline, Snapshot, TextAnalysis}
+    val docs = Tables.documents(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
+    val odd = docs.filter(col("doc_id") % 2 === 1)
+    val even = docs.filter(col("doc_id") % 2 === 0)
+    Dedup.writeNgramLshIndex(even, "plan_guard_lsh", buckets = 4)
+    val entries: Seq[(String, () => DataFrame)] = Seq(
+      "Dedup.minhashMd5PairsUnsorted" -> (() => Dedup.minhashMd5PairsUnsorted(docs)),
+      "Dedup.ngramLshPairs" -> (() => Dedup.ngramLshPairs(docs)),
+      "Dedup.ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs)),
+      "Dedup.minhashLsh" -> (() => Dedup.minhashLsh(docs)),
+      "Dedup.simhashPairs" -> (() => Dedup.simhashPairs(docs)),
+      "Dedup.simhashMd5Pairs" -> (() => Dedup.simhashMd5Pairs(docs)),
+      "Dedup.chunkBandedPairs" -> (() =>
+        Dedup.chunkBandedPairs(Dedup.simhashMd5Fingerprints(docs), maxHamming = 3)),
+      "Multimodal.imagePhashPairs" -> (() =>
+        Multimodal.imagePhashPairs(Multimodal.imagePayloads(docs.filter(col("doc_id") < 50L)))),
+      "Dedup.cosineLsh" -> (() => Dedup.cosineLsh(emb)),
+      "Dedup.embedCosine" -> (() => Dedup.embedCosine(emb)),
+      "Dedup.ngramLshAgainst" -> (() => Dedup.ngramLshAgainst(odd, even)),
+      "Dedup.ngramLshAgainstIndex" -> (() => Dedup.ngramLshAgainstIndex(odd, "plan_guard_lsh")),
+      "Dedup.ccLabels" -> (() => Dedup.ccLabels(docs, Dedup.ngramLshPairs(docs))),
+      "Dedup.starCcLabels" -> (() => Dedup.starCcLabels(docs, Dedup.ngramLshPairs(docs))),
+      "Dedup.ccLabelsExactFirst" -> (() =>
+        Dedup.ccLabelsExactFirst(docs, Dedup.ngramLshPairs(_), Dedup.ccLabels(_, _))),
+      "TextAnalysis.chunkPieces" -> (() => TextAnalysis.chunkPieces(docs)),
+      "TextAnalysis.contaminationAcct" -> (() =>
+        TextAnalysis.contaminationAcct(docs, docs.filter(col("doc_id") % 50 === 0))),
+      "Pipeline.prepareTrainingPieces" -> (() => Pipeline.prepareTrainingPieces(docs)),
+      "Snapshot.churn" -> (() => Snapshot.churn(even, docs)))
+    try {
+      val sorted = entries.filter { case (_, build) =>
+        build().queryExecution.optimizedPlan.exists {
+          case s: Sort => s.global
+          case _ => false
+        }
+      }.map(_._1)
+      assert(sorted.isEmpty, s"entry points planning a global sort: ${sorted.mkString(", ")}")
+    } finally {
+      // built-but-never-acted results keep their operator caches
+      spark.sharedState.cacheManager.clearCache()
+      Seq("bands", "grams", "meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS plan_guard_lsh_$t"))
+    }
+  }
 }

@@ -30,7 +30,7 @@ class ScopedCacheSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val cases: Seq[(String, () => DataFrame)] = Seq(
       ("minhashLsh", () => Dedup.minhashLsh(docs)),
-      ("ngramLsh", () => Dedup.ngramLsh(docs)),
+      ("ngramLshPairs", () => Dedup.ngramLshPairs(docs)),
       ("ngramLshPairs via applyPairs", () => Dedup.applyPairs(docs, Dedup.ngramLshPairs(docs))),
       ("simhashPairs", () => Dedup.simhashPairs(docs)),
       ("cosineLsh", () => Dedup.cosineLsh(emb)),
@@ -41,10 +41,10 @@ class ScopedCacheSpec extends SparkSpec {
       ("starCcLabels", () => Dedup.starCcLabels(docs, Dedup.ngramLshPairs(docs))),
       ("ccLabelsExactFirst", () => Dedup.ccLabelsExactFirst(docs, Dedup.ngramLshPairs(_),
         (d, p) => Dedup.ccLabels(d, p, iters = 50))),
-      ("minhashMd5Pairs via applyPairs", () =>
-        Dedup.applyPairs(docs, Dedup.minhashMd5Pairs(docs))),
-      ("ccLabels over minhashMd5Pairs", () =>
-        Dedup.ccLabels(docs, Dedup.minhashMd5Pairs(docs))),
+      ("minhashMd5PairsUnsorted via applyPairs", () =>
+        Dedup.applyPairs(docs, Dedup.minhashMd5PairsUnsorted(docs))),
+      ("ccLabels over minhashMd5PairsUnsorted", () =>
+        Dedup.ccLabels(docs, Dedup.minhashMd5PairsUnsorted(docs))),
       ("semanticDedup", () => Dedup.semanticDedup(emb, k = 4)),
       ("lshTopK", () => Similarity.lshTopK(emb)),
       ("ivfTopK", () => Similarity.ivfTopK(emb)),

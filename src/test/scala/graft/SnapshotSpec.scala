@@ -20,7 +20,7 @@ class SnapshotSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("diff classifies added/removed/changed and drops unchanged docs") {
-    val out = Snapshot.diff(oldSnap, newSnap).collect()
+    val out = Snapshot.churn(oldSnap, newSnap).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[String]("change"), r.getAs[String]("old_md5"), r.getAs[String]("new_md5")))
       .toMap
@@ -37,7 +37,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("diff of identical snapshots is empty; diff against empty classifies everything") {
-    assert(Snapshot.diff(oldSnap, oldSnap).count() == 0)
+    assert(Snapshot.churn(oldSnap, oldSnap).count() == 0)
     val empty = oldSnap.filter(lit(false))
     val allAdded = Snapshot.diffStats(empty, newSnap).collect()
       .map(r => r.getAs[String]("change") -> r.getAs[Long]("n_docs")).toMap

@@ -317,7 +317,7 @@ class TextAnalysisSpec extends SparkSpec {
       (3L, "the quick brown fox jumps over") // superset of doc 1's overlap
     ).toDF("doc_id", "text")
     val bench = Seq((100L, "the quick brown fox")).toDF("doc_id", "text")
-    val out = TextAnalysis.contamination(docs, bench).collect()
+    val out = TextAnalysis.contaminationAcct(docs, bench).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_grams"), r.getAs[Long]("n_hit"), r.getAs[Long]("contam_fs"))))
       .toMap
@@ -406,8 +406,8 @@ class TextAnalysisSpec extends SparkSpec {
     // 7 tokens, chunk 4 / stride 3 → chunks at 0,3,6: sizes 4,4,1;
     // ceil(7/3) = 3 chunks exactly
     val d = Seq((1L, "t1 t2 t3 t4 t5 t6 t7"), (2L, "a b")).toDF("doc_id", "text")
-    val out = TextAnalysis.chunk(d, chunkTokens = 4, strideTokens = 3).collect()
-    val c1 = out.filter(_.getAs[Long]("doc_id") == 1L)
+    val out = TextAnalysis.chunkPieces(d, chunkTokens = 4, strideTokens = 3).collect()
+    val c1 = out.filter(_.getAs[Long]("doc_id") == 1L).sortBy(_.getAs[Long]("chunk_idx"))
     assert(c1.map(_.getAs[Long]("chunk_idx")).toSeq == Seq(0L, 1L, 2L))
     assert(c1.map(_.getAs[Long]("n_chunk_tokens")).toSeq == Seq(4L, 4L, 1L))
     // overlap: chunk 0 = t1..t4, chunk 1 = t4..t7 — boundary token
@@ -585,7 +585,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("chunk invariants hold for every document in the corpus") {
     import org.apache.spark.sql.functions.{ceil => sqlCeil, col, countDistinct, lit, max, min, sum}
     val docs = Tables.documents(spark, sfDir)
-    val chunks = TextAnalysis.chunk(docs) // C = 32, S = 24
+    val chunks = TextAnalysis.chunkPieces(docs) // C = 32, S = 24
     val perDoc = chunks.groupBy(col("doc_id"))
       .agg(max(col("chunk_idx")).as("max_idx"), countDistinct(col("chunk_idx")).as("n_chunks"),
         sum(col("n_chunk_tokens")).as("tok_sum"), min(col("n_chunk_tokens")).as("min_tok"))
@@ -742,9 +742,9 @@ class TextAnalysisSpec extends SparkSpec {
       s"canonical chunks collapse the case variant, got $canonP")
     val bench = Seq((100L, "w1 w2 w3")).toDF("doc_id", "text")
     val docs2 = Seq((1L, "W1, W2... W3!")).toDF("doc_id", "text")
-    val rawC = TextAnalysis.contamination(docs2, bench, n = 3)
+    val rawC = TextAnalysis.contaminationAcct(docs2, bench, n = 3)
       .collect()(0).getAs[Long]("n_hit")
-    val canonC = TextAnalysis.contamination(docs2, bench, n = 3, canonical = true)
+    val canonC = TextAnalysis.contaminationAcct(docs2, bench, n = 3, canonical = true)
       .collect()(0).getAs[Long]("n_hit")
     assert(rawC == 0L && canonC == 1L,
       s"canonical contamination catches the punct-varied quote, got raw=$rawC canon=$canonC")

@@ -12,6 +12,12 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-24g} \
+# default heap: half of physical memory, clamped to 2-8 GB, so a heavy
+# main hits its own OutOfMemoryError before the host kills it
+if [ -z "$SPARK_DRIVER_MEM" ]; then
+  SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+    /proc/meminfo 2>/dev/null || echo 2g)"
+fi
+exec java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
