@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -14,37 +12,26 @@ import org.apache.spark.sql.SparkSession
   * MINIMUM is reported: this host carries external CPU noise that
   * inflates single readings 3–10× (see PERF.md), so per-round medians
   * of one run are a lottery — the min across runs is the stable
-  * code-attributable number and makes rounds comparable.
+  * code-attributable number and makes rounds comparable. Every run
+  * is logged to stderr as `[bench] <key> run <i>: <s> s`;
+  * SPARK_GRAFT_BENCH_KEYS=a,b,c times only those keys.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // fresh warehouse per run — see Verify.scala: stored-lifecycle
-      // keys write managed tables, stale locations fail saveAsTable
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver parses the metrics JSON from the
-    // process tail, and a stray WARN interleaved near the final line
-    // broke the r9 capture (BENCH_r09 "parsed": null)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val errors = scala.collection.mutable.ArrayBuffer[String]()
     // SPARK_GRAFT_BENCH_KEYS=a,b,c isolates keys when profiling a hot
     // operator on this noisy host (unset = the full driver contract)
     val only = sys.env.get("SPARK_GRAFT_BENCH_KEYS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(ks contains _._1))
+    // Locale.ROOT: f"" uses the JVM default locale — a comma-decimal
+    // locale would emit invalid JSON and silently break the harness
+    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to runs).map { _ =>
+      val times = (1 to runs).map { i =>
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -52,14 +39,13 @@ object Bench {
         // drop per-operator persisted frames so queries (and repeat
         // runs) time independently — no run rides a predecessor's cache
         spark.sharedState.cacheManager.clearCache()
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        System.err.println(s"[bench] $name run $i: ${fmt(sec)} s")
+        sec
       }
       if (times.exists(_ < 0)) errors += name
       name -> (if (times.forall(_ >= 0)) times.min else -1.0)
     }
-    // Locale.ROOT: f"" uses the JVM default locale — a comma-decimal
-    // locale would emit invalid JSON and silently break the harness
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum

@@ -63,100 +63,73 @@ object IngestRehearsal {
     val b = args.lift(1).map(_.toLong).getOrElse(20000L)
     val outBase = args.lift(2).getOrElse("tmp/ingest_rehearsal")
     require(n >= 2 * b, s"corpus n=$n must cover the batch's planted seed ranges (need >= ${2 * b})")
-    Rehearsals.rmTree(outBase)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", s"$outBase/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    Rehearsals.run("ingest", Some(outBase)) { run =>
+      val spark = run.spark
+      // planted batch composition
+      val nUnch = b / 4          // 25% unchanged re-crawls (doc_ids 0..)
+      val nChg = b / 20          // 5% changed re-crawls
+      val nExact = b / 4         // 25% exact dups under new ids
+      val nNear = b / 10         // 10% near-dups under new ids
+      val nNew = b - nUnch - nChg - nExact - nNear // 35% genuinely new
+      System.err.println(s"[ingest] corpus=$n batch=$b " +
+        s"(unchanged=$nUnch changed=$nChg exact=$nExact near=$nNear new=$nNew)")
 
-    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def timed[T](phase: String)(body: => T): T = {
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      val out = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[ingest] $phase%-14s ${sec}%8.2f s")
-      phases += ((phase, sec))
-      out
+      val name = "ingestrix"
+      val corpus = docs(spark, n)(identity, identity, _ => lit(-1L))
+      run.timed("corpus_write")(Sinks.writeBucketed(corpus, s"${name}_corpus", "doc_id", 64))
+      run.timed("exact_write")(ExactIndex.write(spark.table(s"${name}_corpus"), s"${name}_exact"))
+      run.timed("lsh_write")(Dedup.writeNgramLshIndex(spark.table(s"${name}_corpus"), s"${name}_lsh"))
+
+      // seeds: unchanged reuse corpus seeds 0..; changed draw from a
+      // disjoint 10^9 namespace; exact dups copy corpus seeds 10000..;
+      // near-dups mutate corpus seeds b..; new docs use seeds n.. (never
+      // in the corpus)
+      val batch = docs(spark, nUnch)(identity, identity, _ => lit(-1L))
+        .unionByName(docs(spark, nChg)(i => i + nUnch, i => i + nUnch + 1000000000L, _ => lit(-1L)))
+        .unionByName(docs(spark, nExact)(i => i + n, i => i + 10000L, _ => lit(-1L)))
+        .unionByName(docs(spark, nNear)(i => i + 2 * n, i => i + b, i => i + b))
+        .unionByName(docs(spark, nNew)(i => i + 3 * n, i => i + n, _ => lit(-1L)))
+        .localCheckpoint()
+
+      val r1 = run.timed("ingest_run1")(Pipeline.ingest(batch, name))
+      val corpusAfter1 = spark.table(s"${name}_corpus").count()
+      val r2 = run.timed("ingest_run2")(Pipeline.ingest(batch, name))
+      val corpusAfter2 = spark.table(s"${name}_corpus").count()
+      // applyChanged at volume: the 1000 changed re-crawls retract and
+      // re-process (their new texts are genuinely new, so each re-adds
+      // 1:1 — the corpus size is invariant), paying the documented
+      // LSH-rewrite + corpus-rewrite retraction cost at 100k scale
+      val r3 = run.timed("ingest_run3_apply")(Pipeline.ingest(batch, name, applyChanged = true))
+      val corpusAfter3 = spark.table(s"${name}_corpus").count()
+      val r4 = run.timed("ingest_run4_apply")(Pipeline.ingest(batch, name, applyChanged = true))
+      val corpusAfter4 = spark.table(s"${name}_corpus").count()
+
+      run.check("run1_unchanged", r1.nUnchanged == nUnch)
+      run.check("run1_changed", r1.nChanged == nChg)
+      run.check("run1_added", r1.nAdded == nExact + nNear + nNew)
+      run.check("run1_exact_dups_all_caught", r1.nExactDup == nExact)
+      run.check("run1_near_dups_modeled_recall",
+        r1.nNearDup <= nNear && r1.nNearDup >= (nNear * 98) / 100)
+      run.check("run1_accepted_arithmetic",
+        r1.nAccepted == r1.nAdded - r1.nExactDup - r1.nNearDup)
+      run.check("run1_corpus_grew_by_accepted", corpusAfter1 == n + r1.nAccepted)
+      run.check("run2_idempotent", r2.nAccepted == 0L)
+      run.check("run2_accepted_now_unchanged", r2.nUnchanged == nUnch + r1.nAccepted)
+      run.check("run2_corpus_untouched", corpusAfter2 == corpusAfter1)
+      run.check("run3_changed_applied", r3.nChangedApplied == nChg && r3.nAccepted == nChg)
+      run.check("run3_corpus_size_invariant", corpusAfter3 == corpusAfter2)
+      run.check("run4_apply_idempotent",
+        r4.nChanged == 0L && r4.nAccepted == 0L && corpusAfter4 == corpusAfter3)
+
+      Seq("n_corpus" -> n, "n_batch" -> b,
+        "planted" -> Seq("unchanged" -> nUnch, "changed" -> nChg, "exact" -> nExact,
+          "near" -> nNear, "new" -> nNew),
+        "run1" -> Seq("unchanged" -> r1.nUnchanged, "changed" -> r1.nChanged,
+          "exact_dup" -> r1.nExactDup, "near_dup" -> r1.nNearDup,
+          "accepted" -> r1.nAccepted, "compacted" -> r1.compacted),
+        "run2" -> Seq("accepted" -> r2.nAccepted, "unchanged" -> r2.nUnchanged),
+        "run3_apply" -> Seq("changed_applied" -> r3.nChangedApplied, "accepted" -> r3.nAccepted),
+        "run4_apply" -> Seq("changed" -> r4.nChanged, "accepted" -> r4.nAccepted))
     }
-
-    // planted batch composition
-    val nUnch = b / 4          // 25% unchanged re-crawls (doc_ids 0..)
-    val nChg = b / 20          // 5% changed re-crawls
-    val nExact = b / 4         // 25% exact dups under new ids
-    val nNear = b / 10         // 10% near-dups under new ids
-    val nNew = b - nUnch - nChg - nExact - nNear // 35% genuinely new
-    System.err.println(s"[ingest] corpus=$n batch=$b " +
-      s"(unchanged=$nUnch changed=$nChg exact=$nExact near=$nNear new=$nNew)")
-
-    val name = "ingestrix"
-    val corpus = docs(spark, n)(identity, identity, _ => lit(-1L))
-    timed("corpus_write")(Sinks.writeBucketed(corpus, s"${name}_corpus", "doc_id", 64))
-    timed("exact_write")(ExactIndex.write(spark.table(s"${name}_corpus"), s"${name}_exact"))
-    timed("lsh_write")(Dedup.writeNgramLshIndex(spark.table(s"${name}_corpus"), s"${name}_lsh"))
-
-    // seeds: unchanged reuse corpus seeds 0..; changed draw from a
-    // disjoint 10^9 namespace; exact dups copy corpus seeds 10000..;
-    // near-dups mutate corpus seeds b..; new docs use seeds n.. (never
-    // in the corpus)
-    val batch = docs(spark, nUnch)(identity, identity, _ => lit(-1L))
-      .unionByName(docs(spark, nChg)(i => i + nUnch, i => i + nUnch + 1000000000L, _ => lit(-1L)))
-      .unionByName(docs(spark, nExact)(i => i + n, i => i + 10000L, _ => lit(-1L)))
-      .unionByName(docs(spark, nNear)(i => i + 2 * n, i => i + b, i => i + b))
-      .unionByName(docs(spark, nNew)(i => i + 3 * n, i => i + n, _ => lit(-1L)))
-      .localCheckpoint()
-
-    val r1 = timed("ingest_run1")(Pipeline.ingest(batch, name))
-    val corpusAfter1 = spark.table(s"${name}_corpus").count()
-    val r2 = timed("ingest_run2")(Pipeline.ingest(batch, name))
-    val corpusAfter2 = spark.table(s"${name}_corpus").count()
-    // applyChanged at volume: the 1000 changed re-crawls retract and
-    // re-process (their new texts are genuinely new, so each re-adds
-    // 1:1 — the corpus size is invariant), paying the documented
-    // LSH-rewrite + corpus-rewrite retraction cost at 100k scale
-    val r3 = timed("ingest_run3_apply")(Pipeline.ingest(batch, name, applyChanged = true))
-    val corpusAfter3 = spark.table(s"${name}_corpus").count()
-    val r4 = timed("ingest_run4_apply")(Pipeline.ingest(batch, name, applyChanged = true))
-    val corpusAfter4 = spark.table(s"${name}_corpus").count()
-
-    val checks = Seq(
-      "run1_unchanged" -> (r1.nUnchanged == nUnch),
-      "run1_changed" -> (r1.nChanged == nChg),
-      "run1_added" -> (r1.nAdded == nExact + nNear + nNew),
-      "run1_exact_dups_all_caught" -> (r1.nExactDup == nExact),
-      "run1_near_dups_modeled_recall" ->
-        (r1.nNearDup <= nNear && r1.nNearDup >= (nNear * 98) / 100),
-      "run1_accepted_arithmetic" ->
-        (r1.nAccepted == r1.nAdded - r1.nExactDup - r1.nNearDup),
-      "run1_corpus_grew_by_accepted" -> (corpusAfter1 == n + r1.nAccepted),
-      "run2_idempotent" -> (r2.nAccepted == 0L),
-      "run2_accepted_now_unchanged" -> (r2.nUnchanged == nUnch + r1.nAccepted),
-      "run2_corpus_untouched" -> (corpusAfter2 == corpusAfter1),
-      "run3_changed_applied" -> (r3.nChangedApplied == nChg && r3.nAccepted == nChg),
-      "run3_corpus_size_invariant" -> (corpusAfter3 == corpusAfter2),
-      "run4_apply_idempotent" ->
-        (r4.nChanged == 0L && r4.nAccepted == 0L && corpusAfter4 == corpusAfter3))
-    val allPass = checks.forall(_._2)
-
-    val checkJson = checks.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val phaseJson = phases.map { case (k, s) =>
-      s""""$k":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(s))}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"ingest_rehearsal","n_corpus":$n,"n_batch":$b,""" +
-      s""""planted":{"unchanged":$nUnch,"changed":$nChg,"exact":$nExact,"near":$nNear,"new":$nNew},""" +
-      s""""run1":{"unchanged":${r1.nUnchanged},"changed":${r1.nChanged},"exact_dup":${r1.nExactDup},""" +
-      s""""near_dup":${r1.nNearDup},"accepted":${r1.nAccepted},"compacted":${r1.compacted}},""" +
-      s""""run2":{"accepted":${r2.nAccepted},"unchanged":${r2.nUnchanged}},""" +
-      s""""run3_apply":{"changed_applied":${r3.nChangedApplied},"accepted":${r3.nAccepted}},""" +
-      s""""run4_apply":{"changed":${r4.nChanged},"accepted":${r4.nAccepted}},""" +
-      s""""all_checks_pass":$allPass,"checks":$checkJson,"phases":$phaseJson,"cpus":"$cpus"}""")
-    spark.stop()
-    if (!allPass) sys.exit(1)
   }
 }

@@ -58,13 +58,7 @@ object KMeansJob {
     require(args.length >= 3, "usage: KMeansJob batch|stream <path> <k> [iters|decay]")
     val Array(mode, path, kStr) = args.take(3)
     val k = kStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     mode match {
       case "batch" =>

@@ -307,20 +307,10 @@ object PipelineJob {
     val (mode, in, out) = (args(0), args(1), args(2))
     // lazy: maintain-cohort's 4th argument is a PATH, not a number
     lazy val minQ = if (args.length > 3) args(3).toLong else 5000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // the maintenance modes operate on managed index tables — point
     // the session at the warehouse that holds them
-    val spark = sys.env.get("SPARK_GRAFT_WAREHOUSE")
-      .fold(builder)(w => builder.config("spark.sql.warehouse.dir", w))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(
+      warehouse = sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "spark-warehouse"))
 
     if (mode.startsWith("maintain-")) {
       runMaintain(spark, mode, in, out, args.lift(3))

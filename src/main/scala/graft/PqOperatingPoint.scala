@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Operating-point sweep for the two-stage PQ recall gate: measures
   * recall@5 of [[graft.operators.Pq.adcTopKReranked]] vs the exact
   * cosine baseline at a range of re-rank shortlist depths on a given
@@ -19,16 +17,7 @@ object PqOperatingPoint {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val lists = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
                 else Seq(100, 200, 400, 800)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()
     lists.foreach { s =>

@@ -20,7 +20,8 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   /** events.ts is parquet TIMESTAMP(NANOS), which Spark's parquet
     * reader rejects outright ([PARQUET_TYPE_ILLEGAL]). Sessions must
-    * set spark.sql.legacy.parquet.nanosAsLong=true (Verify/Bench do);
+    * set spark.sql.legacy.parquet.nanosAsLong=true ([[Sessions.local]]
+    * does);
     * the raw nanos then convert here to a µs timestamp via integer
     * division (ns > 2^53 would lose precision in double math).
     */

@@ -51,87 +51,58 @@ object VectorIngestRehearsal {
     val b = args.lift(1).map(_.toLong).getOrElse(8000L)
     val outBase = args.lift(2).getOrElse("tmp/vector_ingest_rehearsal")
     require(n >= b, s"corpus n=$n must cover the batch's planted content range (need >= $b)")
-    Rehearsals.rmTree(outBase)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", s"$outBase/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    Rehearsals.run("vector_ingest", Some(outBase)) { run =>
+      val spark = run.spark
+      val nRepl = b / 4             // 25% replayed ids
+      val nCdup = b / 4             // 25% re-sent content under new ids
+      val nNew = b - nRepl - nCdup  // 50% genuinely new
+      System.err.println(s"[vector_ingest] corpus=$n batch=$b " +
+        s"(replayed=$nRepl content-dup=$nCdup new=$nNew)")
 
-    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def timed[T](phase: String)(body: => T): T = {
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      val out = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[vecingest] $phase%-14s ${sec}%8.2f s")
-      phases += ((phase, sec))
-      out
+      val name = "vecrix"
+      val seedCorpus = vecs(spark, n)(identity, identity)
+      run.timed("index_build")(Pipeline.initVectorIngest(seedCorpus, name,
+        nlist = 32, m = 8, ks = 64, buckets = 32))
+
+      // replayed: ids+content 0..; content dups copy corpus seeds b..
+      // under fresh ids; new vectors use seeds n.. (never in the corpus)
+      val batch = vecs(spark, nRepl)(identity, identity)
+        .unionByName(vecs(spark, nCdup)(i => i + n, i => i + b))
+        .unionByName(vecs(spark, nNew)(i => i + 2 * n, i => i + n))
+        .localCheckpoint()
+
+      val r1 = run.timed("ingest_run1")(Pipeline.vectorIngest(batch, name))
+      val vecsAfter1 = spark.table(s"${name}_vecs").count()
+      val codesAfter1 = spark.table(s"${name}_codes").count()
+      val r2 = run.timed("ingest_run2")(Pipeline.vectorIngest(batch, name))
+      val vecsAfter2 = spark.table(s"${name}_vecs").count()
+
+      // the grown index still answers: a stored-index query over a few
+      // seed vectors must return exactly k ranked neighbors each with
+      // sane fixed-point cosines (structural sanity — the index has no
+      // exact twins BY CONSTRUCTION, content dedup removed them; recall
+      // quality is the recallGate key's job, not this rehearsal's)
+      val qOk = run.timed("query_sanity") {
+        val q = seedCorpus.filter(col("vec_id") < 5)
+        val hits = IvfPq.queryIndex(q, name, nprobe = 4, k = 3, shortlist = 30).collect()
+        hits.length == 15 &&
+          hits.forall(r => r.getAs[Long]("cos_fs") <= 1000000L && r.getAs[Long]("rnk") <= 3L)
+      }
+
+      run.check("run1_counts_match_planted",
+        r1 == Pipeline.VectorIngestReport(b, nRepl, nCdup, nNew, r1.reclustered))
+      run.check("run1_vecs_grew_by_new", vecsAfter1 == n + nNew)
+      run.check("run1_codes_match_vecs", codesAfter1 == vecsAfter1)
+      run.check("run2_idempotent",
+        r2 == Pipeline.VectorIngestReport(b, nRepl + nNew, nCdup, 0L, false))
+      run.check("run2_stores_untouched", vecsAfter2 == vecsAfter1)
+      run.check("query_sanity", qOk)
+
+      Seq("n_corpus" -> n, "n_batch" -> b,
+        "planted" -> Seq("replayed" -> nRepl, "content_dup" -> nCdup, "new" -> nNew),
+        "run1" -> Seq("known_id" -> r1.nKnownId, "known_content" -> r1.nKnownContent,
+          "appended" -> r1.nAppended, "reclustered" -> r1.reclustered),
+        "run2" -> Seq("known_id" -> r2.nKnownId, "appended" -> r2.nAppended))
     }
-
-    val nRepl = b / 4             // 25% replayed ids
-    val nCdup = b / 4             // 25% re-sent content under new ids
-    val nNew = b - nRepl - nCdup  // 50% genuinely new
-    System.err.println(s"[vecingest] corpus=$n batch=$b " +
-      s"(replayed=$nRepl content-dup=$nCdup new=$nNew)")
-
-    val name = "vecrix"
-    val seedCorpus = vecs(spark, n)(identity, identity)
-    timed("index_build")(Pipeline.initVectorIngest(seedCorpus, name,
-      nlist = 32, m = 8, ks = 64, buckets = 32))
-
-    // replayed: ids+content 0..; content dups copy corpus seeds b..
-    // under fresh ids; new vectors use seeds n.. (never in the corpus)
-    val batch = vecs(spark, nRepl)(identity, identity)
-      .unionByName(vecs(spark, nCdup)(i => i + n, i => i + b))
-      .unionByName(vecs(spark, nNew)(i => i + 2 * n, i => i + n))
-      .localCheckpoint()
-
-    val r1 = timed("ingest_run1")(Pipeline.vectorIngest(batch, name))
-    val vecsAfter1 = spark.table(s"${name}_vecs").count()
-    val codesAfter1 = spark.table(s"${name}_codes").count()
-    val r2 = timed("ingest_run2")(Pipeline.vectorIngest(batch, name))
-    val vecsAfter2 = spark.table(s"${name}_vecs").count()
-
-    // the grown index still answers: a stored-index query over a few
-    // seed vectors must return exactly k ranked neighbors each with
-    // sane fixed-point cosines (structural sanity — the index has no
-    // exact twins BY CONSTRUCTION, content dedup removed them; recall
-    // quality is the recallGate key's job, not this rehearsal's)
-    val qOk = timed("query_sanity") {
-      val q = seedCorpus.filter(col("vec_id") < 5)
-      val hits = IvfPq.queryIndex(q, name, nprobe = 4, k = 3, shortlist = 30).collect()
-      hits.length == 15 &&
-        hits.forall(r => r.getAs[Long]("cos_fs") <= 1000000L && r.getAs[Long]("rnk") <= 3L)
-    }
-
-    val checks = Seq(
-      "run1_counts_match_planted" ->
-        (r1 == Pipeline.VectorIngestReport(b, nRepl, nCdup, nNew, r1.reclustered)),
-      "run1_vecs_grew_by_new" -> (vecsAfter1 == n + nNew),
-      "run1_codes_match_vecs" -> (codesAfter1 == vecsAfter1),
-      "run2_idempotent" ->
-        (r2 == Pipeline.VectorIngestReport(b, nRepl + nNew, nCdup, 0L, false)),
-      "run2_stores_untouched" -> (vecsAfter2 == vecsAfter1),
-      "query_sanity" -> qOk)
-    val allPass = checks.forall(_._2)
-
-    val checkJson = checks.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val phaseJson = phases.map { case (k, s) =>
-      s""""$k":${String.format(java.util.Locale.ROOT, "%.2f", Double.box(s))}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"vector_ingest_rehearsal","n_corpus":$n,"n_batch":$b,""" +
-      s""""planted":{"replayed":$nRepl,"content_dup":$nCdup,"new":$nNew},""" +
-      s""""run1":{"known_id":${r1.nKnownId},"known_content":${r1.nKnownContent},""" +
-      s""""appended":${r1.nAppended},"reclustered":${r1.reclustered}},""" +
-      s""""run2":{"known_id":${r2.nKnownId},"appended":${r2.nAppended}},""" +
-      s""""all_checks_pass":$allPass,"checks":$checkJson,"phases":$phaseJson,"cpus":"$cpus"}""")
-    spark.stop()
-    if (!allPass) sys.exit(1)
   }
 }

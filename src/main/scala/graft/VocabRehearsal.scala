@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, TextAnalysis, VocabTable}
@@ -49,131 +49,110 @@ object VocabRehearsal {
     val d = args.lift(0).map(_.toLong).getOrElse(1048576L)
     val merges = args.lift(1).map(_.toInt).getOrElse(3000)
     require(d % K == 0 && d >= 4L * K, s"D=$d must be a multiple of $K, >= ${4 * K}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // managed count tables: fresh warehouse per run (the
-      // LOCATION_ALREADY_EXISTS lesson shared by every rehearsal)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("vocab_rehearsal_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    Rehearsals.run("vocab", None) { run =>
+      val spark = run.spark
+      import spark.implicits._
 
-    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def timed[R](phase: String)(body: => R): R = {
-      val t0 = System.nanoTime()
-      val out = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[vocab] $phase%-18s ${sec}%8.2f s")
-      phases += ((phase, sec))
-      out
-    }
+      // ---- the planted corpus (pure function of (doc_id, pos)) ----------
+      val abc = typedlit(Seq("a", "b", "c", "d"))
+      def base4(m: org.apache.spark.sql.Column) =
+        concat_ws("", transform(sequence(lit(6), lit(0), lit(-1)),
+          j => element_at(abc, ((m.cast("long") / pow(lit(4), j).cast("long"))
+            .cast("long") % 4 + 1).cast("int"))))
+      def coreTok(m: org.apache.spark.sql.Column) = concat(lit("w"), base4(m))
+      def tokenAt(i: org.apache.spark.sql.Column) =
+        when(i <= 15, coreTok((col("doc_id") + i) % K))
+          .when(i <= 18, coreTok(col("doc_id") % K))
+          .otherwise(concat(lit("u"), col("doc_id").cast("string"), lit("_"),
+            (i - 19).cast("string")))
+      def docsRange(lo: Long, hi: Long): DataFrame =
+        spark.range(lo, hi).select(col("id").as("doc_id"))
+          .select(col("doc_id"),
+            concat_ws(" ", transform(sequence(lit(0), lit(21)), i => tokenAt(i))).as("text"))
+      def docs = docsRange(0L, d)
 
-    // ---- the planted corpus (pure function of (doc_id, pos)) ----------
-    val abc = typedlit(Seq("a", "b", "c", "d"))
-    def base4(m: org.apache.spark.sql.Column) =
-      concat_ws("", transform(sequence(lit(6), lit(0), lit(-1)),
-        j => element_at(abc, ((m.cast("long") / pow(lit(4), j).cast("long"))
-          .cast("long") % 4 + 1).cast("int"))))
-    def coreTok(m: org.apache.spark.sql.Column) = concat(lit("w"), base4(m))
-    def tokenAt(i: org.apache.spark.sql.Column) =
-      when(i <= 15, coreTok((col("doc_id") + i) % K))
-        .when(i <= 18, coreTok(col("doc_id") % K))
-        .otherwise(concat(lit("u"), col("doc_id").cast("string"), lit("_"),
-          (i - 19).cast("string")))
-    def docsRange(lo: Long, hi: Long): DataFrame =
-      spark.range(lo, hi).select(col("id").as("doc_id"))
-        .select(col("doc_id"),
-          concat_ws(" ", transform(sequence(lit(0), lit(21)), i => tokenAt(i))).as("text"))
-    def docs = docsRange(0L, d)
+      val expect = Map(
+        (16L * (d / K), 19L * (d / K)) -> K.toLong, // core
+        (1L, 1L) -> 3L * d) // doc-unique tail
+      def grouped(v: DataFrame): Map[(Long, Long), Long] =
+        v.groupBy(col("doc_freq"), col("total_count")).count().collect()
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      def fingerprint(): (Long, Long, Long) = {
+        val r = VocabTable.vocabularyFromTable(spark, Name)
+          .agg(count(lit(1)), sum(col("doc_freq")), sum(col("total_count"))).collect()(0)
+        (r.getLong(0), r.getLong(1), r.getLong(2))
+      }
 
-    val expect = Map(
-      (16L * (d / K), 19L * (d / K)) -> K.toLong, // core
-      (1L, 1L) -> 3L * d) // doc-unique tail
-    def grouped(v: DataFrame): Map[(Long, Long), Long] =
-      v.groupBy(col("doc_freq"), col("total_count")).count().collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    def fingerprint(): (Long, Long, Long) = {
-      val r = VocabTable.vocabularyFromTable(spark, Name)
-        .agg(count(lit(1)), sum(col("doc_freq")), sum(col("total_count"))).collect()(0)
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
+      // ---- the one-shot at volume matches the closed form ---------------
+      val directOk = run.timed("direct") { grouped(TextAnalysis.vocabulary(docs)) == expect }
 
-    // ---- the one-shot at volume matches the closed form ---------------
-    val directOk = timed("direct") { grouped(TextAnalysis.vocabulary(docs)) == expect }
-
-    // ---- stored lifecycle: write + 2 stamped whole-doc-grain appends --
-    timed("store-build") {
-      VocabTable.writeVocabTable(spark, Name, docsRange(0L, d / 2), buckets = 32)
-      VocabTable.appendToVocabTable(spark, Name, docsRange(d / 2, 3 * d / 4), batchId = 1L)
-      VocabTable.appendToVocabTable(spark, Name, docsRange(3 * d / 4, d), batchId = 2L)
-    }
-    val storedClosedOk = timed("stored-closed-form") {
-      grouped(VocabTable.vocabularyFromTable(spark, Name)) == expect
-    }
-    val storedDirectOk = timed("stored-vs-direct") {
-      val stored = VocabTable.vocabularyFromTable(spark, Name)
-      val direct = TextAnalysis.vocabulary(docs)
-      stored.exceptAll(direct).count() == 0L && direct.exceptAll(stored).count() == 0L
-    }
-    val replayOk = timed("replay") {
-      val before = fingerprint()
-      VocabTable.appendToVocabTable(spark, Name, docsRange(3 * d / 4, d), batchId = 2L)
-      fingerprint() == before
-    }
-
-    // ---- BPE: stored counts ≡ corpus at a production merge count ------
-    val fromStore = timed("bpe-from-counts") {
-      Bpe.trainFromCounts(
-        VocabTable.vocabularyFromTable(spark, Name)
-          .select(col("token").as("word"), col("total_count").as("weight")),
-        merges).collect().map(_.toSeq).toSeq
-    }
-    val fromCorpus = timed("bpe-from-corpus") {
-      Bpe.train(docs, merges).collect().map(_.toSeq).toSeq
-    }
-    val bpeParityOk = fromStore.nonEmpty && fromStore == fromCorpus
-    val bpeFullOk = fromStore.length == merges // neither path exhausted early
-
-    // ---- the maintain loop: quiet, drift-fire, stamped replay ---------
-    // quiet batch: fresh docs whose 16 core tokens are all stored
-    val quiet = spark.range(d, d + 4096L).select(col("id").as("doc_id"))
-      .select(col("doc_id"), concat_ws(" ",
-        transform(sequence(lit(0), lit(15)), i => coreTok((col("doc_id") + i) % K))).as("text"))
-    // drifted batch: an unseen alphabet ("v" prefix) — 100% OOV
-    val drift = spark.range(d + 4096L, d + 8192L).select(col("id").as("doc_id"))
-      .select(col("doc_id"), concat_ws(" ",
-        transform(sequence(lit(0), lit(15)),
-          i => concat(lit("v"), base4((col("doc_id") + i) % K)))).as("text"))
-    val quietOk = timed("maintain-quiet") {
-      !VocabTable.maintainVocabTable(spark, Name, quiet, batchId = 10L, numMerges = 256) &&
-        !spark.catalog.tableExists(s"${Name}_merges")
-    }
-    val driftOk = timed("maintain-drift") {
-      VocabTable.maintainVocabTable(spark, Name, drift, batchId = 11L, numMerges = 256) &&
-        VocabTable.mergesFromTable(spark, Name).count() > 0L
-    }
-    val maintainReplayOk = timed("maintain-replay") {
-      val before = fingerprint()
-      !VocabTable.maintainVocabTable(spark, Name, drift, batchId = 11L, numMerges = 256) &&
+      // ---- stored lifecycle: write + 2 stamped whole-doc-grain appends --
+      run.timed("store-build") {
+        VocabTable.writeVocabTable(spark, Name, docsRange(0L, d / 2), buckets = 32)
+        VocabTable.appendToVocabTable(spark, Name, docsRange(d / 2, 3 * d / 4), batchId = 1L)
+        VocabTable.appendToVocabTable(spark, Name, docsRange(3 * d / 4, d), batchId = 2L)
+      }
+      val storedClosedOk = run.timed("stored-closed-form") {
+        grouped(VocabTable.vocabularyFromTable(spark, Name)) == expect
+      }
+      val storedDirectOk = run.timed("stored-vs-direct") {
+        val stored = VocabTable.vocabularyFromTable(spark, Name)
+        val direct = TextAnalysis.vocabulary(docs)
+        stored.exceptAll(direct).count() == 0L && direct.exceptAll(stored).count() == 0L
+      }
+      val replayOk = run.timed("replay") {
+        val before = fingerprint()
+        VocabTable.appendToVocabTable(spark, Name, docsRange(3 * d / 4, d), batchId = 2L)
         fingerprint() == before
-    }
+      }
 
-    val allPass = directOk && storedClosedOk && storedDirectOk && replayOk &&
-      bpeParityOk && bpeFullOk && quietOk && driftOk && maintainReplayOk
-    val phaseJson = phases.map { case (k, s) => s""""$k":${f"$s%.2f"}""" }.mkString("{", ",", "}")
-    println(s"""{"rehearsal":"vocab","docs":$d,"word_types":${K + 3 * d},""" +
-      s""""num_merges":$merges,"all_checks_pass":$allPass,""" +
-      s""""checks":{"direct_closed_form":$directOk,"stored_closed_form":$storedClosedOk,""" +
-      s""""stored_vs_direct":$storedDirectOk,"stamped_replay_noop":$replayOk,""" +
-      s""""bpe_counts_vs_corpus":$bpeParityOk,"bpe_full_budget":$bpeFullOk,""" +
-      s""""maintain_quiet":$quietOk,"maintain_drift_fires":$driftOk,""" +
-      s""""maintain_replay_noop":$maintainReplayOk},"phases":$phaseJson,"cpus":"$cpus"}""")
-    spark.stop()
-    if (!allPass) sys.exit(1)
+      // ---- BPE: stored counts ≡ corpus at a production merge count ------
+      val fromStore = run.timed("bpe-from-counts") {
+        Bpe.trainFromCounts(
+          VocabTable.vocabularyFromTable(spark, Name)
+            .select(col("token").as("word"), col("total_count").as("weight")),
+          merges).collect().map(_.toSeq).toSeq
+      }
+      val fromCorpus = run.timed("bpe-from-corpus") {
+        Bpe.train(docs, merges).collect().map(_.toSeq).toSeq
+      }
+      val bpeParityOk = fromStore.nonEmpty && fromStore == fromCorpus
+      val bpeFullOk = fromStore.length == merges // neither path exhausted early
+
+      // ---- the maintain loop: quiet, drift-fire, stamped replay ---------
+      // quiet batch: fresh docs whose 16 core tokens are all stored
+      val quiet = spark.range(d, d + 4096L).select(col("id").as("doc_id"))
+        .select(col("doc_id"), concat_ws(" ",
+          transform(sequence(lit(0), lit(15)), i => coreTok((col("doc_id") + i) % K))).as("text"))
+      // drifted batch: an unseen alphabet ("v" prefix) — 100% OOV
+      val drift = spark.range(d + 4096L, d + 8192L).select(col("id").as("doc_id"))
+        .select(col("doc_id"), concat_ws(" ",
+          transform(sequence(lit(0), lit(15)),
+            i => concat(lit("v"), base4((col("doc_id") + i) % K)))).as("text"))
+      val quietOk = run.timed("maintain-quiet") {
+        !VocabTable.maintainVocabTable(spark, Name, quiet, batchId = 10L, numMerges = 256) &&
+          !spark.catalog.tableExists(s"${Name}_merges")
+      }
+      val driftOk = run.timed("maintain-drift") {
+        VocabTable.maintainVocabTable(spark, Name, drift, batchId = 11L, numMerges = 256) &&
+          VocabTable.mergesFromTable(spark, Name).count() > 0L
+      }
+      val maintainReplayOk = run.timed("maintain-replay") {
+        val before = fingerprint()
+        !VocabTable.maintainVocabTable(spark, Name, drift, batchId = 11L, numMerges = 256) &&
+          fingerprint() == before
+      }
+
+      run.check("direct_closed_form", directOk)
+      run.check("stored_closed_form", storedClosedOk)
+      run.check("stored_vs_direct", storedDirectOk)
+      run.check("stamped_replay_noop", replayOk)
+      run.check("bpe_counts_vs_corpus", bpeParityOk)
+      run.check("bpe_full_budget", bpeFullOk)
+      run.check("maintain_quiet", quietOk)
+      run.check("maintain_drift_fires", driftOk)
+      run.check("maintain_replay_noop", maintainReplayOk)
+      Seq("docs" -> d, "word_types" -> (K + 3 * d), "num_merges" -> merges)
+    }
   }
 }

@@ -92,4 +92,35 @@ class PlanGuardSpec extends SparkSpec {
       Seq("bands", "grams", "meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS plan_guard_lsh_$t"))
     }
   }
+
+  test("oracle-ordered pair, label, chunk and churn keys sort inside one partition, not globally") {
+    // a global sort's range exchange samples its input in a job of its
+    // own, which re-runs the unpersisted generator; one partition
+    // sorted locally gives the oracle the same row order
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import scala.math.Ordering.Implicits._
+    val keys: Seq[(String, Seq[String])] = Seq(
+      "dedup_ngram_jaccard" -> Seq("id_a", "id_b"),
+      "dedup_embed_cosine" -> Seq("id_a", "id_b"),
+      "dedup_minhash_md5" -> Seq("id_a", "id_b"),
+      "dedup_minhash_md5_canon" -> Seq("id_a", "id_b"),
+      "dedup_minhash_md5_routed" -> Seq("id_a", "id_b"),
+      "dedup_minhash_md5_routed_floor" -> Seq("id_a", "id_b"),
+      "dedup_simhash_md5" -> Seq("id_a", "id_b"),
+      "dedup_simhash_md5_canon" -> Seq("id_a", "id_b"),
+      "dedup_simhash_md5_routed" -> Seq("id_a", "id_b"),
+      "dedup_apply_cc" -> Seq("doc_id"),
+      "text_contamination" -> Seq("doc_id"),
+      "text_contamination_canon" -> Seq("doc_id"),
+      "text_chunk" -> Seq("doc_id", "chunk_idx"),
+      "snapshot_diff" -> Seq("doc_id"))
+    try keys.foreach { case (key, order) =>
+      val df = SparkEntry.queries(key)(spark, sfDir)
+      val global = df.queryExecution.optimizedPlan.collect { case s: Sort if s.global => s }
+      assert(global.isEmpty, s"$key plans a global sort:\n${df.queryExecution.optimizedPlan}")
+      val rows = df.collect().toSeq.map(r => order.map(c => r.getAs[Number](c).longValue))
+      val unordered = rows.zip(rows.drop(1)).find { case (a, b) => !(a < b) }
+      assert(unordered.isEmpty, s"$key rows out of its oracle's order: $unordered")
+    } finally spark.sharedState.cacheManager.clearCache()
+  }
 }

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all specs. The session is getOrCreate'd once per
-  * forked test JVM and intentionally never stopped (suites share it).
+/** Shared session for all specs, from the one session factory. The
+  * session is getOrCreate'd once per forked test JVM and intentionally
+  * never stopped (suites share it).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(cpus = 4)
 
   val sfDir = "/root/testdata/sf0.001"
 }

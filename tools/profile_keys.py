@@ -1,14 +1,16 @@
 #!/usr/bin/env python3
 """Produce PROFILE_r{N}.json: isolated best-of-R timings per gate key.
 
-Each key runs in a FRESH JVM via tools/run.sh graft.Profile (run 1
-carries JIT warmup; the min is the code-attributable number — see
-PERF.md host-noise caveat). Load averages are recorded around the
-sweep so a reader can judge contention.
+Each key runs in a FRESH JVM via tools/run.sh graft.Bench restricted to
+that key (SPARK_GRAFT_BENCH_KEYS), its metrics file written to a temp
+dir so BENCH_LATEST.json is never overwritten (run 1 carries JIT
+warmup; the min is the code-attributable number — see PERF.md
+host-noise caveat). Load averages are recorded around the sweep so a
+reader can judge contention.
 
 Usage: tools/profile_keys.py <round> [sfDir] [runs] [key ...]
 """
-import json, os, re, subprocess, sys
+import json, os, re, shutil, subprocess, sys, tempfile
 
 DEFAULT_KEYS = [
     # every key that has ever spiked in a driver bench JSON, plus the
@@ -38,17 +40,22 @@ def main():
     keys = sys.argv[4:] or DEFAULT_KEYS
     here = os.path.dirname(os.path.abspath(__file__))
     out = {"round": rnd, "sf": os.path.basename(sfdir.rstrip("/")),
-           "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+           # the session's default when SPARK_GRAFT_CPUS is unset
+           "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
            "runs_per_key": runs, "load_avg_start": load_avg(),
-           "note": ("isolated graft.Profile best-of-%d per key (fresh JVM each); "
+           "note": ("isolated graft.Bench best-of-%d per key (fresh JVM each); "
                     "run 1 carries JIT warmup - min is the code-attributable "
                     "number (see PERF.md host-noise caveat)") % runs,
            "keys": {}}
+    tmp = tempfile.mkdtemp(prefix="profile_keys_")
     for k in keys:
-        p = subprocess.run([os.path.join(here, "run.sh"), "graft.Profile",
-                            k, sfdir, str(runs)],
-                           capture_output=True, text=True)
-        times = [float(m) for m in re.findall(r"run \d+: ([0-9.]+) s", p.stdout)]
+        env = dict(os.environ, SPARK_GRAFT_BENCH_KEYS=k, SPARK_GRAFT_BENCH_RUNS=str(runs),
+                   SPARK_GRAFT_SF_DIR=sfdir,
+                   SPARK_GRAFT_BENCH_OUT=os.path.join(tmp, k + ".json"))
+        p = subprocess.run([os.path.join(here, "run.sh"), "graft.Bench"],
+                           capture_output=True, text=True, env=env)
+        times = [float(m) for m in
+                 re.findall(r"\[bench\] %s run \d+: ([0-9.]+) s" % re.escape(k), p.stderr)]
         if len(times) != runs:
             print(f"FAIL {k}: expected {runs} timings, got {times}\n{p.stderr[-500:]}",
                   file=sys.stderr)
@@ -56,6 +63,7 @@ def main():
             continue
         out["keys"][k] = {"runs": times, "min": min(times)}
         print(f"{k}: min {min(times):.2f} s  (runs {times}, load {load_avg():.1f})")
+    shutil.rmtree(tmp)
     out["load_avg_end"] = load_avg()
     path = f"PROFILE_r{rnd}.json"
     with open(path, "w") as f:

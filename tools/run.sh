@@ -18,6 +18,6 @@ if [ -z "$SPARK_DRIVER_MEM" ]; then
   SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
     /proc/meminfo 2>/dev/null || echo 2g)"
 fi
+# session settings (cores, UTC, UI off, ...) live in graft.Sessions
 exec java $ADD_OPENS -Xmx$SPARK_DRIVER_MEM \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
