@@ -114,10 +114,11 @@ object RelationalRehearsal {
     // returned 0 rows at every scale)
     // quantity modulus 47 (not a round 50): 20000·s mod 47 ≠ 0 at the
     // rehearsed scales, so quantities VARY within each partkey class
-    // and q15's 1.8×avg predicate is non-degenerate — and 47 is
-    // verified (driver-side, every run) to put NO class exactly ON
-    // the 1.8×avg boundary, where the operator's 6-dp avg rounding
-    // could flip a row the exact integer oracle counts differently
+    // and q15's 1.8×avg predicate is non-degenerate. 47 does NOT keep
+    // every scale off the 1.8×avg boundary, where the operator's 6-dp
+    // avg rounding could flip a row the exact integer oracle counts
+    // differently: `main` refuses the scales that put a row on it
+    // (see [[q15Expected]]) before writing anything
     spark.range(sz.nLine).select(expr("id div 4").as("l_orderkey"),
       (id % (20000L * sz.s)).as("l_partkey"),
       (expr("id div 4") % sz.nSupp).as("l_suppkey"),
@@ -153,10 +154,43 @@ object RelationalRehearsal {
   private def occ(n: Long, m: Long, r: Long): Long =
     n / m + (if (r < n % m) 1L else 0L)
 
+  /** q15's expected row count and its boundary rows at scale `sz`.
+    * P | nLine exactly (nLine = 30·P), so every partkey class holds 30
+    * rows whose quantities depend only on (partkey mod 47, P mod 47):
+    * the expected count is a 47-class integer loop. Boundary rows sit
+    * exactly ON the 1.8×avg predicate (300·v == 18·Σ), where the
+    * operator's 6-dp avg rounding could legitimately differ from the
+    * exact count. Modulus 47 leaves that set empty at most scales but
+    * not at every one: of s = 1..20, s = 2, 4, 8, 11, 16, 18 and 20
+    * have boundary rows (1, 2, 1, 1, 1, 1 and 1 of them).
+    */
+  private def q15Expected(sz: Sizes): (Long, Long) = {
+    val qMod = 47L
+    val partP = 20000L * sz.s
+    val kq = partP % qMod
+    val rowsPerPart = (sz.nLine / partP).toInt
+    var count = 0L
+    var boundary = 0L
+    (0L until qMod).foreach { r =>
+      val vs = (0 until rowsPerPart).map(j => ((r + kq * j) % qMod) + 1)
+      val sum = vs.sum
+      boundary += vs.count(v => 300 * v == 18 * sum)
+      count += occ(partP, qMod, r) * vs.count(v => 300 * v > 18 * sum)
+    }
+    (count, boundary)
+  }
+
   def main(args: Array[String]): Unit = {
     val s = args.lift(0).map(_.toInt).getOrElse(10)
     val outBase = args.lift(1).getOrElse("tmp/relational_rehearsal")
+    require(s > 0, s"S=$s must be positive")
     val sz = Sizes(s)
+    // a scale with q15 boundary rows cannot pass q15's exact check:
+    // refuse it before synthesizing anything
+    val boundary = q15Expected(sz)._2
+    require(boundary == 0,
+      s"S=$s puts $boundary rows exactly on q15's 1.8×avg boundary, where the exact count " +
+        "and the operator's rounded avg may disagree: pick another S")
     Rehearsals.run("relational", Some(outBase)) { run =>
       val spark = run.spark
       val dir = s"$outBase/sf_x$s"
@@ -279,26 +313,7 @@ object RelationalRehearsal {
         q8.map(r => (r.getAs[String]("c_mktsegment"), r.getAs[Long]("n_with"),
           r.getAs[Long]("n_without"))).mkString(","))
 
-      // q15: P | nLine exactly (nLine = 30·P), so every partkey class
-      // holds 30 rows whose quantities depend only on (partkey mod 47,
-      // P mod 47) — the expected row count is a 47-class integer loop.
-      // Strictness guard: no class may sit exactly ON the 1.8×avg
-      // boundary (300·v == 18·Σ), where the operator's 6-dp avg
-      // rounding could legitimately differ from this exact count; the
-      // modulus 47 was chosen to keep that set empty at every scale,
-      // and the guard makes the choice self-verifying.
-      val qMod = 47L
-      val partP = 20000L * s
-      val kq = partP % qMod
-      val rowsPerPart = (sz.nLine / partP).toInt
-      var q15Cnt = 0L
-      var q15Boundary = 0L
-      (0L until qMod).foreach { r =>
-        val vs = (0 until rowsPerPart).map(j => ((r + kq * j) % qMod) + 1)
-        val sum = vs.sum
-        q15Boundary += vs.count(v => 300 * v == 18 * sum)
-        q15Cnt += occ(partP, qMod, r) * vs.count(v => 300 * v > 18 * sum)
-      }
+      val (q15Cnt, q15Boundary) = q15Expected(sz)
       check("q15_no_boundary_classes", q15Boundary == 0, s"$q15Boundary boundary rows per class")
       check("q15_count", Relational.q15ScalarSubquery(spark, dir).count() == q15Cnt,
         s"expected $q15Cnt")

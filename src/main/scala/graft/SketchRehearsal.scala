@@ -43,8 +43,14 @@ object SketchRehearsal {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(20000000L)
     val outBase = args.lift(1).getOrElse("tmp/sketch_rehearsal")
-    require(n >= 2 * DistinctUids && n % 1000 == 0,
-      s"n=$n must cover the uid space twice (half/half lifecycle) and divide by 1000")
+    // the quantile tier's values (7·id) mod 1M over n/4 ids split into
+    // two groups cover 0..999,999 evenly only when n is a multiple of
+    // 4M; any other n shifts p50 outside its rank-error budget. 4M also
+    // covers the uid space twice (the half/half lifecycle) and divides
+    // by 1000.
+    require(n > 0 && n % 4000000 == 0,
+      s"n=$n must be a positive multiple of 4,000,000: only then does the quantile tier's " +
+        "(7·id) mod 1M value set cover 0..999,999 evenly, which its rank-error check assumes")
     Rehearsals.run("sketch", Some(outBase)) { run =>
       val spark = run.spark
 

@@ -25,22 +25,69 @@ object Sinks {
                        mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
-  /** Append one per-batch centroid snapshot — the reference engine's
+  /** The parquet schema Spark's own writer gives a snapshot's
+    * (cid, centroid, weight) rows: non-null longs and doubles, a
+    * nullable list of non-null doubles.
+    */
+  private lazy val SnapshotParquetSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  required int64 cid;
+      |  optional group centroid (LIST) {
+      |    repeated group list {
+      |      required double element;
+      |    }
+      |  }
+      |  required double weight;
+      |}""".stripMargin)
+
+  /** Write one per-batch centroid snapshot — the reference engine's
     * cluster-visualization feed (flink-streaming-kmeans exposes
     * periodic cluster snapshots for its map UI) as a durable,
     * queryable table instead of stdout. Partitioned by batch_id:
     * a monitoring reader of "the latest snapshot" prunes every other
-    * partition; history accumulates append-only for time-travel
-    * plots. Each snapshot is k rows — writer cost is O(k), never
-    * data-sized.
+    * partition; history accumulates for time-travel plots.
+    *
+    * A snapshot is k rows, so the driver writes it itself with
+    * parquet-hadoop's example writer: no Spark job. The file is
+    * written under a hidden temporary name in `batch_id=N/` and then
+    * renamed to that batch's one fixed file name, so a reader sees
+    * either no snapshot or all k rows, and a replayed batch replaces
+    * its snapshot instead of adding a second copy. The file has the
+    * parquet schema Spark's writer gives these rows, so readers see the
+    * same column types.
     */
   def writeSnapshot(spark: SparkSession, path: String, batchId: Long,
                     centroids: Seq[(Long, Array[Double])],
                     weights: Map[Long, Double] = Map.empty): Unit = {
-    import spark.implicits._
-    centroids.map { case (cid, c) => (batchId, cid, c.toSeq, weights.getOrElse(cid, 0.0)) }
-      .toDF("batch_id", "cid", "centroid", "weight")
-      .coalesce(1).write.mode(SaveMode.Append).partitionBy("batch_id").parquet(path)
+    import org.apache.hadoop.fs.{FileContext, Options, Path}
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(path, s"batch_id=$batchId")
+    val tmp = new Path(dir, s".snapshot-${java.util.UUID.randomUUID()}.tmp")
+    val dst = new Path(dir, "snapshot.parquet")
+    val fs = dir.getFileSystem(conf)
+    try {
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf)
+        .withType(SnapshotParquetSchema)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .build()
+      val rows = new SimpleGroupFactory(SnapshotParquetSchema)
+      try centroids.foreach { case (cid, c) =>
+        val row = rows.newGroup().append("cid", cid).append("weight", weights.getOrElse(cid, 0.0))
+        val list = row.addGroup("centroid")
+        c.foreach(x => list.addGroup("list").append("element", x))
+        writer.write(row)
+      } finally writer.close()
+      // a POSIX rename replaces an existing file atomically; a store
+      // whose plain rename refuses an existing destination (HDFS)
+      // takes the explicit overwrite form
+      if (!fs.rename(tmp, dst))
+        FileContext.getFileContext(dst.toUri, conf).rename(tmp, dst, Options.Rename.OVERWRITE)
+    } finally fs.delete(tmp, false)
   }
 
   /** Read a snapshot dir back (all batches; filter batch_id to prune). */

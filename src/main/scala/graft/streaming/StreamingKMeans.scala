@@ -1,6 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -16,16 +21,20 @@ import graft.operators.KMeans
   * `foreachBatch`. Per batch:
   *   1. assign every point to its nearest centroid — a narrow,
   *      codegen'd pass (centroids are a broadcast literal);
-  *   2. one partial-agg shuffle of k rows (per-cluster count + mean);
+  *   2. the assigned frame goes to the caller's assignments callback
+  *      wrapped in a `Dataset.observe`: the callback's write is the
+  *      batch's one Spark job, and it also yields each cluster's row
+  *      count m and per-dimension sum Σp as k×(dim+1) observed
+  *      aggregates (no persist, no shuffle, no second action);
   *   3. driver-side decayed merge, the batch generalization of the
   *      reference's per-point rule:
   *        n' = α·n + m
-  *        c' = (α·n·c + m·mean_batch) / n'
+  *        c' = (α·n·c + Σp) / n'
   *      (α = decayFactor; α=1 → exact running mean, the reference's
   *      `c + (p-c)/n` applied m times; α<1 forgets old data.)
   *
   * State is k×dim doubles on the driver — no executor state store
-  * needed, restart-safe if the caller checkpoints `centroids`.
+  * needed, restart-safe through [[save]] and [[StreamingKMeans.restore]].
   * Identical update math at any scale: the only data-sized work is
   * the assign scan.
   */
@@ -39,17 +48,18 @@ class StreamingKMeans(val k: Int, val dim: Int, val decayFactor: Double,
   def weights: Seq[(Long, Double)] = state.map { case (cid, _, n) => (cid, n) }
 
   /** Checkpoint the full model state — (cid, centroid, weight), k×dim
-    * doubles — as one tiny parquet file. With [[StreamingKMeans.restore]]
-    * this is the restart-safety surface Flink gives the reference via
-    * operator checkpointing: kill the job, restore, resume the stream,
-    * and the model continues bit-identically (weights included, so the
+    * doubles, with the decay factor α stamped on every row — as one
+    * tiny parquet file. With [[StreamingKMeans.restore]] this is the
+    * restart-safety surface Flink gives the reference via operator
+    * checkpointing: kill the job, restore, resume the stream, and the
+    * model continues bit-identically (weights and α included, so the
     * decayed running mean picks up where it stopped — spec-verified by
     * a kill-and-resume in StreamingSpec).
     */
   def save(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     import spark.implicits._
-    state.map { case (cid, c, n) => (cid, c.toSeq, n) }
-      .toDF("cid", "centroid", "weight")
+    state.map { case (cid, c, n) => (cid, c.toSeq, n, decayFactor) }
+      .toDF("cid", "centroid", "weight", "decay_factor")
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
@@ -66,28 +76,41 @@ class StreamingKMeans(val k: Int, val dim: Int, val decayFactor: Double,
   }
 
   /** Merge one micro-batch (a static DataFrame with an array<double>
-    * column `vecCol`) into the model.
+    * column `vecCol`) into the model: one global aggregation.
     */
   def update(batch: DataFrame, vecCol: String): Unit =
-    mergeAssigned(assign(batch, vecCol), vecCol)
+    merge(aggregate(assign(batch, vecCol), vecCol))
 
-  private def mergeAssigned(assigned: DataFrame, vecCol: String): Unit = {
-    val avgs = (1 to dim).map(i => avg(element_at(toDoubleArray(col(vecCol)), i)).as(s"m$i"))
-    val stats = assigned
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).cast("double").as("m"), avgs: _*)
-      .collect()
-      .map { r =>
-        r.getLong(0) -> ((r.getDouble(1), (1 to dim).map(i => r.getDouble(i + 1)).toArray))
-      }.toMap
-    state = state.map { case (cid, c, n) =>
-      stats.get(cid) match {
-        case Some((m, mean)) =>
-          val decayed = decayFactor * n
-          val total = decayed + m
-          val merged = c.indices.map(i => (decayed * c(i) + m * mean(i)) / total).toArray
-          (cid, merged, total)
-        case None => (cid, c, decayFactor * n)
+  /** The batch statistics the merge needs, as global aggregates over an
+    * assigned frame: for each cluster (in state order) its row count,
+    * then one sum per dimension. k×(dim+1) scalar aggregates, so they
+    * run as a plain `agg` or ride along a write as an observation.
+    */
+  private def batchStats(vecCol: String): Seq[Column] =
+    state.flatMap { case (cid, _, _) =>
+      val in = col("cluster") === lit(cid)
+      count(when(in, lit(1))) +:
+        (1 to dim).map(i => coalesce(sum(when(in, element_at(col(vecCol), i).cast("double"))), lit(0.0)))
+    }
+
+  private def aggregate(assigned: DataFrame, vecCol: String): Row = {
+    val stats = batchStats(vecCol)
+    assigned.agg(stats.head, stats.tail: _*).head()
+  }
+
+  /** Fold one row of [[batchStats]] into the model, the batch
+    * generalization of the reference's per-point rule:
+    *   n' = α·n + m,  c' = (α·n·c + Σp) / n'
+    */
+  private def merge(stats: Row): Unit = {
+    state = state.zipWithIndex.map { case ((cid, c, n), j) =>
+      val at = j * (dim + 1)
+      val m = stats.getLong(at)
+      val decayed = decayFactor * n
+      if (m == 0) (cid, c, decayed)
+      else {
+        val total = decayed + m
+        (cid, Array.tabulate(dim)(i => (decayed * c(i) + stats.getDouble(at + 1 + i)) / total), total)
       }
     }
   }
@@ -101,24 +124,36 @@ class StreamingKMeans(val k: Int, val dim: Int, val decayFactor: Double,
     * per-point cluster assignments (assign, then update: each point is
     * labeled with the centroid it was matched against, not the moved
     * one). Land it durably via [[graft.sources.Sinks.writeAssignments]].
+    *
+    * The merge's statistics are observed on the action `onAssignments`
+    * runs, so a batch costs that one Spark job. The callback must
+    * therefore run an action that reads every row of the frame it
+    * gets: a write of it, or a write of a projection of it. An action
+    * over a `limit` or `sample` of it would under-count the update.
+    * If no observation arrives within a fixed two-second wait after the
+    * callback returns (it ran no action), the statistics come from one
+    * direct aggregation instead. Without a callback the
+    * batch is that one aggregation.
     */
   def run(stream: DataFrame, vecCol: String,
           onSnapshot: (Long, Seq[(Long, Array[Double])]) => Unit = (_, _) => (),
           onAssignments: (Long, DataFrame) => Unit = null): StreamingQuery =
     stream.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val assigned = assign(batch.toDF(), vecCol)
-        if (onAssignments != null) {
-          // the assignments sink and the merge are two ACTIONS on the
-          // same frame — persist so the batch's source is scanned and
-          // assigned once, not once per action
-          assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            onAssignments(batchId, assigned)
-            mergeAssigned(assigned, vecCol)
-          } finally assigned.unpersist(false)
-        } else mergeAssigned(assigned, vecCol)
+        if (onAssignments == null) merge(aggregate(assigned, vecCol))
+        else {
+          val observation = Observation()
+          val stats = batchStats(vecCol)
+          onAssignments(batchId, assigned.observe(observation, stats.head, stats.tail: _*))
+          // the observation completes on the listener bus shortly
+          // after the callback's action returns
+          val observed =
+            try Some(Await.result(observation.future, StreamingKMeans.ObservationWaitMs.millis))
+            catch { case _: TimeoutException => None }
+          merge(observed.getOrElse(aggregate(assigned, vecCol)))
+        }
         onSnapshot(batchId, centroids)
       }
       .start()
@@ -126,13 +161,45 @@ class StreamingKMeans(val k: Int, val dim: Int, val decayFactor: Double,
 
 object StreamingKMeans {
 
+  /** How long a batch waits, after `onAssignments` returns, for the
+    * statistics observed on its action before computing them directly.
+    * The observation normally lands within milliseconds; only a
+    * callback that ran no action over the frame pays the full wait.
+    */
+  private val ObservationWaitMs = 2000L
+
   /** Restore a checkpointed model from [[StreamingKMeans#save]]:
-    * centroids AND weights come back, so subsequent updates continue
-    * the same decayed running mean as the uninterrupted run.
+    * centroids, weights AND the decay factor come back, so subsequent
+    * updates continue the same decayed running mean as the
+    * uninterrupted run.
+    */
+  def restore(spark: org.apache.spark.sql.SparkSession, path: String): StreamingKMeans =
+    load(spark, path, None)
+
+  /** [[restore]], checking that the model was saved with `decayFactor`:
+    * a different α fails instead of silently changing the model. A
+    * checkpoint written before α was stamped takes `decayFactor`.
     */
   def restore(spark: org.apache.spark.sql.SparkSession, path: String,
-              decayFactor: Double = 1.0): StreamingKMeans = {
-    val rows = spark.read.parquet(path).collect().sortBy(_.getAs[Long]("cid"))
+              decayFactor: Double): StreamingKMeans =
+    load(spark, path, Some(decayFactor))
+
+  private def load(spark: org.apache.spark.sql.SparkSession, path: String,
+                   expected: Option[Double]): StreamingKMeans = {
+    val df = spark.read.parquet(path)
+    val rows = df.collect().sortBy(_.getAs[Long]("cid"))
+    val saved =
+      if (df.columns.contains("decay_factor")) rows.headOption.map(_.getAs[Double]("decay_factor"))
+      else None
+    val decayFactor = (saved, expected) match {
+      case (Some(a), Some(b)) =>
+        require(a == b, s"$path was saved with decayFactor $a, not the $b passed to restore")
+        a
+      case (Some(a), None) => a
+      case (None, Some(b)) => b
+      case (None, None) => throw new IllegalArgumentException(
+        s"$path records no decayFactor (saved before save() stamped it): pass it to restore")
+    }
     val st = rows.map { r =>
       (r.getAs[Long]("cid"), r.getAs[scala.collection.Seq[Double]]("centroid").toArray,
         r.getAs[Double]("weight"))

@@ -52,4 +52,16 @@ class SessionsSpec extends SparkSpec {
     }
     assert(thrownLine.isEmpty && thrownCode == 1 && thrownStopped)
   }
+
+  test("rehearsal size guards refuse, before any work, sizes their exact checks cannot hold at") {
+    def refusal(run: => Unit): String = intercept[IllegalArgumentException](run).getMessage
+    // the quantile tier's value set is even only at multiples of 4M
+    assert(refusal(SketchRehearsal.main(Array("2000000", "unused"))).contains("multiple of 4,000,000"))
+    assert(refusal(SketchRehearsal.main(Array("6000000", "unused"))).contains("multiple of 4,000,000"))
+    // these scales put rows exactly on q15's 1.8×avg boundary
+    Seq(2, 4, 8).foreach { s =>
+      assert(refusal(RelationalRehearsal.main(Array(s.toString, "unused"))).contains("q15"), s"S=$s")
+    }
+    assert(!new java.io.File("unused").exists(), "a refused size must write nothing")
+  }
 }

@@ -433,6 +433,28 @@ class SourcesSpec extends SparkSpec {
     assert(r.getAs[Double]("weight") == 3.0)
   }
 
+  test("driver-written snapshot: Spark's schema, a rewritten batch replaces its rows, no temp file left") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft_snap_driver").toString + "/snaps"
+    val c = Seq((0L, Array(1.0, 2.0)), (1L, Array(3.0, 4.0)))
+    graft.sources.Sinks.writeSnapshot(spark, dir, 0L, c, Map(0L -> 2.0, 1L -> 1.0))
+    graft.sources.Sinks.writeSnapshot(spark, dir, 1L, c, Map(0L -> 2.0, 1L -> 1.0))
+    // a replayed batch 1 with a moved centroid
+    graft.sources.Sinks.writeSnapshot(spark, dir, 1L, Seq((0L, Array(1.5, 2.5)), c(1)),
+      Map(0L -> 3.0, 1L -> 1.0))
+    val back = graft.sources.Sinks.readSnapshots(spark, dir)
+    assert(back.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "cid" -> "bigint", "centroid" -> "array<double>", "weight" -> "double", "batch_id" -> "int"),
+      back.schema.treeString)
+    assert(back.count() == 4, "the rewrite must replace batch 1's two rows, not add two more")
+    val r = back.filter(col("batch_id") === 1 && col("cid") === 0L).collect()
+    assert(r.length == 1 && r(0).getAs[scala.collection.Seq[Double]]("centroid") == Seq(1.5, 2.5) &&
+      r(0).getAs[Double]("weight") == 3.0, r.toSeq)
+    val names = new java.io.File(s"$dir/batch_id=1").list().toSeq
+    assert(names.filterNot(_.startsWith(".")) == Seq("snapshot.parquet") &&
+      !names.exists(_.contains("tmp")), s"batch dir holds $names")
+  }
+
   test("guarded batch-dir clear: wipes batch_id=* layouts, refuses anything else") {
     val base = Files.createTempDirectory("graft_clear")
     // a previous run's sink layout: batch_id=* partitions + metadata

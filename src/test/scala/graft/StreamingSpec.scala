@@ -98,13 +98,79 @@ class StreamingSpec extends SparkSpec {
     val b = fresh()
     b.update(batch1, "vec")
     b.save(spark, dir)
-    val r = StreamingKMeans.restore(spark, dir, decayFactor = 0.5)
+    // α comes back from the checkpoint: no caller-side decay needed
+    val r = StreamingKMeans.restore(spark, dir)
+    assert(r.decayFactor == 0.5, s"restored α ${r.decayFactor}, saved 0.5")
     r.update(batch2, "vec")
 
     assert(r.centroids.map { case (cid, c) => (cid, c.toSeq) } ==
       a.centroids.map { case (cid, c) => (cid, c.toSeq) },
       "restored model must continue to the same centroids")
     assert(r.weights == a.weights, "decayed weights must survive the checkpoint")
+    // passing the saved α is accepted; a different one fails loudly
+    // instead of turning the model into a running mean
+    assert(StreamingKMeans.restore(spark, dir, decayFactor = 0.5).decayFactor == 0.5)
+    val e = intercept[IllegalArgumentException](StreamingKMeans.restore(spark, dir, decayFactor = 1.0))
+    assert(e.getMessage.contains("decayFactor 0.5"), e.getMessage)
+  }
+
+  test("the merge observes the callback's write, one job per batch; no-action and no-callback runs match update()") {
+    implicit val ctx = spark.sqlContext
+    val batches = Seq(
+      Seq((1L, 1.0, 1.0), (2L, 9.0, 9.0), (3L, 1.0, 3.0)),
+      Seq((4L, 3.0, 3.0), (5L, 9.0, 11.0)),
+      Seq((6L, 2.0, 0.0)))
+    def fresh() = new StreamingKMeans(k = 2, dim = 2, decayFactor = 0.5,
+      init = Seq((0L, Array(0.0, 0.0)), (1L, Array(10.0, 10.0))))
+    val expected = fresh()
+    batches.foreach(b =>
+      expected.update(b.map { case (id, x, y) => (id, Seq(x, y)) }.toDF("point_id", "vec"), "vec"))
+
+    // (model, Spark jobs started) after streaming the same batches
+    def streamed(onAssignments: (Long, org.apache.spark.sql.DataFrame) => Unit)
+    : (StreamingKMeans, Int) = {
+      val model = fresh()
+      val ms = MemoryStream[(Long, Double, Double)]
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      val q = model.run(
+        ms.toDF().select(col("_1").as("point_id"), array(col("_2"), col("_3")).as("vec")), "vec",
+        onAssignments = onAssignments)
+      spark.sparkContext.addSparkListener(listener)
+      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      // the listener bus is async: wait until the job count settles
+      var last = -1; var stable = 0; var waited = 0
+      while (stable < 3 && waited < 100) {
+        Thread.sleep(100); waited += 1
+        val n = jobs.get
+        if (n == last) stable += 1 else { stable = 0; last = n }
+      }
+      spark.sparkContext.removeSparkListener(listener)
+      (model, jobs.get)
+    }
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_observe").toString + "/assignments"
+    val (written, writeJobs) = streamed((bid, assigned) =>
+      Sinks.writeAssignments(bid, assigned.select("point_id", "cluster"), dir))
+    val (silent, _) = streamed((_, _) => ())
+    val (plain, _) = streamed(null)
+    assert(writeJobs == batches.length,
+      s"$writeJobs Spark jobs for ${batches.length} batches: the merge must ride the assignments write")
+    assert(Sinks.readAssignments(spark, dir).count() == batches.map(_.length).sum)
+    Seq("write callback" -> written, "no-action callback" -> silent, "no callback" -> plain).foreach {
+      case (how, m) =>
+        m.centroids.zip(expected.centroids).foreach { case ((cid, c), (eid, e)) =>
+          assert(cid == eid && c.indices.forall(i => math.abs(c(i) - e(i)) <= 1e-9),
+            s"$how: centroid $cid ${c.toSeq} vs update() ${e.toSeq}")
+        }
+        m.weights.zip(expected.weights).foreach { case ((cid, w), (_, ew)) =>
+          assert(math.abs(w - ew) <= 1e-9, s"$how: weight of $cid $w vs update() $ew")
+        }
+    }
   }
 
   test("streaming exact dedup keeps the first doc per content hash") {

@@ -5,15 +5,32 @@ Reads the Verify output dir (parquet per query + oracle_sql.json),
 registers the sf tables as DuckDB views, runs each oracle SQL, and
 compares row count / column names / values against the Spark dump.
 """
-import sys, json, glob, os
+import sys, json, glob, os, shutil, tempfile
 import duckdb
+
+# DuckDB spills past its memory limit into temp_directory; unbounded, an
+# oracle that explodes (dedup_apply_cc's lockstep rounds at sf0.1) fills
+# the disk. With this cap the oracle fails with DuckDB's own
+# out-of-budget error instead, reported against its key.
+TEMP_BUDGET = "8GB"
 
 # (oracle_dtype, spark_dtype) pairs that are exact-value-preserving and
 # empirically pass the driver's hash compare. Anything else is a FAIL.
 DTYPE_WIDEN_OK = set()
 
 def main(sfdir, outdir):
+    # spill under the output dir (hidden, so the query loop skips it),
+    # removed when the check ends
+    spill = tempfile.mkdtemp(prefix=".duckdb_spill_", dir=outdir)
+    try:
+        return compare(sfdir, outdir, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+def compare(sfdir, outdir, spill):
     con = duckdb.connect()
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute(f"SET max_temp_directory_size = '{TEMP_BUDGET}'")
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
@@ -21,7 +38,7 @@ def main(sfdir, outdir):
     n_pass = n_fail = 0
     for name in sorted(os.listdir(outdir)):
         qdir = os.path.join(outdir, name)
-        if not os.path.isdir(qdir):
+        if name.startswith(".") or not os.path.isdir(qdir):
             continue
         files = glob.glob(f"{qdir}/*.parquet")
         if not files:
