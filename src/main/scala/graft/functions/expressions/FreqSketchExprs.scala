@@ -162,7 +162,7 @@ case class FreqSketchTopK(child: Expression, k: Int)
     val rows = sketch.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES)
     val ordered = rows.sortWith { (a, b) =>
       if (a.getEstimate != b.getEstimate) a.getEstimate > b.getEstimate
-      else UTF8String.fromString(a.getItem).compareTo(UTF8String.fromString(b.getItem)) < 0
+      else UTF8String.fromString(a.getItem).binaryCompare(UTF8String.fromString(b.getItem)) < 0
     }
     val top = if (k > 0) ordered.take(k) else ordered
     new GenericArrayData(top.map(r => new GenericInternalRow(Array[Any](

@@ -76,15 +76,16 @@ class StreamingKMeans(val k: Int, val dim: Int, val decayFactor: Double,
   }
 
   /** Merge one micro-batch (a static DataFrame with an array<double>
-    * column `vecCol`) into the model: one global aggregation.
+    * column `vecCol`) into the model: one Spark job, a noop write of
+    * the assigned batch that the statistics are observed on.
     */
   def update(batch: DataFrame, vecCol: String): Unit =
-    merge(aggregate(assign(batch, vecCol), vecCol))
+    merge(observedWrite(assign(batch, vecCol), vecCol))
 
   /** The batch statistics the merge needs, as global aggregates over an
     * assigned frame: for each cluster (in state order) its row count,
     * then one sum per dimension. k×(dim+1) scalar aggregates, so they
-    * run as a plain `agg` or ride along a write as an observation.
+    * ride along a write as an observation.
     */
   private def batchStats(vecCol: String): Seq[Column] =
     state.flatMap { case (cid, _, _) =>
@@ -93,10 +94,25 @@ class StreamingKMeans(val k: Int, val dim: Int, val decayFactor: Double,
         (1 to dim).map(i => coalesce(sum(when(in, element_at(col(vecCol), i).cast("double"))), lit(0.0)))
     }
 
-  private def aggregate(assigned: DataFrame, vecCol: String): Row = {
+  /** Run `action` over `assigned` with [[batchStats]] observed on it;
+    * the statistics, if they arrive within `wait` of its return.
+    */
+  private def observed(assigned: DataFrame, vecCol: String, wait: Duration)
+                      (action: DataFrame => Unit): Option[Row] = {
+    val observation = Observation()
     val stats = batchStats(vecCol)
-    assigned.agg(stats.head, stats.tail: _*).head()
+    action(assigned.observe(observation, stats.head, stats.tail: _*))
+    // the observation completes on the listener bus shortly after the
+    // action returns
+    try Some(Await.result(observation.future, wait))
+    catch { case _: TimeoutException => None }
   }
+
+  /** [[batchStats]] observed on a noop write of `assigned`. One Spark
+    * job: a global `agg(...).head()` takes two under AQE.
+    */
+  private def observedWrite(assigned: DataFrame, vecCol: String): Row =
+    observed(assigned, vecCol, Duration.Inf)(_.write.format("noop").mode("overwrite").save()).get
 
   /** Fold one row of [[batchStats]] into the model, the batch
     * generalization of the reference's per-point rule:
@@ -131,9 +147,9 @@ class StreamingKMeans(val k: Int, val dim: Int, val decayFactor: Double,
     * gets: a write of it, or a write of a projection of it. An action
     * over a `limit` or `sample` of it would under-count the update.
     * If no observation arrives within a fixed two-second wait after the
-    * callback returns (it ran no action), the statistics come from one
-    * direct aggregation instead. Without a callback the
-    * batch is that one aggregation.
+    * callback returns (it ran no action), the statistics come from a
+    * noop write of the frame instead, as in [[update]]. Without a
+    * callback the batch is that one noop write.
     */
   def run(stream: DataFrame, vecCol: String,
           onSnapshot: (Long, Seq[(Long, Array[Double])]) => Unit = (_, _) => (),
@@ -142,18 +158,10 @@ class StreamingKMeans(val k: Int, val dim: Int, val decayFactor: Double,
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val assigned = assign(batch.toDF(), vecCol)
-        if (onAssignments == null) merge(aggregate(assigned, vecCol))
-        else {
-          val observation = Observation()
-          val stats = batchStats(vecCol)
-          onAssignments(batchId, assigned.observe(observation, stats.head, stats.tail: _*))
-          // the observation completes on the listener bus shortly
-          // after the callback's action returns
-          val observed =
-            try Some(Await.result(observation.future, StreamingKMeans.ObservationWaitMs.millis))
-            catch { case _: TimeoutException => None }
-          merge(observed.getOrElse(aggregate(assigned, vecCol)))
-        }
+        val fromCallback =
+          if (onAssignments == null) None
+          else observed(assigned, vecCol, StreamingKMeans.ObservationWaitMs.millis)(onAssignments(batchId, _))
+        merge(fromCallback.getOrElse(observedWrite(assigned, vecCol)))
         onSnapshot(batchId, centroids)
       }
       .start()

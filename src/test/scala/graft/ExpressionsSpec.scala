@@ -53,7 +53,13 @@ class ExpressionsSpec extends SparkSpec {
     def arr(xs: Seq[String]): ArrayData =
       ArrayData.toArrayData(xs.map(x => if (x == null) null else UTF8String.fromString(x)).toArray)
     val rnd = new scala.util.Random(42)
-    val pool = Vector("a", "b", "c", "aa", "ab", "b1", "", "zz", "日本", "x")
+    // "😀" (a surrogate pair) and "ｚ" (U+FF5A) order one way in Java's
+    // UTF-16 `sorted` and the other way in UTF-8 bytes; the long
+    // strings share 8- and 16-byte prefixes, so both the merge's
+    // word loop and its byte tail decide comparisons
+    val pool = Vector("a", "b", "c", "aa", "ab", "b1", "", "zz", "日本", "x", "😀", "ｚ",
+      "abcdefgh", "abcdefghi", "abcdefgh1", "abcdefghijklmnop", "abcdefghijklmnopq", "abcdefghijklmnoz")
+    val byteOrder: Ordering[String] = (x, y) => UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
     val cases = Seq(
       (Seq.empty[String], Seq.empty[String]),
       (Seq("a", "b"), Seq.empty[String]),
@@ -65,16 +71,73 @@ class ExpressionsSpec extends SparkSpec {
       (Seq(null, null), Seq(null.asInstanceOf[String])),
       (Seq("b", "a"), Seq("a", "b")), // unsorted left → fallback
       (Seq("a", "b"), Seq("b", "a"))  // unsorted right → fallback
-    ) ++ (1 to 300).map { _ =>
-      def side = Seq.fill(rnd.nextInt(8))(pool(rnd.nextInt(pool.size)))
-      val l = if (rnd.nextBoolean()) side.sorted else side
-      val r = if (rnd.nextBoolean()) side.sorted else Seq.fill(rnd.nextInt(8))(pool(rnd.nextInt(pool.size))).sorted
-      (l, r)
+    ) ++ (1 to 600).map { _ =>
+      // unsorted, Java-sorted or byte-sorted (the merge path's order)
+      def side = {
+        val s = Seq.fill(rnd.nextInt(8))(pool(rnd.nextInt(pool.size)))
+        rnd.nextInt(3) match { case 0 => s; case 1 => s.sorted; case _ => s.sorted(byteOrder) }
+      }
+      (side, side)
     }
     cases.foreach { case (l, r) =>
       val m = ArrayJaccardFs.compute(arr(l), arr(r))
       val h = ArrayJaccardFs.computeHash(arr(l), arr(r))
       assert(m == h, s"merge=$m hash=$h for l=$l r=$r")
+    }
+  }
+
+  test("jaccard_fs over sort_array's UnsafeArrayData matches the hash path, incl. surrogate pairs") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.expressions.ArrayJaccardFs
+    val pool = Vector("a", "b", "aa", "", "日本", "😀", "ｚ", "😀x", "ｚz",
+      "abcdefgh", "abcdefgh1", "abcdefghijklmnop", "abcdefghijklmnoq")
+    val rnd = new scala.util.Random(7)
+    def side = Seq.fill(rnd.nextInt(10))(pool(rnd.nextInt(pool.size)))
+    val rows = (0 until 400).map(i => (i, side.distinct, side.distinct))
+    // Spark sorts; the checkpoint hands the kernel UnsafeArrayData,
+    // as the cached and broadcast sides of the verify joins do
+    val sorted = spark.createDataFrame(rows).toDF("id", "l", "r")
+      .select(col("id"), sort_array(col("l")).as("l"), sort_array(col("r")).as("r"))
+      .localCheckpoint()
+    assert(sorted.queryExecution.toRdd.map(r => r.getArray(1).isInstanceOf[UnsafeArrayData]).collect().forall(identity))
+    def arr(xs: scala.collection.Seq[String]): ArrayData =
+      ArrayData.toArrayData(xs.map(UTF8String.fromString).toArray)
+    val got = sorted.select(col("l"), col("r"),
+        call_function("graft_jaccard_fs", col("l"), col("r")).as("j"))
+      .collect()
+    assert(got.length == rows.length)
+    got.foreach { row =>
+      val (l, r) = (row.getSeq[String](0), row.getSeq[String](1))
+      val h = ArrayJaccardFs.computeHash(arr(l), arr(r))
+      assert(row.getLong(2) == h, s"merge=${row.getLong(2)} hash=$h for l=$l r=$r")
+    }
+  }
+
+  test("no string kernel calls UTF8String.compareTo (it throws under spark.testing)") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    import org.apache.datasketches.frequencies.ItemsSketch
+    import graft.functions.expressions.{ArrayJaccardFs, FreqSketchSerde, FreqSketchTopK}
+    def arr(xs: String*): ArrayData = ArrayData.toArrayData(xs.map(UTF8String.fromString).toArray)
+    val sketch = new ItemsSketch[String](8)
+    Seq("b", "a", "😀", "ｚ").foreach(sketch.update(_, 5L))
+    val topK = FreqSketchTopK(Literal(FreqSketchSerde.toBytes(sketch)), 0)
+    val before = System.getProperty("spark.testing")
+    System.setProperty("spark.testing", "true")
+    try {
+      // merge path over generic input, converted to UnsafeArrayData
+      assert(ArrayJaccardFs.compute(arr("a", "abcdefgh1", "b"), arr("abcdefgh1", "b", "c")) == 5000L)
+      // an inversion falls back to the hash pass
+      assert(ArrayJaccardFs.compute(arr("b", "a"), arr("a", "b")) == 10000L)
+      // ties on the estimate order by UTF-8 bytes: ｚ (EF ..) before 😀 (F0 ..)
+      val items = topK.eval().asInstanceOf[ArrayData]
+      assert((0 until items.numElements()).map(i => items.getStruct(i, 4).getUTF8String(0).toString) ==
+        Seq("a", "b", "ｚ", "😀"))
+    } finally {
+      if (before == null) System.clearProperty("spark.testing") else System.setProperty("spark.testing", before)
     }
   }
 

@@ -122,44 +122,59 @@ class StreamingSpec extends SparkSpec {
       Seq((6L, 2.0, 0.0)))
     def fresh() = new StreamingKMeans(k = 2, dim = 2, decayFactor = 0.5,
       init = Seq((0L, Array(0.0, 0.0)), (1L, Array(10.0, 10.0))))
+
+    // Spark jobs started while `body` runs
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try body
+      finally {
+        // the listener bus is async: wait until the job count settles
+        var last = -1; var stable = 0; var waited = 0
+        while (stable < 3 && waited < 100) {
+          Thread.sleep(100); waited += 1
+          val n = jobs.get
+          if (n == last) stable += 1 else { stable = 0; last = n }
+        }
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      jobs.get
+    }
+
+    val frames = batches.map(b => b.map { case (id, x, y) => (id, Seq(x, y)) }.toDF("point_id", "vec"))
     val expected = fresh()
-    batches.foreach(b =>
-      expected.update(b.map { case (id, x, y) => (id, Seq(x, y)) }.toDF("point_id", "vec"), "vec"))
+    val updateJobs = jobsDuring(frames.foreach(expected.update(_, "vec")))
 
     // (model, Spark jobs started) after streaming the same batches
     def streamed(onAssignments: (Long, org.apache.spark.sql.DataFrame) => Unit)
     : (StreamingKMeans, Int) = {
       val model = fresh()
       val ms = MemoryStream[(Long, Double, Double)]
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
       val q = model.run(
         ms.toDF().select(col("_1").as("point_id"), array(col("_2"), col("_3")).as("vec")), "vec",
         onAssignments = onAssignments)
-      spark.sparkContext.addSparkListener(listener)
-      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      finally q.stop()
-      // the listener bus is async: wait until the job count settles
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100); waited += 1
-        val n = jobs.get
-        if (n == last) stable += 1 else { stable = 0; last = n }
+      val jobs = jobsDuring {
+        try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+        finally q.stop()
       }
-      spark.sparkContext.removeSparkListener(listener)
-      (model, jobs.get)
+      (model, jobs)
     }
 
     val dir = java.nio.file.Files.createTempDirectory("graft_observe").toString + "/assignments"
     val (written, writeJobs) = streamed((bid, assigned) =>
       Sinks.writeAssignments(bid, assigned.select("point_id", "cluster"), dir))
     val (silent, _) = streamed((_, _) => ())
-    val (plain, _) = streamed(null)
+    val (plain, plainJobs) = streamed(null)
     assert(writeJobs == batches.length,
       s"$writeJobs Spark jobs for ${batches.length} batches: the merge must ride the assignments write")
+    assert(updateJobs == batches.length,
+      s"update(): $updateJobs Spark jobs for ${batches.length} batches: the merge must ride one noop write")
+    assert(plainJobs == batches.length,
+      s"no callback: $plainJobs Spark jobs for ${batches.length} batches: the merge must ride one noop write")
     assert(Sinks.readAssignments(spark, dir).count() == batches.map(_.length).sum)
     Seq("write callback" -> written, "no-action callback" -> silent, "no callback" -> plain).foreach {
       case (how, m) =>
