@@ -1346,6 +1346,16 @@ object Dedup {
     math.max(1L, (edgeCount + 1999999L) / 2000000L)
       .min(Int.MaxValue.toLong).toInt
 
+  /** Most pairs whose label rounds [[ccLabels]] runs on the driver.
+    * Those rounds peak at about 32 B a pair (the endpoint longs twice:
+    * as collected and sorted into the vertex ids; 48 B when nearly
+    * every endpoint is a distinct doc), so an eighth of the heap holds
+    * heap / 256 pairs: 8.4M on a 2 GB heap. An array index is an Int,
+    * which caps the endpoint count below 2^31.
+    */
+  private val driverCcMaxPairs: Long =
+    (Runtime.getRuntime.maxMemory / 256L).min(Int.MaxValue / 2L)
+
   /** Connected-component canonicalization of near-dup pairs: min-id
     * label propagation over the (undirected) pair graph, at most
     * `iters` rounds, stopping at the fixed point — the first round
@@ -1354,11 +1364,9 @@ object Dedup {
     * B–C put all three docs under representative min(A,B,C) even
     * though A–C was never emitted as a pair.
     *
-    * Each round: label(x) ← min(label(x), min over neighbors'
-    * labels) — one edge join + one groupBy per round, every shuffle
-    * keyed on doc ids (no skew beyond the dup-cluster fan-in, which
-    * the groupBy partial-aggregates away). A path graph converges in
-    * its diameter; near-dup graphs are dense clusters with tiny
+    * Each round is lockstep: label(x) ← min(label(x), min over
+    * neighbors' labels of the PREVIOUS round). A path graph converges
+    * in its diameter; near-dup graphs are dense clusters with tiny
     * diameters, so typical convergence is 2–4 rounds + 1 round that
     * sees no change. Rounds past a fixed point change no label, so
     * stopping there yields exactly the labels of `iters` fixed rounds
@@ -1368,6 +1376,25 @@ object Dedup {
     * `iters` hops split, which is reported once on stderr;
     * [[starCcLabels]] is the O(log d) star-contraction path for deep
     * chains.
+    *
+    * The pair set is persisted and counted once, so the pair
+    * generator upstream runs exactly once whichever path follows:
+    *  - ON THE DRIVER when the count is at most [[driverCcMaxPairs]]
+    *    (heap / 256, see there) and half the `spark.driver.maxResultSize`
+    *    allowance, and the ids are integers: one job collects the
+    *    cached pairs into primitive arrays (no Row per pair), the ids
+    *    become dense vertex indices in id order, and each round is one
+    *    sweep over the pair list in arrays. On a near-dup graph each Spark
+    *    round is mostly fixed per-job cost (a broadcast, a groupBy
+    *    shuffle and a count), which this trades for one collect: the
+    *    corpus benchmark's 720k pairs take 8 jobs instead of 27, the
+    *    labels write included.
+    *  - DISTRIBUTED otherwise ([[distributedLabelRounds]]).
+    * Both run the same lockstep rounds from the same start (every
+    * vertex labelled by itself), drop a pair with a null end (the
+    * distributed join never carries a label across one), and stop on
+    * the same test, so their labels are identical, also on a graph
+    * that does not converge within `iters`.
     *
     * Output: (doc_id, rep_id) for EVERY corpus doc, unordered —
     * unpaired docs represent themselves. Keep rows where
@@ -1381,29 +1408,137 @@ object Dedup {
     * frame is 50× smaller than the corpus.
     */
   def ccLabels(docs: DataFrame, pairs: DataFrame, iters: Int = 4,
-               idCol: String = "doc_id"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // edges embeds the entire pair-generation pipeline (a blocked/LSH
-    // self-join): persist + ONE eager count runs that pipeline exactly
-    // once (and lets a scoped-cache generator upstream release its own
-    // persists), then localCheckpoint TRUNCATES the lineage — the
-    // label iteration references `labels` twice per round, so the
-    // analyzed plan doubles every round, and with a large generator
-    // plan as the base (the 32-permutation md5 pipeline is ~10× the
-    // blocked join's tree) rounds 3–4 spend seconds in the ANALYZER
-    // alone (measured: 46 s → 12 s for the full cc at sf0.1 from this
-    // truncation; data-path cost was never the problem — the same
-    // plan-explosion lesson starCcLabels documents at 16×/round)
-    // materialize the PAIR set once, BEFORE the two-leg union (r22):
-    // the union's legs each embed the whole pair-generation pipeline,
-    // and AQE submits both concurrently — with a lazily-cached (or
-    // uncached, for the ngram generator) pair source, the expensive
-    // verify stage ran once PER LEG (measured: twin 1.3 s stages for
-    // one 1.3 s verify). One slim persist + count consumes the
-    // generator exactly once (its scoped caches release here) and the
-    // union reads this operator's own cache.
-    val p0 = pairs.select(col("id_a"), col("id_b")).persist(MEMORY_AND_DISK)
+               idCol: String = "doc_id"): DataFrame =
+    ccLabelsWithin(docs, pairs, iters, idCol, driverCcMaxPairs)
+
+  /** [[ccLabels]] with the driver path's pair bound as an argument; a
+    * negative `driverMaxPairs` always runs the distributed rounds.
+    */
+  private[graft] def ccLabelsWithin(docs: DataFrame, pairs: DataFrame, iters: Int,
+                                    idCol: String, driverMaxPairs: Long): DataFrame = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    // materialize the PAIR set once (r22): persist + ONE eager count
+    // runs the pair-generation pipeline exactly once (and lets a
+    // scoped-cache generator upstream release its own persists); both
+    // paths read this operator's own cache, which they release. Without
+    // it the distributed path's two-leg edge union ran the generator
+    // once PER LEG (measured: twin 1.3 s stages for one 1.3 s verify)
+    val p0 = pairs.select(col("id_a"), col("id_b"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nPairs = p0.count()
+    val resultBytes = p0.sparkSession.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val onDriver = nPairs <= driverMaxPairs &&
+      (resultBytes <= 0 || nPairs <= resultBytes / 32) &&
+      p0.schema.forall(f => Seq(LongType, IntegerType, ShortType, ByteType).contains(f.dataType))
+    val (labels, changed) =
+      if (onDriver) driverLabelRounds(p0, iters) else distributedLabelRounds(p0, nPairs, iters)
+    if (changed > 0)
+      System.err.println(s"[graft] ccLabels: not converged after $iters rounds " +
+        s"($changed labels still changing) — chains deeper than $iters hops remain split")
+    docs.select(col(idCol).cast("long").as("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep_id"))
+  }
+
+  /** [[ccLabels]]' rounds in driver arrays over the cached pairs `p0`,
+    * which it releases. Returns (doc_id, lbl) for every vertex whose
+    * label moved off itself (the final left join gives every other doc
+    * its own id) and the count of labels the last round changed.
+    */
+  private def driverLabelRounds(p0: DataFrame, iters: Int): (DataFrame, Long) = {
+    import java.util.Arrays
+    import scala.collection.mutable.ArrayBuilder
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // ONE job reads the cached pairs into a long array per partition,
+    // endpoints interleaved. A pair with a null end is dropped, as the
+    // distributed join drops it (Row.getLong would read the null as
+    // doc 0 and merge components through it)
+    val parts = p0.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ends = new ArrayBuilder.ofLong
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) { ends += r.getLong(0); ends += r.getLong(1) }
+        }
+        Iterator.single(ends.result())
+      }.collect()
+    p0.unpersist(false)
+    val nEnds = parts.map(_.length).sum
+    // dense vertex indices in id order, so the least index IS the least id
+    val ids = {
+      val sorted = new Array[Long](nEnds)
+      var at = 0
+      parts.foreach { p => System.arraycopy(p, 0, sorted, at, p.length); at += p.length }
+      Arrays.sort(sorted)
+      var n = 0
+      var i = 0
+      while (i < nEnds) {
+        if (i == 0 || sorted(i) != sorted(i - 1)) { sorted(n) = sorted(i); n += 1 }
+        i += 1
+      }
+      Arrays.copyOf(sorted, n)
+    }
+    val nV = ids.length
+    // the pair list again, as vertex indices
+    val ends = new Array[Int](nEnds)
+    var at = 0
+    for (p <- parts.indices) {
+      parts(p).foreach { id => ends(at) = Arrays.binarySearch(ids, id); at += 1 }
+      parts(p) = null
+    }
+    // each lockstep round sweeps the pair list once, reading only the
+    // previous round's labels
+    var lbl = Array.range(0, nV)
+    var next = new Array[Int](nV)
+    var changed = 1L
+    var it = 0
+    while (changed > 0 && it < iters) {
+      System.arraycopy(lbl, 0, next, 0, nV)
+      var e = 0
+      while (e < nEnds) {
+        val a = ends(e)
+        val b = ends(e + 1)
+        if (lbl(b) < next(a)) next(a) = lbl(b)
+        if (lbl(a) < next(b)) next(b) = lbl(a)
+        e += 2
+      }
+      changed = 0L
+      var x = 0
+      while (x < nV) {
+        if (next(x) < lbl(x)) changed += 1
+        x += 1
+      }
+      val t = lbl; lbl = next; next = t
+      it += 1
+    }
+    // (doc_id, lbl) of the moved vertices, interleaved, handed to Spark
+    // in primitive slices that executors turn into rows
+    val moved = new ArrayBuilder.ofLong
+    for (x <- 0 until nV if lbl(x) != x) { moved += ids(x); moved += ids(lbl(x)) }
+    val slices = moved.result().grouped(1 << 21).toSeq
+    val rows = p0.sparkSession.sparkContext.parallelize(slices, math.max(1, slices.size))
+      .flatMap(s => Iterator.range(0, s.length, 2).map(i => Row(s(i), s(i + 1))))
+    val schema = StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("lbl", LongType, nullable = false)))
+    (p0.sparkSession.createDataFrame(rows, schema), changed)
+  }
+
+  /** [[ccLabels]]' rounds as Spark jobs over the cached pairs `p0`
+    * (`nPairs` rows), which it releases. Returns (doc_id, lbl) for
+    * every pair-graph vertex and the count of labels the last round
+    * changed.
+    */
+  private def distributedLabelRounds(p0: DataFrame, nPairs: Long, iters: Int): (DataFrame, Long) = {
+    // the union's legs each embed the cached pair set; localCheckpoint
+    // TRUNCATES the lineage — the label iteration references `labels`
+    // twice per round, so the analyzed plan doubles every round, and
+    // with a large generator plan as the base (the 32-permutation md5
+    // pipeline is ~10× the blocked join's tree) rounds 3–4 spend
+    // seconds in the ANALYZER alone (measured: 46 s → 12 s for the
+    // full cc at sf0.1 from this truncation; data-path cost was never
+    // the problem — the same plan-explosion lesson starCcLabels
+    // documents at 16×/round)
     val edges0 = p0.select(col("id_a").as("u"), col("id_b").as("v"))
       .unionByName(p0.select(col("id_b").as("u"), col("id_a").as("v")))
     // size the checkpoint's partitioning from the MEASURED edge count
@@ -1436,7 +1571,11 @@ object Dedup {
       // driver out of heap rendering the plan). The LAZY local
       // checkpoint cuts the plan at each round's frontier, and its
       // blocks materialize inside the changed-label count below — one
-      // action per round does both
+      // action per round does both. That count runs on the RDD: a
+      // Dataset count() adds a single-partition exchange, which AQE
+      // runs as a job of its own (4 jobs a round instead of 3; hash-
+      // partitioning the frontier on doc_id before the checkpoint
+      // measured 4 as well)
       val next = edges
         .join(labels.select(col("doc_id").as("v"), col("lbl").as("nlbl")), "v")
         .select(col("u").as("doc_id"), col("nlbl"), lit(null).cast("long").as("old"))
@@ -1444,16 +1583,11 @@ object Dedup {
         .groupBy(col("doc_id"))
         .agg(min(col("nlbl")).as("lbl"), max(col("old")).as("old_lbl"))
         .localCheckpoint(eager = false)
-      changed = next.filter(col("lbl") < col("old_lbl")).count()
+      changed = next.filter(col("lbl") < col("old_lbl")).queryExecution.toRdd.count()
       labels = next.select(col("doc_id"), col("lbl"))
       it += 1
     }
-    if (changed > 0)
-      System.err.println(s"[graft] ccLabels: not converged after $iters rounds " +
-        s"($changed labels still changing) — chains deeper than $iters hops remain split")
-    docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("rep_id"))
+    (labels, changed)
   }
 
   /** Connected components by ALTERNATING STAR CONTRACTION — the known

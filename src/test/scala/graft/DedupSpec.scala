@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import graft.operators.Dedup
 import graft.functions.HashFunctions
 
@@ -934,6 +937,18 @@ class DedupSpec extends SparkSpec {
       "exact dup verifies; the size-rejected superset candidate stays out")
   }
 
+  /** The two ways [[Dedup.ccLabels]] runs its rounds: in driver
+    * arrays (what every graph in this spec gets by default) and as
+    * Spark jobs, forced by a negative driver bound.
+    */
+  private val ccPaths: Seq[(String, (DataFrame, DataFrame, Int) => DataFrame)] = Seq(
+    "driver" -> ((d, p, i) => Dedup.ccLabelsWithin(d, p, i, "doc_id", driverMaxPairs = Long.MaxValue)),
+    "distributed" -> ((d, p, i) => Dedup.ccLabelsWithin(d, p, i, "doc_id", driverMaxPairs = -1L)))
+  private val distributedCc = ccPaths(1)._2
+
+  private def repsOf(labels: DataFrame): Map[Long, Long] =
+    labels.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
+
   test("applyPairs drops exactly the higher-id members of dup pairs") {
     val pairs = Dedup.ngramJaccardPairs(docs, thresholdFs = 9000L)
     val survivors = Dedup.applyPairs(docs, pairs).select("doc_id").collect().map(_.getLong(0)).toSet
@@ -948,10 +963,11 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "n_chars")
     // chain 1–2, 2–3 (no direct 1–3 pair) plus isolated 4, 5
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val reps = Dedup.ccLabels(corpus, pairs).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
-    assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L),
-      s"chain must canonicalize to min id transitively, got $reps")
+    for ((path, cc) <- ccPaths) {
+      val reps = repsOf(cc(corpus, pairs, 4))
+      assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L),
+        s"$path: chain must canonicalize to min id transitively, got $reps")
+    }
   }
 
   test("chain depth: ccLabels at iters = 4 splits a 6-hop chain, iters = 50 collapses it") {
@@ -959,16 +975,16 @@ class DedupSpec extends SparkSpec {
     // path graph 1–2–3–4–5–6–7: min-label propagation moves label 1
     // one hop per round, so node i reaches label 1 at round i−1
     val chain = (1L to 6L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val fixed = Dedup.ccLabels(corpus, chain, iters = 4).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
-    // the DOCUMENTED fixed-count limitation: nodes 6 and 7 (5 and 6
-    // hops from the min) have not yet converged to 1 after 4 rounds
-    assert(fixed == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 2L, 7L -> 3L),
-      s"4 fixed rounds must leave the >4-hop tail split, got $fixed")
-    val conv = Dedup.ccLabels(corpus, chain, iters = 50).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
-    assert(conv == (1L to 7L).map(_ -> 1L).toMap,
-      s"fixed-point propagation must collapse the whole chain, got $conv")
+    for ((path, cc) <- ccPaths) {
+      val fixed = repsOf(cc(corpus, chain, 4))
+      // the DOCUMENTED fixed-count limitation: nodes 6 and 7 (5 and 6
+      // hops from the min) have not yet converged to 1 after 4 rounds
+      assert(fixed == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 2L, 7L -> 3L),
+        s"$path: 4 fixed rounds must leave the >4-hop tail split, got $fixed")
+      val conv = repsOf(cc(corpus, chain, 50))
+      assert(conv == (1L to 7L).map(_ -> 1L).toMap,
+        s"$path: fixed-point propagation must collapse the whole chain, got $conv")
+    }
   }
 
   test("star contraction CC: label parity with min-label propagation on chains, clusters, isolates") {
@@ -1009,9 +1025,9 @@ class DedupSpec extends SparkSpec {
   test("ccLabels at iters = 4 agrees with iters = 50 on a graph that converges within 4 rounds") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val corpus = (1L to 5L).map(i => (i, "x", "en", 1L)).toDF("doc_id", "text", "lang", "n_chars")
-    val a = Dedup.ccLabels(corpus, pairs, iters = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val b = Dedup.ccLabels(corpus, pairs, iters = 50).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    assert(a == b, "same labels when the graph converges before the round cap")
+    for ((path, cc) <- ccPaths)
+      assert(repsOf(cc(corpus, pairs, 4)) == repsOf(cc(corpus, pairs, 50)),
+        s"$path: same labels when the graph converges before the round cap")
   }
 
   /** Jobs recorded under `group`. Job events reach the status store
@@ -1031,17 +1047,15 @@ class DedupSpec extends SparkSpec {
 
   test("ccLabels stops at its fixed point instead of running every allowed round") {
     // one edge: round 1 moves doc 2 onto label 1, round 2 changes
-    // nothing — every further round would be wasted. Each round runs
-    // at least one Spark job, so 50 rounds could not fit under 50 jobs.
+    // nothing — every further round would be wasted. Each distributed
+    // round runs at least one Spark job, so 50 rounds could not fit
+    // under 50 jobs.
     val corpus = (1L to 3L).map(i => (i, "x", "en", 1L)).toDF("doc_id", "text", "lang", "n_chars")
     val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
     val sc = spark.sparkContext
     val group = s"cc-fixed-point-${System.nanoTime()}"
     sc.setJobGroup(group, "ccLabels fixed-point spec")
-    val reps = try {
-      Dedup.ccLabels(corpus, pairs, iters = 50).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep_id")).toMap
-    } finally sc.clearJobGroup()
+    val reps = try repsOf(distributedCc(corpus, pairs, 50)) finally sc.clearJobGroup()
     assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 3L), s"got $reps")
     val now = settledJobCount(group)
     assert(now > 0, "the job group recorded no jobs")
@@ -1060,7 +1074,7 @@ class DedupSpec extends SparkSpec {
       val sc = spark.sparkContext
       val group = s"cc-plan-size-$depth-${System.nanoTime()}"
       sc.setJobGroup(group, "ccLabels plan-size spec")
-      val labels = try Dedup.ccLabels(corpus, chain, iters = 50) finally sc.clearJobGroup()
+      val labels = try distributedCc(corpus, chain, 50) finally sc.clearJobGroup()
       val nodes = labels.queryExecution.analyzed.collect { case p => p }.size
       assert(labels.filter(col("rep_id") =!= 1L).isEmpty,
         s"the depth-$depth chain must collapse onto doc 1")
@@ -1076,10 +1090,120 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(nodes12 - nodes4) <= 2,
       s"analyzed plan grew with the rounds: $nodes4 nodes at depth 4, $nodes12 at depth 12")
     // the lazy checkpoint runs no job of its own: each of the 8 extra
-    // rounds costs its changed-label count (two jobs) plus the round
+    // rounds costs its changed-label count (one job) plus the round
     // plan's broadcast and frontier shuffle
     val perRound = (jobs12 - jobs4) / 8.0
-    assert(perRound <= 4.0, s"$perRound jobs per round ($jobs4 at depth 4, $jobs12 at depth 12)")
+    assert(perRound <= 3.0, s"$perRound jobs per round ($jobs4 at depth 4, $jobs12 at depth 12)")
+  }
+
+  /** Union-find labels: every doc under its component's least id. */
+  private def unionFind(docIds: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    docIds.map(d => d -> find(d)).toMap
+  }
+
+  /** A random pair graph on shuffled doc ids 1..n: cliques, stars,
+    * isolated docs and chains up to 8 hops, every pair possibly
+    * reversed or repeated. Returns (n, pairs).
+    */
+  private val ccGraphs: Gen[(Int, Seq[(Long, Long)])] = {
+    val component: Gen[Int => Seq[(Int, Int)]] = Gen.oneOf(
+      Gen.choose(2, 5).map(n => (o: Int) => for (i <- 0 until n; j <- i + 1 until n) yield (o + i, o + j)),
+      Gen.choose(2, 7).map(n => (o: Int) => (1 until n).map(i => (o, o + i))),
+      Gen.const((_: Int) => Seq.empty[(Int, Int)]),
+      Gen.choose(2, 9).map(n => (o: Int) => (0 until n - 1).map(i => (o + i, o + i + 1))))
+    for {
+      comps <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, component))
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      // lay the components out on consecutive slots, each one slot wider
+      // than its largest index, then shuffle the slots onto doc ids
+      var next = 0
+      val local = comps.flatMap { c =>
+        val es = c(next)
+        next = (next +: es.flatMap { case (a, b) => Seq(a, b) }).max + 1
+        es
+      }
+      val ids = rnd.shuffle((1L to next.toLong).toVector)
+      val pairs = local.flatMap { case (a, b) =>
+        val p = if (rnd.nextBoolean()) (ids(a), ids(b)) else (ids(b), ids(a))
+        if (rnd.nextInt(5) == 0) Seq(p, p.swap) else Seq(p)
+      }
+      (next, pairs)
+    }
+  }
+
+  test("ccLabels property: driver and distributed rounds agree at every round cap, union-find at the fixed point") {
+    val prop = Prop.forAllNoShrink(ccGraphs) { case (n, pairs) =>
+      val corpus = (1L to n.toLong).toDF("doc_id")
+      val p = pairs.toDF("id_a", "id_b")
+      val same = Seq(1, 4, 50).forall { iters =>
+        ccPaths.map { case (_, cc) => repsOf(cc(corpus, p, iters)) }.distinct.size == 1
+      }
+      val uf = unionFind(1L to n.toLong, pairs)
+      (Prop(same) :| s"driver and distributed labels differ on $pairs") &&
+        (Prop(repsOf(ccPaths.head._2(corpus, p, 10000)) == uf) :| s"not union-find on $pairs")
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(10)
+      .withInitialSeed(Seed(14L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    // chains deeper than the largest cap: 52 hops at 50 rounds stop short
+    // on both paths alike, and 1,000 hops reach union-find on the driver
+    for (depth <- Seq(52, 1000)) {
+      val corpus = (1L to depth + 1L).toDF("doc_id")
+      val chain = (1L to depth.toLong).map(i => (i + 1, i))
+      val p = chain.toDF("id_a", "id_b")
+      val uf = unionFind(1L to depth + 1L, chain)
+      val driver = repsOf(ccPaths.head._2(corpus, p, 50))
+      assert(driver != uf && driver(51L) == 1L && driver(52L) == 2L, s"depth $depth at 50 rounds")
+      if (depth == 52) assert(repsOf(distributedCc(corpus, p, 50)) == driver)
+      else assert(repsOf(ccPaths.head._2(corpus, p, 2000)) == uf, "the 1,000-hop chain")
+    }
+  }
+
+  test("ccLabels degenerate inputs: empty, repeated, reversed, self and null-ended pairs, same labels on both paths") {
+    val corpus = (0L to 9L).toDF("doc_id")
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    // 1–2–3 through repeated and reversed pairs; 5 paired only with
+    // itself; 6–7 with self-pairs on both; 4 and 8 only beside nulls.
+    // Reading a null as 0 would put 0, 4 and 8 in one component.
+    val messy = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(1L), Some(2L)), (Some(3L), Some(2L)),
+      (Some(5L), Some(5L)), (Some(6L), Some(6L)), (Some(7L), Some(6L)), (Some(7L), Some(7L)),
+      (None, Some(4L)), (Some(8L), None), (None, None)).toDF("id_a", "id_b")
+    val self = (0L to 9L).map(i => i -> i).toMap
+    for ((path, cc) <- ccPaths; iters <- Seq(1, 50)) {
+      assert(repsOf(cc(corpus, empty, iters)) == self, s"$path, empty pairs, $iters rounds")
+      val reps = repsOf(cc(corpus, messy, iters))
+      val want = self ++ Map(2L -> 1L, 3L -> (if (iters == 1) 2L else 1L), 7L -> 6L)
+      assert(reps == want, s"$path, messy pairs, $iters rounds: $reps")
+    }
+  }
+
+  test("ccLabels below the driver bound runs a fixed number of Spark jobs, none per round") {
+    // chains of depth 4 and 12 take 5 and 13 rounds at iters = 50; on
+    // the driver path neither shows in the job count: the pair count
+    // (three jobs) and the collect
+    def jobs(depth: Int): Int = {
+      val corpus = (1L to depth + 1L).toDF("doc_id")
+      val chain = (1L to depth.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val sc = spark.sparkContext
+      val group = s"cc-driver-jobs-$depth-${System.nanoTime()}"
+      sc.setJobGroup(group, "ccLabels driver job-count spec")
+      try Dedup.ccLabels(corpus, chain, iters = 50) finally sc.clearJobGroup()
+      settledJobCount(group)
+    }
+    val (jobs4, jobs12) = (jobs(4), jobs(12))
+    assert(jobs4 == jobs12 && jobs12 <= 4, s"$jobs4 jobs at depth 4, $jobs12 at depth 12")
   }
 
   test("LSH-applied dedup catches the cross-block dup the blocked baseline misses (fixture-pinned)") {
