@@ -361,7 +361,8 @@ object Bpe {
     * auto-broadcast the instance leg, re-creating the one-task
     * pathology on the branch that exists to avoid it (instance-side
     * skew on stopwords is AQE's skew-join case, and the fold volume
-    * stays vocab-sized). The vocab persists across the sizing agg and
+    * stays vocab-sized). The vocab is checkpointed at build time
+    * ([[Dedup.minhashLsh]]'s lifetime contract) for the sizing agg and
     * the join leg, so tokenization runs twice total (vocab pass +
     * fact pass), not three times — at corpus scale CACHING the token
     * stream itself would materialize something larger than the
@@ -385,8 +386,7 @@ object Bpe {
     val toks = Par.spread(docs)
       .select(col("doc_id"),
         posexplode(TextAnalysis.vocabTokens(col("text"), ws)).as(Seq("word_pos", "word")))
-    val vocab = toks.select(col("word")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vocab = toks.select(col("word")).distinct().localCheckpoint()
     val sized = vocab
       .agg(count(lit(1)).as("n"), coalesce(sum(length(col("word"))), lit(0L)).as("chars"))
       .collect()(0)
@@ -402,11 +402,10 @@ object Bpe {
     // exists to avoid (measured 4.6 s of the 5.8 s run). syms is
     // never empty (initialSymbols always appends EndOfWord) nor null
     // (inner join), so outer-explode output is identical.
-    val out = toks.join(vocabEnc, "word")
+    toks.join(vocabEnc, "word")
       .select(col("doc_id"), col("word_pos"), posexplode_outer(col("syms")).as(Seq("piece_pos", "piece")))
       .select(col("doc_id"),
         (col("word_pos").cast("long")).as("word_pos"),
         col("piece_pos").cast("long").as("piece_pos"), col("piece"))
-    ScopedCache.releaseAfterAction(out, Seq(vocab))
   }
 }

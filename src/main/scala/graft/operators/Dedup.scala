@@ -251,6 +251,20 @@ object Dedup {
     * rows — e.g. 8×4 puts the midpoint at 0.59) or accept that
     * far-below-midpoint pairs pass the verify filter yet almost never
     * collide (at this geometry J = 0.5 pairs surface at only ~1.5%).
+    *
+    * Intermediate lifetime (the contract every operator here that
+    * shares an intermediate across its returned frame follows): the
+    * shingle frame feeds both legs of the band self-join and both
+    * sides of the verify join, so the operator materializes it ONCE,
+    * at build time, with an eager `localCheckpoint()` — one job,
+    * `MEMORY_AND_DISK` blocks, lineage truncated, so AQE's concurrent
+    * downstream legs can never race an unmaterialized cache. Every
+    * action on the returned frame (and on frames built over it) reads
+    * those blocks; no CacheManager entry is created, so there is
+    * nothing to release: Spark's ContextCleaner frees the blocks once
+    * the returned frame is unreachable. Local-checkpoint blocks are
+    * not replicated — on a cluster that loses an executor, a job
+    * reading a lost block fails instead of recomputing it.
     */
   def minhashLsh(docs0: DataFrame, perms: Int = 32, bands: Int = 4,
                  shingleN: Int = 1, minJaccardFs: Long = 8400L,
@@ -259,18 +273,13 @@ object Dedup {
     val docs = Par.spread(canonDocs(docs0, canonical, routed, minLossFs))
     val rowsPerBand = perms / bands
     val toks = sort_array(array_distinct(tokens(col("text")))) // sorted per doc (r21): graft_jaccard_fs merge path
-    // persist: this frame feeds BOTH legs of the band self-join and
-    // BOTH sides of the verify join — without it the signature pass
-    // runs 2× and the token pass 2× more (4 scan legs in the plan)
+    // materialized once (see the lifetime note above): without it the
+    // signature pass runs 2× and the token pass 2× more (4 scan legs)
     val shingled = docs.select(
       col("doc_id"), toks.as("toks"),
       minhashSignature(if (shingleN == 1) toks else wordNgrams(tokens(col("text")), shingleN), perms)
         .as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager pin (r21): AQE runs the banding/discovery/verify legs
-    // concurrently, and legs racing an unmaterialized cache re-run
-    // the token+signature subtree once each — see chunkBandedPairs
-    shingled.count()
+      .localCheckpoint()
     // band rows are SLIM (doc_id, band, bucket) — token arrays never
     // ride through the 8-way explode or the bucket shuffle
     val banded = shingled
@@ -282,13 +291,10 @@ object Dedup {
     // exact-Jaccard verify: one set-intersection per UNIQUE candidate
     val ta = shingled.select(col("doc_id").as("id_a"), col("toks").as("toks_a"))
     val tb = shingled.select(col("doc_id").as("id_b"), col("toks").as("toks_b"))
-    val verified = candidates.join(ta, "id_a").join(tb, "id_b")
+    candidates.join(ta, "id_a").join(tb, "id_b")
       .select(col("id_a"), col("id_b"),
         jaccardFs(col("toks_a"), col("toks_b")).as("jac_fs"))
       .filter(col("jac_fs") >= minJaccardFs)
-    // structural release: the shingle persist drops after the caller's
-    // first terminal action consumes it
-    ScopedCache.releaseAfterAction(verified, Seq(shingled))
   }
 
   /** The cross-engine-REPRODUCIBLE twin of [[minhashLsh]]: identical
@@ -322,12 +328,10 @@ object Dedup {
     * (J ≥ 0.9, collision ≈ 89% at the 4×8 default).
     *
     * Rows come back unordered, like every pair generator here. The
-    * verified frame is NOT persisted: a consumer that reads the pairs
-    * more than once (the CC edges union) materializes them once itself,
-    * as [[ccLabels]] does. An operator-side eager pin is not an option:
-    * the scoped-release listener bus is asynchronous, so a pin action
-    * completed just before registration is delivered to the fresh
-    * listener and self-releases the caches it was meant to protect.
+    * shingle frame is checkpointed at build time
+    * ([[minhashLsh]]'s lifetime contract); the verified frame is not:
+    * a consumer that reads the pairs more than once (the CC edges
+    * union) materializes them once itself, as [[ccLabels]] does.
     */
   def minhashMd5PairsUnsorted(docs0: DataFrame, perms: Int = 32, bands: Int = 4,
                               minJaccardFs: Long = 9000L,
@@ -337,18 +341,16 @@ object Dedup {
     val docs = Par.spread(canonDocs(docs0, canonical, routed, minLossFs))
     val rowsPerBand = perms / bands
     val toksCol = sort_array(array_distinct(tokens(col("text")))) // sorted per doc (r21): graft_jaccard_fs merge path
-    // persist: feeds both legs of the band self-join and both verify
-    // sides (the md5 digest pass is the expensive stage here — one
-    // native pass per row via HashFunctions.md5MinhashSig, r21; the
-    // previous form ran 33 interpreted HOF passes per row)
+    // materialized once ([[minhashLsh]]): feeds both legs of the band
+    // self-join and both verify sides (the md5 digest pass is the
+    // expensive stage here — one native pass per row via
+    // HashFunctions.md5MinhashSig, r21; the previous form ran 33
+    // interpreted HOF passes per row)
     val shingled = docs.select(col("doc_id"), toksCol.as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), col("toks"),
         graft.functions.HashFunctions.md5MinhashSig(col("toks"), perms).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager pin (r21): see chunkBandedPairs — stops the concurrent
-    // downstream legs from re-running the md5 digest subtree
-    shingled.count()
+      .localCheckpoint()
     val bandStructs = array((0 until bands).map { b =>
       struct(lit(b).as("band"),
         concat_ws("#", (0 until rowsPerBand).map(r =>
@@ -362,11 +364,10 @@ object Dedup {
     val candidates = candidatePairs(banded, szBoundFs = minJaccardFs)
     val ta = shingled.select(col("doc_id").as("id_a"), col("toks").as("toks_a"))
     val tb = shingled.select(col("doc_id").as("id_b"), col("toks").as("toks_b"))
-    val verified = candidates.join(ta, "id_a").join(tb, "id_b")
+    candidates.join(ta, "id_a").join(tb, "id_b")
       .select(col("id_a"), col("id_b"),
         jaccardFs(col("toks_a"), col("toks_b")).as("jac_fs"))
       .filter(col("jac_fs") >= minJaccardFs)
-    ScopedCache.releaseAfterAction(verified, Seq(shingled))
   }
 
   /** SimHash fingerprints: one 64-bit sketch per doc. [[simhashPairs]]
@@ -409,10 +410,9 @@ object Dedup {
                    routed: Boolean = false, minLossFs: Long = 0L): DataFrame = {
     import graft.functions.HashFunctions.{simhashBandKeys, simhashBandPlan}
     val (chunks, comboSize) = simhashBandPlan(maxHamming)
-    val fp = simhashFingerprints(docs, canonical, routed, minLossFs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager pin (r21): see chunkBandedPairs
-    fp.count()
+    // materialized once ([[minhashLsh]]): feeds the band explode and
+    // both verify sides
+    val fp = simhashFingerprints(docs, canonical, routed, minLossFs).localCheckpoint()
     // slim (doc_id, band, bucket) rows — fingerprints don't ride the
     // band explode; they come back in the verify join below
     val banded = fp
@@ -420,11 +420,10 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
     val fa = fp.select(col("doc_id").as("id_a"), col("simhash").as("sh_a"))
     val fb = fp.select(col("doc_id").as("id_b"), col("simhash").as("sh_b"))
-    val verified = candidatePairs(banded).join(fa, "id_a").join(fb, "id_b")
+    candidatePairs(banded).join(fa, "id_a").join(fb, "id_b")
       .select(col("id_a"), col("id_b"),
         hamming64(col("sh_a"), col("sh_b")).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-    ScopedCache.releaseAfterAction(verified, Seq(fp))
   }
 
   /** The cross-engine-REPRODUCIBLE twin of [[simhashPairs]] — the
@@ -496,16 +495,12 @@ object Dedup {
     */
   private[graft] def chunkBandedPairs(fingerprints: DataFrame, maxHamming: Int): DataFrame = {
     val chunks = SimhashMd5Chunks
-    // persist: the 4-chunk fingerprint frame feeds the band explode
-    // AND both verify sides — the upstream fingerprint pass runs once.
-    // The count() materializes it EAGERLY (r21): AQE submits the
-    // independent downstream legs concurrently, and each leg that
-    // races an unmaterialized cache re-runs the whole fingerprint
-    // subtree (measured: 6 duplicate codec stages under
-    // multimodal_phash) — one bounded job pins the frame first
-    val fp = fingerprints
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fp.count()
+    // materialized once ([[minhashLsh]]): the 4-chunk fingerprint
+    // frame feeds the band explode AND both verify sides, so the
+    // upstream fingerprint pass runs once (a lazy cache raced by AQE's
+    // concurrent legs re-ran it: 6 duplicate codec stages measured
+    // under multimodal_phash)
+    val fp = fingerprints.localCheckpoint()
     val bandStructs = array((0 until chunks).map { c =>
       struct(lit(c).as("band"), col(s"c$c").cast("string").as("bucket"))
     }: _*)
@@ -515,12 +510,11 @@ object Dedup {
       (0 until chunks).map(c => col(s"c$c").as(s"a$c")): _*)
     val fb = fp.select(col("doc_id").as("id_b") +:
       (0 until chunks).map(c => col(s"c$c").as(s"b$c")): _*)
-    val verified = candidatePairs(banded).join(fa, "id_a").join(fb, "id_b")
+    candidatePairs(banded).join(fa, "id_a").join(fb, "id_b")
       .select(col("id_a"), col("id_b"),
         (0 until chunks).map(c => bit_count(col(s"a$c").bitwiseXOR(col(s"b$c"))))
           .reduce(_ + _).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-    ScopedCache.releaseAfterAction(verified, Seq(fp))
   }
 
   /** Blocked word-set Jaccard pairs: candidates share a metadata block
@@ -591,15 +585,12 @@ object Dedup {
     val docs = Par.spread(TextAnalysis.maybeKeyed(docs0, canonical, routed, minLossFs))
     val rowsPerBand = perms / bands
     val grams = sort_array(graft.functions.TextFunctions.distinctWordNgrams(tokens(col("text")), n)) // sorted per doc (r21): graft_jaccard_fs merge path
-    // persist: feeds both legs of the band self-join and both sides
-    // of the verify join (same reason as minhashLsh)
+    // materialized once ([[minhashLsh]]): feeds both legs of the band
+    // self-join and both sides of the verify join
     val shingled = docs.select(col("doc_id"), grams.as("grams"))
       .filter(size(col("grams")) > 0)
       .select(col("doc_id"), col("grams"), minhashSignature(col("grams"), perms).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager pin (r21): see chunkBandedPairs — stops the concurrent
-    // downstream legs from re-running the gram+signature subtree
-    shingled.count()
+      .localCheckpoint()
     val banded = shingled
       .select(col("doc_id"), size(col("grams")).as("sz"),
         explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
@@ -607,11 +598,10 @@ object Dedup {
         col("sz"))
     val ga = shingled.select(col("doc_id").as("id_a"), col("grams").as("grams_a"))
     val gb = shingled.select(col("doc_id").as("id_b"), col("grams").as("grams_b"))
-    val pairs = candidatePairs(banded, szBoundFs = thresholdFs).join(ga, "id_a").join(gb, "id_b")
+    candidatePairs(banded, szBoundFs = thresholdFs).join(ga, "id_a").join(gb, "id_b")
       .select(col("id_a"), col("id_b"),
         jaccardFs(col("grams_a"), col("grams_b")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
-    ScopedCache.releaseAfterAction(pairs, Seq(shingled))
   }
 
   /** Scale-safe embedding-cosine near-dup pairs: the SRP-LSH
@@ -691,18 +681,14 @@ object Dedup {
     val explicitGeometry = Seq(planes, tables, probes).count(_ > 0)
     require(explicitGeometry == 0 || explicitGeometry == 3,
       s"pass all of planes/tables/probes or none (got planes=$planes tables=$tables probes=$probes)")
-    // persist: feeds the bucket explode and both verify-join sides
+    // materialized once ([[minhashLsh]]): feeds the bucket explode and
+    // both verify-join sides
     val e = Par.spread(embeddings).select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
       .withColumn("nrm", l2norm(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the count doubles as the eager cache pin (r21): the explicit-
-    // geometry path previously left `e` unmaterialized, so AQE's
-    // concurrent bucket/verify legs each re-ran the scan+norm subtree
-    // — see chunkBandedPairs
-    val nVecs = math.max(2L, e.count())
+      .localCheckpoint()
     val (pl, tb, pr) =
       if (explicitGeometry == 3) (planes, tables, probes)
-      else Sim.suggestSrpGeometry(nVecs, thresholdFs / 10000.0)
+      else Sim.suggestSrpGeometry(math.max(2L, e.count()), thresholdFs / 10000.0)
     require(pr >= 1 && pr <= pl + 1, s"probes must be in [1, planes+1], got $pr")
     // slim (id, table, bucket) rows — vectors never ride the explode
     val bucketStructs = array((0 until tb).map { t =>
@@ -732,11 +718,10 @@ object Dedup {
       }
     val ea = e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val eb = e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
-    val verified = candidates.join(ea, "id_a").join(eb, "id_b")
+    candidates.join(ea, "id_a").join(eb, "id_b")
       .select(col("id_a"), col("id_b"),
         floor(lit(10000.0) * cosineWithNorms(col("va"), col("vb"), col("na"), col("nb"))).as("cos_fs"))
       .filter(col("cos_fs") >= thresholdFs)
-    ScopedCache.releaseAfterAction(verified, Seq(e))
   }
 
   /** SemDeDup-style SEMANTIC dedup (the public algorithm of Abbas et
@@ -787,7 +772,8 @@ object Dedup {
     val kk = if (k > 0) k else Similarity.suggestIvfGeometry(n)._1
     val cents = KMeans.trainCentroids(pts, kk, trainIters, literalMax,
       sampleBudget = math.max(1024L, 100L * kk), n = n)
-    // persist: feeds the pair generator and both verify-join sides
+    // materialized once ([[minhashLsh]]): feeds the pair generator and
+    // both verify-join sides
     val assigned = (
       if (cents.length <= literalMax) {
         val (cl, _) = KMeans.assignExpr(col("v"), cents)
@@ -796,10 +782,7 @@ object Dedup {
         KMeans.assignBroadcast(pts, "id", "v", cents)
           .select(col("id"), col("v"), col("cluster")))
       .withColumn("nrm", l2norm(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager pin (r21): see chunkBandedPairs — the pair generator and
-    // both verify sides race the cache under AQE otherwise
-    assigned.count()
+      .localCheckpoint()
     val pairs = candidatePairs(assigned.select(col("id").as("doc_id"),
       lit(0).as("band"), col("cluster").as("bucket")))
     val ea = assigned.select(col("id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
@@ -809,13 +792,12 @@ object Dedup {
         cosineWithNorms(col("va"), col("vb"), col("na"), col("nb"))) >= thresholdFs)
       .groupBy(col("id_b")).agg(min(col("id_a")).as("drop_for"))
       .select(col("id_b").as("id"), col("drop_for"))
-    val out = assigned.select(col("id"), col("cluster"))
+    assigned.select(col("id"), col("cluster"))
       .join(dropped, Seq("id"), "left")
       .select(col("id").as("vec_id"), col("cluster"),
         when(col("drop_for").isNull, 1L).otherwise(0L).as("kept"),
         coalesce(col("drop_for"), lit(-1L)).as("drop_for"))
       .orderBy(col("vec_id"))
-    ScopedCache.releaseAfterAction(out, Seq(assigned))
   }
 
   /** The INTEGER-LATTICE gate form of [[semanticDedup]] (r19) — the
@@ -857,7 +839,7 @@ object Dedup {
       .select(col("vec_id").cast("long").as("id"),
         transform(toDoubleArray(col("embedding")),
           x => round(x * lit(1000000.0)).cast("long") + lit(offset)).as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint() // read by the init scan and every training round
     // init: cid 0..k-1 over the k lowest ids (the oracle's `ids` CTE)
     val initRows = pts.orderBy(col("id")).limit(k).collect()
     var cents: Seq[(Long, Array[Long])] = initRows.sortBy(_.getAs[Long]("id"))
@@ -882,11 +864,11 @@ object Dedup {
         cid -> byDim.map(r => r.getAs[Long]("s") / r.getAs[Long]("n")).toArray
       }.sortBy(_._1)
     }
+    // materialized once ([[minhashLsh]]): feeds the pair generator and
+    // both verify sides
     val assigned = pts
       .select(col("id"), col("q"), clusterCol(cents).as("cluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager pin (r21): see chunkBandedPairs
-    assigned.count()
+      .localCheckpoint()
     val pairs = candidatePairs(assigned.select(col("id").as("doc_id"),
       lit(0).as("band"), col("cluster").as("bucket")))
     // fixed-point cosine on the unshifted grid: integer dp/norm sums;
@@ -905,13 +887,12 @@ object Dedup {
         (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double")))) >= thresholdFs)
       .groupBy(col("id_b")).agg(min(col("id_a")).as("drop_for"))
       .select(col("id_b").as("id"), col("drop_for"))
-    val out = assigned.select(col("id"), col("cluster"))
+    assigned.select(col("id"), col("cluster"))
       .join(dropped, Seq("id"), "left")
       .select(col("id").as("vec_id"), col("cluster"),
         when(col("drop_for").isNull, 1L).otherwise(0L).as("kept"),
         coalesce(col("drop_for"), lit(-1L)).as("drop_for"))
       .orderBy(col("vec_id"))
-    ScopedCache.releaseAfterAction(out, Seq(pts, assigned))
   }
 
   /** The lattice gate's cluster argmin as ONE plan node — distances
@@ -961,8 +942,8 @@ object Dedup {
     // the bucket-width aggregate appears in BOTH joins below and is
     // re-evaluated per leg; deliberate — it is a slim partial agg
     // (one row per occupied (band, bucket)) over the caller's
-    // persisted shingle frame, and persisting it here would leak a
-    // cache entry no caller can reach to unpersist
+    // checkpointed shingle frame, cheaper to re-run than to
+    // materialize in a job of its own
     val widths = ref.groupBy(col("band"), col("bucket"))
       .agg(ceil(count(lit(1)) / lit(maxBucket.toDouble)).cast("int").as("s"))
     val salted = ref.join(widths, Seq("band", "bucket"))
@@ -1011,11 +992,12 @@ object Dedup {
     val rowsPerBand = perms / bands
     def shingled(df: DataFrame): DataFrame = {
       val grams = sort_array(graft.functions.TextFunctions.distinctWordNgrams(tokens(col("text")), n)) // sorted per doc (r21): graft_jaccard_fs merge path
-      // persist: each side feeds its banding leg and its verify side
+      // materialized once ([[minhashLsh]]): each side feeds its
+      // banding leg, the widths aggregate, and its verify side
       Par.spread(df).select(col("doc_id"), grams.as("grams"))
         .filter(size(col("grams")) > 0)
         .select(col("doc_id"), col("grams"), minhashSignature(col("grams"), perms).as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     }
     def banded(df: DataFrame): DataFrame = df
       .select(col("doc_id"), size(col("grams")).as("sz"),
@@ -1024,26 +1006,18 @@ object Dedup {
         col("sz"))
     val si = shingled(incoming)
     val sr = shingled(reference)
-    // eager pins (r21): see chunkBandedPairs — each side feeds its
-    // banding leg, the widths aggregate, and its verify side
-    // concurrently under AQE
-    si.count(); sr.count()
     val gi = si.select(col("doc_id").as("id_in"), col("grams").as("grams_in"))
     val gr = sr.select(col("doc_id").as("id_ref"), col("grams").as("grams_ref"))
-    val verified = crossCandidatePairs(banded(si), banded(sr), szBoundFs = thresholdFs)
+    crossCandidatePairs(banded(si), banded(sr), szBoundFs = thresholdFs)
       .join(gi, "id_in").join(gr, "id_ref")
       .select(col("id_in"), col("id_ref"),
         jaccardFs(col("grams_in"), col("grams_ref")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager: materialize the verified pair set (slim rows, volume ∝
-    // true dups) so BOTH corpus-scale shingle caches can be dropped
-    // here instead of leaking into the caller's session; the small
-    // persisted pair frame is itself scoped to the caller's first action
-    verified.count()
-    si.unpersist(false)
-    sr.unpersist(false)
-    ScopedCache.releaseAfterAction(verified, Seq(verified))
+      // materialize the verified pair set (slim rows, volume ∝ true
+      // dups): the returned frame then holds no reference to either
+      // corpus-scale shingle checkpoint, so both are freed once this
+      // method returns
+      .localCheckpoint()
   }
 
   /** Persist a reference corpus's n-gram LSH index for INCREMENTAL
@@ -1312,12 +1286,11 @@ object Dedup {
       .select(col("id_in"), col("id_ref"),
         jaccardFs(col("grams_in"), col("grams_ref")).as("jac_fs"))
       .filter(col("jac_fs") >= thresholdFs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager: drop the incoming-batch cache here (same shape as
-    // ngramLshAgainst's corpus-cache hygiene)
-    verified.count()
+      // materialized so the incoming-batch cache can be dropped here
+      // (the same shape as [[ngramLshAgainst]]'s)
+      .localCheckpoint()
     si.unpersist(false)
-    ScopedCache.releaseAfterAction(verified, Seq(verified))
+    verified
   }
 
   /** Apply near-dup pairs to a corpus: greedy keep-lowest-id policy —
@@ -1418,11 +1391,10 @@ object Dedup {
                                     idCol: String, driverMaxPairs: Long): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     // materialize the PAIR set once (r22): persist + ONE eager count
-    // runs the pair-generation pipeline exactly once (and lets a
-    // scoped-cache generator upstream release its own persists); both
-    // paths read this operator's own cache, which they release. Without
-    // it the distributed path's two-leg edge union ran the generator
-    // once PER LEG (measured: twin 1.3 s stages for one 1.3 s verify)
+    // runs the pair-generation pipeline exactly once; both paths read
+    // this operator's own cache, which they release. Without it the
+    // distributed path's two-leg edge union ran the generator once PER
+    // LEG (measured: twin 1.3 s stages for one 1.3 s verify)
     val p0 = pairs.select(col("id_a"), col("id_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nPairs = p0.count()
@@ -1639,9 +1611,7 @@ object Dedup {
       .filter(col("hi") =!= col("lo"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // count() is a Dataset ACTION (unlike localCheckpoint's internal
-    // RDD job), so a scoped-cache pair generator upstream sees its
-    // plan consumed here and releases its own persists
+    // the count sizes the checkpoint's partitions
     var edgeCount = edges0.count()
     // measured-size checkpoint partitioning — see ccLabels (r22)
     var edges = edges0.coalesce(ccEdgeParts(edgeCount))
@@ -1722,19 +1692,17 @@ object Dedup {
     // groupBy + one hash join — the exact-dedup shuffle, nothing more
     val ids = docs.select(col(idCol).cast("long").as("doc_id"), md5(col(textCol)).as("h"))
     val keep = ids.groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))
-    // persist: feeds the survivor semi-join (which the whole pair/CC
-    // pipeline hangs off) AND the final label-extension join
-    val mapping = ids.join(keep, "h").select(col("doc_id"), col("keep_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialized once ([[minhashLsh]]): feeds the survivor semi-join
+    // (which the whole pair/CC pipeline hangs off) AND the final
+    // label-extension join
+    val mapping = ids.join(keep, "h").select(col("doc_id"), col("keep_id")).localCheckpoint()
     val survivors = docs.join(
       mapping.filter(col("doc_id") === col("keep_id")).select(col("doc_id").as(idCol)),
       Seq(idCol), "left_semi")
     val ccSurvivors = cc(survivors, pairsOf(survivors))
-    ScopedCache.releaseAfterAction(
-      mapping
-        .join(ccSurvivors.select(col("doc_id").as("keep_id"), col("rep_id")), Seq("keep_id"))
-        .select(col("doc_id"), col("rep_id")),
-      Seq(mapping))
+    mapping
+      .join(ccSurvivors.select(col("doc_id").as("keep_id"), col("rep_id")), Seq("keep_id"))
+      .select(col("doc_id"), col("rep_id"))
   }
 
   /** Blocked embedding-cosine near-dup pairs: block key = label

@@ -151,16 +151,16 @@ object IvfPq {
                 k: Int = 5, shortlist: Int = 200,
                 literalMax: Int = Similarity.LiteralCodebookMax): DataFrame = {
     val model = train(embeddings, dim, nlist, m, ks, literalMax = literalMax)
-    val pts = Pq.normalized(embeddings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // checkpointed ([[Dedup.minhashLsh]]'s lifetime contract): feeds
+    // the codes, the re-rank vectors and the queries
+    val pts = Pq.normalized(embeddings).localCheckpoint()
     val rs = residuals(pts, model.cents, literalMax)
     val codes = rs.select(col("vec_id").as("c_id"),
       Pq.codesExpr(col("rv"), model.cb).as("codes"), col("cluster"))
     val vecs = pts.select(col("vec_id").as("c_id"), col("v").as("cv"))
     val q = pts.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val out = rankAgainst(codes, vecs, q, model, nprobe, k, shortlist, literalMax)
-    ScopedCache.releaseAfterAction(out, Seq(pts))
+    rankAgainst(codes, vecs, q, model, nprobe, k, shortlist, literalMax)
   }
 
   /** The IVF-PQ honesty gate: rows>0 ⟺ recall@k of [[ivfPqTopK]] vs

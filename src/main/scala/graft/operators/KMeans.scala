@@ -132,14 +132,14 @@ object KMeans {
     require(iters >= 1, s"lloyd needs at least one round, got iters=$iters")
     val pts = Par.spread(points)
       .select(col(idCol).cast("long").as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .cache()
+      .localCheckpoint()
     var centroids = initCentroids(pts, "id", "v", k)
     var assigned: DataFrame = null
     for (_ <- 1 to iters) {
       assigned = assignBroadcast(pts, "id", "v", centroids)
       centroids = updateCentroids(assigned, "v", dim)
     }
-    (scopedAssignment(assigned, pts), centroids)
+    (assigned, centroids)
   }
 
   private[graft] def dist2(a: Array[Double], b: Array[Double]): Double = {
@@ -277,12 +277,13 @@ object KMeans {
     // interpreted expressions — hand off to the broadcast twin
     // (identical output, spec-pinned)
     if (k > literalMax) return lloydBroadcast(points, idCol, vecCol, k, iters, dim)
-    // cache the projected points: every iteration re-reads them (same
-    // reason MLlib KMeans caches its input — without this each of the
-    // iters+1 jobs rescans the source)
+    // checkpoint the projected points: every iteration, and the
+    // returned assignment, re-reads them (same reason MLlib KMeans
+    // caches its input — without this each of the iters+1 jobs rescans
+    // the source); [[Dedup.minhashLsh]] states the lifetime contract
     val pts = Par.spread(points)
       .select(col(idCol).cast("long").as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .cache()
+      .localCheckpoint()
     var centroids = initCentroids(pts, "id", "v", k)
     var assigned: DataFrame = null
     for (_ <- 1 to iters) {
@@ -290,19 +291,8 @@ object KMeans {
       assigned = pts.select(col("id"), col("v"), cl.as("cluster"), d.as("d"))
       centroids = updateCentroids(assigned, "v", dim)
     }
-    (scopedAssignment(assigned, pts), centroids)
+    (assigned, centroids)
   }
-
-  /** Scope the points cache to the caller's first action on the
-    * RETURNED assignment. The filter(true) marker node (free — the
-    * optimizer prunes it from the physical plan) makes the returned
-    * frame structurally distinct from the loop-internal one, so the
-    * release does NOT fire on the final updateCentroids collect (whose
-    * plan contains the bare assignment) — the cache stays warm for the
-    * caller's read, then drops.
-    */
-  private def scopedAssignment(assigned: DataFrame, pts: DataFrame): DataFrame =
-    ScopedCache.releaseAfterAction(assigned.filter(lit(true)), Seq(pts))
 
   /** Convergence-aware Lloyd's: iterate assign + update until the
     * maximum centroid movement (Euclidean, over surviving clusters)
@@ -326,7 +316,7 @@ object KMeans {
     require(maxIters >= 1, s"lloydConverged needs at least one round, got maxIters=$maxIters")
     val pts = Par.spread(points)
       .select(col(idCol).cast("long").as("id"), toDoubleArray(col(vecCol)).as("v"))
-      .cache()
+      .localCheckpoint()
     var centroids = initCentroids(pts, "id", "v", k)
     var assigned: DataFrame = null
     var it = 0
@@ -339,7 +329,7 @@ object KMeans {
       centroids = next
       it += 1
     }
-    (scopedAssignment(assigned, pts), centroids, it)
+    (assigned, centroids, it)
   }
 
   /** Max Euclidean movement between two centroid sets, matched by cid;
@@ -362,7 +352,7 @@ object KMeans {
     val pts = Par.spread(points)
       .select(col(idCol).cast("long").as("id"),
         col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-      .cache()
+      .localCheckpoint()
     var centroids = initCentroids2d(pts, "id", "x", "y", k)
     var assigned: DataFrame = null
     for (_ <- 1 to iters) {
@@ -373,7 +363,7 @@ object KMeans {
         .orderBy(col("cluster"))
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
     }
-    (scopedAssignment(assigned, pts), centroids)
+    (assigned, centroids)
   }
 
   /** Per-cluster metrics of an assignment: size, WCSS, mean squared
@@ -388,10 +378,9 @@ object KMeans {
 
   /** Train `iters` Lloyd rounds from the deterministic init and
     * return only the final centroids — the bounded-driver-state core
-    * of [[lloyd]] without the returned-assignment cache scoping
-    * (callers here want just the k×dim literal, not the assignment,
-    * so the input cache is released eagerly when training ends
-    * instead of riding a listener). Past `literalMax` centroids the
+    * of [[lloyd]] without the returned assignment (callers here want
+    * just the k×dim literal, so the input cache is released as soon
+    * as training ends). Past `literalMax` centroids the
     * assign pass switches to the broadcast-codebook loop
     * ([[assignBroadcast]], bit-parity spec-pinned), same as the IVF
     * build path.

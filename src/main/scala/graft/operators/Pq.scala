@@ -255,15 +255,15 @@ object Pq {
     */
   def adcTopK(embeddings: DataFrame, cb: Codebooks, nQueries: Int = 10,
               k: Int = 5): DataFrame = {
-    val pts = normalized(embeddings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = adcRanked(pts, cb, nQueries, k)
+    // checkpointed ([[Dedup.minhashLsh]]'s lifetime contract): feeds
+    // the codes and the queries
+    val pts = normalized(embeddings).localCheckpoint()
+    adcRanked(pts, cb, nQueries, k)
       .select(col("q_id"), col("rnk"), col("c_id"), col("adc_fs"))
       .orderBy(col("q_id"), col("rnk"))
-    ScopedCache.releaseAfterAction(out, Seq(pts))
   }
 
-  /** The ADC candidate ranking over a NORMALIZED persisted frame:
+  /** The ADC candidate ranking over a NORMALIZED checkpointed frame:
     * (q_id, c_id, adc_fs, rnk ≤ limit), unsorted.
     */
   private def adcRanked(pts: DataFrame, cb: Codebooks, nQueries: Int,
@@ -293,8 +293,9 @@ object Pq {
   def adcTopKReranked(embeddings: DataFrame, cb: Codebooks, nQueries: Int = 10,
                       k: Int = 5, shortlist: Int = 100): DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must cover k=$k")
-    val pts = normalized(embeddings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // checkpointed ([[Dedup.minhashLsh]]'s lifetime contract): feeds
+    // the ADC scan, the re-rank vectors and the queries
+    val pts = normalized(embeddings).localCheckpoint()
     val cand = adcRanked(pts, cb, nQueries, shortlist).select(col("q_id"), col("c_id"))
     val cv = pts.select(col("vec_id").as("c_id"), col("v").as("cv"))
     val qv = pts.filter(col("vec_id") < nQueries)
@@ -302,14 +303,13 @@ object Pq {
     val byQ = Window.partitionBy(col("q_id")).orderBy(col("cos_fs").desc, col("c_id"))
     // the candidate set is bounded (nQueries · shortlist): broadcast
     // it so the corpus-sized vector frame never shuffles
-    val out = cv.join(broadcast(cand), "c_id").join(broadcast(qv), "q_id")
+    cv.join(broadcast(cand), "c_id").join(broadcast(qv), "q_id")
       .select(col("q_id"), col("c_id"),
         floor(lit(1000000.0) * dot(col("qv"), col("cv"))).as("cos_fs"))
       .withColumn("rnk", row_number().over(byQ).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col("c_id"), col("cos_fs"))
       .orderBy(col("q_id"), col("rnk"))
-    ScopedCache.releaseAfterAction(out, Seq(pts))
   }
 
   /** The PQ measurement gate — recall@k of the PRODUCTION two-stage

@@ -258,11 +258,11 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, dim: Int = 64, nlist: Int = 16, nprobe: Int = 4,
               nQueries: Int = 10, k: Int = 5): DataFrame = {
     import graft.operators.KMeans
-    // persisted: feeds the init scan, the training sample, the lists
-    // leg, and the query leg
+    // checkpointed ([[Dedup.minhashLsh]]'s lifetime contract): feeds
+    // the init scan, the training sample, the lists leg, and the query leg
     val pts = embeddings.select(col("vec_id").cast("long").as("vec_id"),
       toDoubleArray(col("embedding")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val cents = KMeans.lloydSampled(pts, "vec_id", "v", nlist, iters = 2, dim = dim)
     val (finalCl, _) = KMeans.assignExpr(col("v"), cents)
     val lists = pts.select(col("vec_id").as("c_id"), col("v").as("cv"), finalCl.as("cluster"))
@@ -278,7 +278,7 @@ object Similarity {
       .withColumn("qn", l2norm(col("qv")))
       .withColumn("probe_cluster", explode(probed))
     val byQ = Window.partitionBy(col("q_id")).orderBy(col("cos_fs").desc, col("c_id"))
-    val out = lists.join(broadcast(q),
+    lists.join(broadcast(q),
         col("cluster") === col("probe_cluster") && col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("c_id"),
         cosFs(cosineWithNorms(col("qv"), col("cv"), col("qn"), col("cn"))).as("cos_fs"))
@@ -286,7 +286,6 @@ object Similarity {
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col("c_id"), col("cos_fs"))
       .orderBy(col("q_id"), col("rnk"))
-    ScopedCache.releaseAfterAction(out, Seq(pts))
   }
 
   /** Persist an IVF index as a metastore layout — the vector-path
@@ -741,17 +740,16 @@ object Similarity {
     * bucket) and are DISTINCT'd before any vector math — per-query
     * cost ∝ distinct collision volume, never |corpus|×|queries|.
     *
-    * Cache ownership: the normalized-corpus persist feeds the bucket
-    * explode AND both verify-join sides of the returned (lazy) frame —
-    * scoped to release after the caller's first terminal action
-    * ([[ScopedCache]]).
+    * The normalized corpus feeds the bucket explode AND both
+    * verify-join sides, so it is checkpointed at build time
+    * ([[Dedup.minhashLsh]]'s lifetime contract).
     */
   def lshTopK(embeddings: DataFrame, dim: Int = 64, planes: Int = 6, tables: Int = 4,
               nQueries: Int = 10, k: Int = 5, probes: Int = 1): DataFrame = {
     require(probes >= 1 && probes <= planes + 1, s"probes must be in [1, planes+1], got $probes")
     val e = Par.spread(embeddings).select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
       .withColumn("nrm", l2norm(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val bucketStructs = array((0 until tables).map { t =>
       struct(lit(t).as("tbl"), srpBucketSeeded(col("v"), dim, planes, s"t$t#").as("bucket"))
     }: _*)
@@ -773,7 +771,7 @@ object Similarity {
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
     val byQ = Window.partitionBy(col("q_id")).orderBy(col("cos_fs").desc, col("c_id"))
-    val out = cand
+    cand
       .join(e.select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn")), "c_id")
       .join(broadcast(q), "q_id")
       .select(col("q_id"), col("c_id"),
@@ -782,7 +780,6 @@ object Similarity {
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col("c_id"), col("cos_fs"))
       .orderBy(col("q_id"), col("rnk"))
-    ScopedCache.releaseAfterAction(out, Seq(e))
   }
 
   /** Recall gate for the approximate ANN paths: recall@k of

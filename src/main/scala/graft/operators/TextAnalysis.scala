@@ -458,20 +458,19 @@ object TextAnalysis {
   def lmScore(docs: DataFrame, reference: DataFrame): DataFrame = {
     val cnt = reference.select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint() // read by the N/V sizing and the scoring join ([[Dedup.minhashLsh]]'s lifetime contract)
     val tot = cnt.agg(sum(col("c")), count(lit(1))).head()
     val (n, v) = (tot.getLong(0), tot.getLong(1))
     require(n > 0, "lmScore needs a non-empty reference corpus")
     val fs = floor(lit(1000000.0) *
       log(lit((n + v).toDouble) / (coalesce(col("c"), lit(0L)) + lit(1L)).cast("double")))
       .cast("long")
-    val out = docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .join(broadcast(cnt), Seq("token"), "left")
       .select(col("doc_id"), fs.as("fs"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tok"), expr("sum(fs) div count(1)").as("lm_cost_fs"))
       .orderBy(col("doc_id"))
-    ScopedCache.releaseAfterAction(out, Seq(cnt))
   }
 
   /** Top-k characteristic terms per document by an integer tf-idf
@@ -484,31 +483,25 @@ object TextAnalysis {
     * Plan shape: one explode + (doc_id, token) partial-agg for tf;
     * doc_freq derives from the tf frame itself (tf rows are already
     * distinct per doc, so count(*) per token IS the doc freq — one
-    * explode total); the tf frame is persisted because it feeds both
-    * the df aggregate and the scored join. The final per-doc top-k is
-    * a WindowGroupLimit — at 100 TB the shuffle ceiling is
+    * explode total); the tf frame feeds both the df aggregate and the
+    * scored join, so it is checkpointed at build time
+    * ([[Dedup.minhashLsh]]'s lifetime contract). The final per-doc
+    * top-k is a WindowGroupLimit — at 100 TB the shuffle ceiling is
     * |corpus vocab pairs|, all partial-aggregated.
-    *
-    * Cache ownership: the tf persist feeds both the document-frequency
-    * aggregate and the join probe side of the returned frame (the
-    * operator cannot unpersist without re-running the explode) — it is
-    * scoped to release after the caller's first terminal action
-    * ([[ScopedCache]]).
     */
   def tfidfTopK(docs: DataFrame, k: Int = 3, ws: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tf = docs.select(col("doc_id"), explode(vocabTokens(col("text"), ws)).as("token"))
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("score").desc, col("token"))
-    val out = tf.join(dfreq, "token")
+    tf.join(dfreq, "token")
       .withColumn("score", expr("tf * 1000000 div df"))
       .withColumn("rnk", row_number().over(byDoc).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("doc_id"), col("rnk"), col("token"), col("score"))
       .orderBy(col("doc_id"), col("rnk"))
-    ScopedCache.releaseAfterAction(out, Seq(tf))
   }
 
   /** Tokenizer encoding: each document becomes (doc_id, pos, token_id)
@@ -656,10 +649,10 @@ object TextAnalysis {
     // per-group offsets both consume it, and Spark's exchange reuse
     // does not unify the two branches (measured on the composed
     // training layout: the whole curate/LSH/chunk upstream planned
-    // TWICE — 28 scans, 66 exchanges, 0 reused). Persist the slim
-    // branch point (no text — token counts + keys only) for the one
-    // action that consumes the result; ScopedCache releases it after.
-    val cached = units.persist()
+    // TWICE — 28 scans, 66 exchanges, 0 reused). Checkpoint the slim
+    // branch point (no text — token counts + keys only) at build time,
+    // per [[Dedup.minhashLsh]]'s lifetime contract.
+    val cached = units.localCheckpoint()
     // grp_total rides the SAME partitioning as the running sum: one
     // Exchange, two stacked Window operators
     val wg = Window.partitionBy(partAll: _*)
@@ -675,11 +668,10 @@ object TextAnalysis {
       .withColumn("grp_offset", coalesce(sum(col("grp_total")).over(chain), lit(0L)))
       .select(partAll :+ col("grp_offset"): _*)
     val cum = col("grp_offset") + col("cum_local")
-    val out = local.join(offsets, outerCols :+ groupCol)
+    local.join(offsets, outerCols :+ groupCol)
       .withColumn("bin_id", floor(cum / lit(binTokens.toDouble)).cast("long"))
       .withColumn("bin_offset", cum % binTokens)
       .drop("cum_local", "grp_total", "grp_offset")
-    ScopedCache.releaseAfterAction(out, Seq(cached))
   }
 
   /** Repeated-passage (boilerplate) removal accounting — the
@@ -705,7 +697,7 @@ object TextAnalysis {
     * boilerplate set when small, as in practice) → one doc_id
     * groupBy. After the fan-out no shuffled row carries text — only
     * (hash, ids, counts). The slim chunk frame is the same diamond
-    * as [[packByWindow]]'s and is persisted the same scoped way.
+    * as [[packByWindow]]'s and is checkpointed the same way.
     */
   def passageDedup(docs: DataFrame, chunkTokens: Int = 32, strideTokens: Int = 24,
                    minDocs: Int = 2, canonical: Boolean = false,
@@ -721,12 +713,12 @@ object TextAnalysis {
     // pure-Latin punctuation-only doc still canonicalizes to ""
     val cdocs = if (canonical || routed) base.filter(length(col("text")) > 0) else base
     val chunks = chunkPieces(cdocs, chunkTokens, strideTokens)
-      .select(col("doc_id"), col("n_chunk_tokens"), col("chunk_md5")).persist()
+      .select(col("doc_id"), col("n_chunk_tokens"), col("chunk_md5")).localCheckpoint()
     val boiler = chunks.groupBy(col("chunk_md5"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
       .select(col("chunk_md5"), lit(true).as("is_boiler"))
-    val out = chunks.join(boiler, Seq("chunk_md5"), "left")
+    chunks.join(boiler, Seq("chunk_md5"), "left")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_chunks"),
@@ -734,7 +726,6 @@ object TextAnalysis {
         coalesce(sum(when(col("is_boiler").isNull, col("n_chunk_tokens"))), lit(0L))
           .as("kept_tokens"))
       .orderBy(col("doc_id"))
-    ScopedCache.releaseAfterAction(out, Seq(chunks))
   }
 
   /** Exact-substring (span-level) dedup accounting — the scale-safe
@@ -765,7 +756,7 @@ object TextAnalysis {
     * doc_id window whose (doc_id, region) groupBy rides the SAME
     * exchange; the final left join is doc-count-sized on both sides.
     * The gram frame is a diamond (shared-set groupBy + join back) —
-    * persisted slim and scope-released like [[passageDedup]]'s.
+    * checkpointed slim like [[passageDedup]]'s.
     */
   def spanDedup(docs: DataFrame, n: Int = 8, minDocs: Int = 2,
                 minSpanTokens: Int = 16, canonical: Boolean = false,
@@ -814,13 +805,6 @@ object TextAnalysis {
     else maybeCanon(docs, canonical)
   }
 
-  /** The qualifying repeated-span coverage regions both span keys
-    * derive from: (doc_id, span_start, span_end) token intervals,
-    * DISJOINT and maximal per the [[spanDedup]] merge rule. The gram
-    * frame is the diamond (shared-set groupBy + join back) — persisted
-    * slim here and released after the first action on any frame built
-    * over the regions.
-    */
   /** The positioned word-n-gram frame every span operator fans out
     * to: (doc_id, pos, gram_md5) — map-side (explode of an index
     * sequence), and after it no shuffled row carries text, only the
@@ -874,17 +858,22 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
+  /** The qualifying repeated-span coverage regions both span keys
+    * derive from: (doc_id, span_start, span_end) token intervals,
+    * DISJOINT and maximal per the [[spanDedup]] merge rule. The gram
+    * frame is the diamond (shared-set groupBy + join back) —
+    * checkpointed slim here ([[Dedup.minhashLsh]]'s lifetime contract).
+    */
   private[operators] def spanRegions(docs: DataFrame, n: Int, minDocs: Int,
                                      minSpanTokens: Int): DataFrame = {
     require(n >= 2 && minDocs >= 2 && minSpanTokens >= n,
       s"need n ≥ 2, minDocs ≥ 2, minSpanTokens ≥ n; got n=$n minDocs=$minDocs minSpan=$minSpanTokens")
-    val grams = gramFrame(docs, n).persist()
+    val grams = gramFrame(docs, n).localCheckpoint()
     val shared = grams.groupBy(col("gram_md5"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
       .select(col("gram_md5"))
-    val regions = coalesceRegions(grams.join(shared, Seq("gram_md5")), n, minSpanTokens)
-    ScopedCache.releaseAfterAction(regions, Seq(grams))
+    coalesceRegions(grams.join(shared, Seq("gram_md5")), n, minSpanTokens)
   }
 
   /** The span REWRITE — what a curation pipeline actually ships after

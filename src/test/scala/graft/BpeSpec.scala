@@ -96,15 +96,18 @@ class BpeSpec extends SparkSpec {
     val fast = Bpe.encode(docs, merges).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("word_pos"),
         r.getAs[Long]("piece_pos"), r.getAs[String]("piece"))).sorted.toSeq
-    val fallback = Bpe.encode(docs, merges, maxBroadcastVocabBytes = 0L)
-    val plan = fallback.queryExecution.executedPlan.toString
+    // every plan the encode runs, built and acted on (the vocab is
+    // checkpointed at build time, in a job of its own)
+    val (slow, ran) = ActionPlans.record(spark) {
+      Bpe.encode(docs, merges, maxBroadcastVocabBytes = 0L).collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("word_pos"),
+          r.getAs[Long]("piece_pos"), r.getAs[String]("piece"))).sorted.toSeq
+    }
+    val plan = ran.map(_.plan).mkString("\n")
     assert(plan.contains("ShuffledHashJoin"),
       s"the over-budget branch must pin a shuffle-hash join:\n$plan")
     assert(!plan.contains("BroadcastHashJoin"),
       s"the over-budget branch must not auto-broadcast either leg:\n$plan")
-    val slow = fallback.collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("word_pos"),
-        r.getAs[Long]("piece_pos"), r.getAs[String]("piece"))).sorted.toSeq
     assert(slow == fast, "join strategy must not change the encoding")
   }
 

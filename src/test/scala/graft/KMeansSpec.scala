@@ -141,23 +141,6 @@ class KMeansSpec extends SparkSpec {
       "same rounds ⇒ bit-identical centroids between the fixed and converged variants")
   }
 
-  test("canary: the filter(true) scope marker survives canonicalization (sameResult-distinct)") {
-    import org.apache.spark.sql.functions.lit
-    // lloyd's cache scoping relies on filter(lit(true)) making the
-    // RETURNED frame sameResult-distinct from the loop-internal bare
-    // assignment, so internal collect()s don't release the pts cache
-    // early. If a future Spark canonicalization rule prunes
-    // trivially-true filters from the ANALYZED plan, this canary
-    // fails before the perf cliff does (the physical plan may — and
-    // should — prune the filter; sameResult works on canonicalized
-    // logical plans).
-    val df = toyPoints.toDF("id", "x", "y")
-    val marked = df.filter(lit(true))
-    assert(!marked.queryExecution.analyzed.sameResult(df.queryExecution.analyzed),
-      "filter(lit(true)) no longer distinguishes plans under sameResult — " +
-        "replace KMeans.scopedAssignment's marker (e.g. a fresh-alias Project)")
-  }
-
   test("outliers: trained centroids find the planted anomaly that seed centroids miss") {
     // Both seed points (the two LOWEST ids) sit in the origin blob,
     // so the SEED partition splits the origin blob between them and

@@ -9,6 +9,11 @@ package graft
   *    non-equi predicate — cost O(queries × corpus), the declared
   *    exact baseline the approximate paths are gated against.
   *
+  * The guard reads the returned plan AND the plan of every
+  * `localCheckpoint` job the build runs ([[ActionPlans]]): an
+  * intermediate an operator checkpoints at build time is one
+  * `LogicalRDD` leaf in the returned plan.
+  *
   * (`sim_recall` used to be allowlisted for two broadcast cross joins
   * of 1-row aggregate frames; since it evaluates its gate eagerly for
   * cache hygiene, the returned frame is a LocalRelation and those
@@ -31,7 +36,10 @@ class PlanGuardSpec extends SparkSpec {
 
   test("no unbounded cartesian or nested-loop join anywhere in the query suite") {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+      // the returned plan plus the checkpoint jobs the build ran
+      val (df, built) = ActionPlans.record(spark)(fn(spark, sfDir))
+      val plan = (df.queryExecution.executedPlan.toString +:
+        built.filter(_.funcName == "localCheckpoint").map(_.plan)).mkString("\n")
       val hasCross = plan.contains("CartesianProduct") || plan.contains("BroadcastNestedLoop")
       if (boundedByDesign(name))
         assert(hasCross, s"$name is allowlisted for a bounded cross join but has none — " +
@@ -79,18 +87,22 @@ class PlanGuardSpec extends SparkSpec {
       "Pipeline.prepareTrainingPieces" -> (() => Pipeline.prepareTrainingPieces(docs)),
       "Snapshot.churn" -> (() => Snapshot.churn(even, docs)))
     try {
+      // every plan the entry runs while built and written, so a sort
+      // inside a subtree the operator checkpointed at build time (a
+      // LogicalRDD leaf in the returned plan) is still seen
       val sorted = entries.filter { case (_, build) =>
-        build().queryExecution.optimizedPlan.exists {
+        val (df, ran) = ActionPlans.record(spark) {
+          val df = build()
+          df.write.format("noop").mode("overwrite").save()
+          df
+        }
+        (df.queryExecution +: ran.map(_.qe)).exists(_.optimizedPlan.exists {
           case s: Sort => s.global
           case _ => false
-        }
+        })
       }.map(_._1)
       assert(sorted.isEmpty, s"entry points planning a global sort: ${sorted.mkString(", ")}")
-    } finally {
-      // built-but-never-acted results keep their operator caches
-      spark.sharedState.cacheManager.clearCache()
-      Seq("bands", "grams", "meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS plan_guard_lsh_$t"))
-    }
+    } finally Seq("bands", "grams", "meta").foreach(t => spark.sql(s"DROP TABLE IF EXISTS plan_guard_lsh_$t"))
   }
 
   test("oracle-ordered pair, label, chunk and churn keys sort inside one partition, not globally") {

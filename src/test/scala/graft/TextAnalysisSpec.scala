@@ -557,10 +557,16 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("span rewrite stays inside the region generator's shuffle budget") {
     import org.apache.spark.sql.functions.col
-    val df = TextAnalysis.spanDedupApply(Tables.documents(spark, sfDir))
+    // every plan the rewrite runs, built and acted on: the gram frame
+    // is checkpointed at build time, so its job is a plan of its own
+    val (df, ran) = ActionPlans.record(spark) {
+      val df = TextAnalysis.spanDedupApply(Tables.documents(spark, sfDir))
+      df.write.format("noop").mode("overwrite").save()
+      df
+    }
     assert(df.filter(col("n_kept") < col("n_tokens")).count() > 0,
       "fixture corpus must exercise real span drops")
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val plan = ran.map(_.plan).mkString("\n")
     val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
     // gram groupBy + gram join-back + the doc window; the region
     // array-join and both (doc, region) aggregations must RIDE those
